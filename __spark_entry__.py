@@ -53,10 +53,10 @@ def _tune(spark: SparkSession) -> None:
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    import os
+    from amadeus_spark.tables import read_parquet, table_path
 
     _tune(spark)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -96,11 +96,9 @@ def _local_rows_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
     IEEE correctly-rounded parsing), strings escape backslash+quote,
     NULLs cast to the column type. Only the declared output types
     (BIGINT/DOUBLE/STRING/DATE/BOOLEAN) are rendered; anything else
-    falls back to createDataFrame unchanged."""
-    fields = []
-    for part in ddl.split(","):
-        name, typ = part.strip().rsplit(" ", 1)
-        fields.append((name.strip(), typ.strip().upper()))
+    falls back to createDataFrame unchanged — including a DDL whose
+    types carry commas (``decimal(18,6)``, ``map<string,bigint>``), which
+    the comma split below cannot parse."""
     if not rows:
         return spark.createDataFrame([], ddl)
 
@@ -121,6 +119,10 @@ def _local_rows_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
         raise TypeError(typ)
 
     try:
+        fields = []
+        for part in ddl.split(","):
+            name, typ = part.strip().rsplit(" ", 1)
+            fields.append((name.strip(), typ.strip().upper()))
         tuples = [
             "(" + ", ".join(
                 lit(v, fields[i][1]) for i, v in enumerate(tuple(r))

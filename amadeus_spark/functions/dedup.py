@@ -142,7 +142,93 @@ def band_hashes_frag(sig_col: str = "sig") -> tuple[list[str], list[str]]:
     return spark, duck
 
 
+def band_explode_sql(sig_col: str = "sig") -> str:
+    """Spark select item: one row per LSH band, ``AS (band_id, bh)``."""
+    return f"posexplode(array({', '.join(band_hashes_frag(sig_col)[0])})) AS (band_id, bh)"
+
+
 # ---- Spark-side operators -------------------------------------------------
+# Builders hand Catalyst a few SQL strings (one per stage) rather than
+# hundreds of Column objects: every Column call is a py4j round trip and
+# every DataFrame step re-analyzes the plan, so a 64-aggregate list
+# comprehension cost ~1,100 JVM calls per build. Same plans either way.
+
+
+def bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    item: str,
+    out: tuple[str, str],
+    payload: tuple[str, str, str] | None = None,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Distinct candidate pairs among rows that share a bucket (equal
+    ``keys``): ``out[0] < out[1]`` over the ``item`` column, plus, when
+    ``payload = (col, out_a, out_b)``, each side's ``col`` in pair order.
+
+    Bucket-group pair generation instead of a rows⋈rows self-join: the
+    join's two inputs each recomputed the bucketing subtree (one side
+    under its BroadcastExchange — no exchange reuse) and a bucket cap
+    paid a Window pass on top. ONE groupBy computes the buckets once,
+    the cap becomes a size() filter on the grouped list (no Window
+    stage), and the per-bucket pairs explode out of the list — same
+    O(d²)-per-bucket output, one Exchange in place of
+    join+window+broadcast (guide §2.4). Memory note: a bucket's list
+    materializes in the agg buffer, the same rows the old window
+    buffered per partition; ``max_bucket_size`` is the at-scale guard,
+    applied before any pair is emitted (buckets above it are dropped
+    whole, as the oracles' COUNT(*) OVER cap does).
+
+    Two rows of one id can share a bucket — a duplicate id in the input,
+    or (fuzzy) a cross-variant hash collision — so the pair guard
+    ``x != y`` keeps (d, d) out, exactly like the oracles' ``a < b``."""
+    size_ok = "size(ds) >= 2"
+    if max_bucket_size is not None:
+        size_ok += f" AND size(ds) <= {max_bucket_size}"
+    if payload is None:
+        ds, x, y = f"collect_list({item})", "__x", "__y"
+        pair = []
+    else:
+        col, out_a, out_b = payload
+        ds, x, y = f"collect_list(struct({item}, {col}))", f"__x.{item}", f"__y.{item}"
+        pair = [
+            f"CASE WHEN {x} < {y} THEN __x.{col} ELSE __y.{col} END AS {out_a}",
+            f"CASE WHEN {x} < {y} THEN __y.{col} ELSE __x.{col} END AS {out_b}",
+        ]
+    return (
+        rows.groupBy(*keys)
+        .agg(F.expr(f"{ds} AS ds"))
+        .where(size_ok)
+        .selectExpr("posexplode(ds) AS (__i, __x)", "ds")
+        .selectExpr("__x", "explode(slice(ds, __i + 2, size(ds))) AS __y")
+        .where(f"{x} != {y}")
+        .selectExpr(f"least({x}, {y}) AS {out[0]}", f"greatest({x}, {y}) AS {out[1]}", *pair)
+        .distinct()
+    )
+
+
+def bands_cte_duck(
+    frags: list[str], item: str, bucket: str, src: str, max_bucket_size: int | None
+) -> str:
+    """DuckDB twin of banding + :func:`bucket_pairs`' cap: the ``bands``
+    CTE (``item``, band_id, ``bucket``), one UNION ALL leg per band
+    fragment over ``src``; buckets of more than ``max_bucket_size`` rows
+    are dropped whole. The oracles pair it with ``a.item < b.item``."""
+    legs = "\n  UNION ALL ".join(
+        f"SELECT {item}, {j} AS band_id, {frag} AS {bucket} FROM {src}"
+        for j, frag in enumerate(frags)
+    )
+    if max_bucket_size is None:
+        return f"bands AS (\n  {legs}\n)"
+    cols = f"{item}, band_id, {bucket}"
+    return f"""raw_bands AS (
+  {legs}
+), bands AS (
+  SELECT {cols} FROM (
+    SELECT {cols}, COUNT(*) OVER (PARTITION BY band_id, {bucket}) AS bsz
+    FROM raw_bands
+  ) WHERE bsz <= {max_bucket_size}
+)"""
 
 
 def with_minhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -158,32 +244,27 @@ def with_minhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     one 64-int row per doc."""
     stok, _ = toks_frag(text_col)
     hs, _ = hash32_frag("s", "s")
-    ex = df.withColumn("__toks", F.expr(stok)).select(
-        F.col(id_col).alias("__id"),
-        F.explode(F.expr(shingles_from_tokens_frag("__toks"))).alias("s"),
+    sig = ", ".join(f"min((h * {a} + {b}) % {MERSENNE_P})" for a, b in zip(HASH_A, HASH_B))
+    hashed = (
+        df.withColumn("__toks", F.expr(stok))
+        .selectExpr(f"`{id_col}` AS __id", f"explode({shingles_from_tokens_frag('__toks')}) AS s")
+        .selectExpr("__id", f"{hs} AS h")
     )
-    hashed = ex.withColumn("h", F.expr(hs))
-    aggs = [
-        F.min(F.expr(f"(h * {a} + {b}) % {MERSENNE_P}")).alias(f"sig_{i}")
-        for i, (a, b) in enumerate(zip(HASH_A, HASH_B))
-    ]
     # carry HASHES for verification, not shingle strings: the shuffle
     # payload per doc drops ~2.5× and Jaccard over distinct hash sets
     # equals Jaccard over shingle sets (collisions ~n²/2³³, and the
     # oracle hashes identically so even those agree). array_distinct:
     # rare cross-shingle collisions would otherwise leave duplicates.
-    grouped = hashed.groupBy("__id").agg(
-        *aggs, F.array_distinct(F.collect_list("h")).alias("sh")
-    )
-    sig_cols = ", ".join(f"sig_{i}" for i in range(NUM_HASHES))
     # persist: the signature frame feeds both sides of the LSH band
     # self-join AND the verification joins (4 consumers) — without it
     # Spark recomputes the whole shingle+hash subtree per consumer.
     # State is one row per doc (64 ints + shingles); at 100 TB use
     # DISK_ONLY or write it out as an intermediate table.
-    return tracked_persist(grouped.select(
-        F.col("__id").alias(id_col), "sh", F.expr(f"array({sig_cols})").alias("sig")
-    ))
+    return tracked_persist(
+        hashed.groupBy(F.col("__id").alias(id_col)).agg(
+            F.expr("array_distinct(collect_list(h)) AS sh"), F.expr(f"array({sig}) AS sig")
+        )
+    )
 
 
 def minhash_lsh_pairs(
@@ -197,72 +278,38 @@ def minhash_lsh_pairs(
     Jaccard. Output: (doc_a, doc_b, jaccard), doc_a < doc_b.
 
     Physical plan at scale: project sig per doc → explode 16 band hashes
-    → shuffle on (band_id, band_hash) → per-bucket self-join emits
-    candidates → distinct → join back to shingle arrays (shuffle on id)
-    → exact verify. No O(n²) stage anywhere; skewed buckets (boilerplate
-    docs) are the known hot spot — AQE skew-join splits them, and
-    ``max_bucket_size`` is the hard cap: band buckets holding more than
-    that many docs are dropped whole before the self-join (a bucket of
-    d docs emits O(d²) candidate pairs — one boilerplate bucket can
-    dominate the stage at corpus scale). Dropping a bucket only loses
-    recall for pairs whose OTHER 15 bands also miss; the oracle applies
-    the identical cap so parity stays exact. None = off.
+    → shuffle on (band_id, band_hash) → per-bucket pairs (bucket_pairs)
+    → distinct → join back to shingle arrays (shuffle on id) → exact
+    verify. No O(n²) stage anywhere; skewed buckets (boilerplate docs)
+    are the known hot spot, and ``max_bucket_size`` is the hard cap:
+    band buckets holding more than that many docs are dropped whole
+    before any pair is emitted (a bucket of d docs emits O(d²)
+    candidate pairs — one boilerplate bucket can dominate the stage at
+    corpus scale). Dropping a bucket only loses recall for pairs whose
+    OTHER 15 bands also miss; the oracle applies the identical cap so
+    parity stays exact. None = off.
     """
     docs = with_minhash(df, id_col, text_col)
-    band_s, _ = band_hashes_frag("sig")
-    bands = docs.select(
-        F.col(id_col).alias("doc"),
-        F.posexplode(F.expr("array(" + ", ".join(band_s) + ")")).alias(
-            "band_id", "bh"
-        ),
+    bands = docs.selectExpr(f"`{id_col}` AS doc", band_explode_sql())
+    cand = bucket_pairs(
+        bands, ["band_id", "bh"], "doc", ("doc_a", "doc_b"), max_bucket_size=max_bucket_size
     )
-    # Bucket-group pair generation instead of a bands⋈bands self-join:
-    # the join's two inputs each recomputed the 16-md5 band subtree
-    # from the cached signatures (one side rebuilt it under its
-    # BroadcastExchange — no exchange reuse), and the bucket cap paid a
-    # Window pass on top. ONE groupBy computes the bands once, the cap
-    # becomes a size() filter on the grouped list (the Window stage
-    # disappears), and the per-bucket pairs explode out of the list —
-    # same O(d²)-per-bucket output, one Exchange in place of
-    # join+window+broadcast (guide §2.4). Memory note: a bucket's doc
-    # list materializes in the agg buffer, the same rows the old
-    # window buffered per partition; max_bucket_size remains the
-    # at-scale guard, applied before any pair is emitted.
-    buckets = bands.groupBy("band_id", "bh").agg(
-        F.collect_list("doc").alias("ds")
-    )
-    size_ok = F.size("ds") >= 2
-    if max_bucket_size is not None:
-        size_ok = size_ok & (F.size("ds") <= max_bucket_size)
-    cand = (
-        buckets.where(size_ok)
-        .select(F.posexplode("ds").alias("__i", "__da"), "ds")
-        .select(
-            "__da",
-            F.explode(F.expr("slice(ds, __i + 2, size(ds))")).alias("__db"),
-        )
-        .select(
-            F.least("__da", "__db").alias("doc_a"),
-            F.greatest("__da", "__db").alias("doc_b"),
-        )
-        .distinct()
-    )
-    sh = docs.select(F.col(id_col).alias("doc"), "sh")
-    verified = (
-        cand.join(sh.withColumnRenamed("doc", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
-        .join(sh.withColumnRenamed("doc", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
+    sh_a = docs.selectExpr(f"`{id_col}` AS doc_a", "sh AS sh_a")
+    sh_b = docs.selectExpr(f"`{id_col}` AS doc_b", "sh AS sh_b")
+    return (
+        cand.join(sh_a, "doc_a")
+        .join(sh_b, "doc_b")
         # stage the intersection size: no CSE means the inlined form
         # computes array_intersect twice per candidate pair
         .withColumn("__inter", F.expr("cast(size(array_intersect(sh_a, sh_b)) as double)"))
-        .withColumn(
-            "jaccard",
-            F.expr("__inter / (cast(size(sh_a) + size(sh_b) as double) - __inter)"),
+        .selectExpr(
+            "doc_a",
+            "doc_b",
+            "__inter / (cast(size(sh_a) + size(sh_b) as double) - __inter) AS jaccard",
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        .where(f"jaccard >= {threshold}")
         .orderBy("doc_a", "doc_b")
     )
-    return verified
 
 
 def minhash_lsh_oracle(
@@ -277,22 +324,7 @@ def minhash_lsh_oracle(
     _, hd = hash32_frag("s", "s")
     sig_d = minhash_sig_frag_duck("hs")
     _, band_d = band_hashes_frag("sig")
-    band_selects = "\n  UNION ALL ".join(
-        f"SELECT doc, {j} AS band_id, {frag} AS bh FROM sigs" for j, frag in enumerate(band_d)
-    )
-    if max_bucket_size is not None:
-        bands_cte = f"""raw_bands AS (
-  {band_selects}
-), bands AS (
-  SELECT doc, band_id, bh FROM (
-    SELECT doc, band_id, bh, COUNT(*) OVER (PARTITION BY band_id, bh) AS bsz
-    FROM raw_bands
-  ) WHERE bsz <= {max_bucket_size}
-)"""
-    else:
-        bands_cte = f"""bands AS (
-  {band_selects}
-)"""
+    bands_cte = bands_cte_duck(band_d, "doc", "bh", "sigs", max_bucket_size)
     return f"""
 WITH docs AS MATERIALIZED (
   SELECT {id_col} AS doc, {shd} AS shingles FROM {table}
@@ -371,70 +403,45 @@ def simhash_pairs(
     th_s, _ = token_hashes_frag(text_col)
     # explode + codegen'd sums (same rationale as with_minhash): per bit,
     # majority test 2*sum(bit) > n; HOF filter×60 measured ~4× slower
-    ex = df.select(F.col(id_col).alias("doc"), F.explode(F.expr(th_s)).alias("h"))
-    bit_aggs = [
-        F.sum(F.expr(f"shiftright(h, {b}) & 1")).alias(f"c_{b}")
-        for b in range(SIMHASH_BITS)
-    ]
-    counted = ex.groupBy("doc").agg(F.count(F.lit(1)).alias("n"), *bit_aggs)
+    ex = df.selectExpr(f"`{id_col}` AS doc", f"explode({th_s}) AS h")
+    counted = ex.groupBy("doc").agg(
+        F.expr("count(1) AS n"),
+        *(F.expr(f"sum(shiftright(h, {b}) & 1) AS c_{b}") for b in range(SIMHASH_BITS)),
+    )
     sh_expr = " + ".join(
         f"(case when 2 * c_{b} > n then {1 << b}L else 0L end)"
         for b in range(SIMHASH_BITS)
     )
-    sigs = counted.select("doc", F.expr(f"({sh_expr})").alias("sh"))
+    sigs = counted.selectExpr("doc", f"({sh_expr}) AS sh")
     # empty/whitespace-only docs explode to zero rows and would vanish
     # from the groupBy; the oracle assigns them sh=0 (no bit has a
     # majority over zero tokens) — re-attach them so parity holds.
-    all_ids = df.select(F.col(id_col).alias("doc"))
+    all_ids = df.selectExpr(f"`{id_col}` AS doc")
     # no persist: since the bucket-group candidate shape (below) the
     # signature frame feeds exactly one consumer
-    docs = all_ids.join(sigs, "doc", "left").withColumn(
-        "sh", F.coalesce("sh", F.lit(0))
-    )
-    bands = docs.select(
+    bands = all_ids.join(sigs, "doc", "left").selectExpr(
+        "doc",
+        "coalesce(sh, 0) AS sh",
+    ).selectExpr(
         "doc",
         "sh",
-        F.posexplode(
-            F.expr(
-                "array("
-                + ", ".join(
-                    f"(shiftright(sh, {SIMHASH_BAND_BITS * j}) & {SIMHASH_BAND_MASK})"
-                    for j in range(SIMHASH_BANDS)
-                )
-                + ")"
-            )
-        ).alias("band_id", "band_val"),
+        "posexplode(array("
+        + ", ".join(
+            f"(shiftright(sh, {SIMHASH_BAND_BITS * j}) & {SIMHASH_BAND_MASK})"
+            for j in range(SIMHASH_BANDS)
+        )
+        + ")) AS (band_id, band_val)",
     )
     # bucket-group pair generation (r16, the minhash_lsh_pairs shape):
     # one groupBy computes the band subtree once where the self-join
     # scanned it per side; per-bucket pairs explode from the grouped
     # list (~N/32768 docs per bucket, near-linear as before)
-    buckets = bands.groupBy("band_id", "band_val").agg(
-        F.collect_list(F.struct("doc", "sh")).alias("ds")
-    )
-    cand = (
-        buckets.where(F.size("ds") >= 2)
-        .select(F.posexplode("ds").alias("__i", "__x"), "ds")
-        .select(
-            "__x",
-            F.explode(F.expr("slice(ds, __i + 2, size(ds))")).alias("__y"),
-        )
-        .select(
-            F.least(F.col("__x.doc"), F.col("__y.doc")).alias("doc_a"),
-            F.greatest(F.col("__x.doc"), F.col("__y.doc")).alias("doc_b"),
-            F.when(
-                F.col("__x.doc") < F.col("__y.doc"), F.col("__x.sh")
-            ).otherwise(F.col("__y.sh")).alias("sa"),
-            F.when(
-                F.col("__x.doc") < F.col("__y.doc"), F.col("__y.sh")
-            ).otherwise(F.col("__x.sh")).alias("sb"),
-        )
-        .distinct()
+    cand = bucket_pairs(
+        bands, ["band_id", "band_val"], "doc", ("doc_a", "doc_b"), payload=("sh", "sa", "sb")
     )
     return (
-        cand.withColumn("hamming", F.expr("bit_count(sa ^ sb)"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
+        cand.selectExpr("doc_a", "doc_b", "bit_count(sa ^ sb) AS hamming")
+        .where(f"hamming <= {max_hamming}")
         .orderBy("hamming", "doc_a", "doc_b")
         .limit(limit)
     )

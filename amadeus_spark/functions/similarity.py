@@ -23,12 +23,14 @@ literals in BOTH dialects.
 
 from __future__ import annotations
 
+import json
 import random
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from amadeus_spark.cache import tracked_persist
+from amadeus_spark.functions.dedup import bands_cte_duck, bucket_pairs
 
 EMB_DIM = 64
 N_PLANES = 8
@@ -103,13 +105,38 @@ ND_PLANES = [
 
 
 def band_buckets_frag(vec: str) -> tuple[list[str], list[str]]:
-    """Per-band bucket-id expressions (one per ND_BANDS) in both dialects."""
+    """Per-band bucket-id expressions (one per ND_BANDS) in both dialects.
+    The DuckDB list is the oracle; the Spark list is the executable spec
+    that :func:`band_buckets_spark` is pinned equal to (a test compares
+    them on the sf0.01 embeddings)."""
     sparks, ducks = [], []
     for band in ND_PLANES:
         s, d = _bucket_exprs(vec, band)
         sparks.append(s)
         ducks.append(d)
     return sparks, ducks
+
+
+#: ND_PLANES as ONE Spark literal: ``from_json`` over a string constant
+#: folds at optimization (the optimized plan carries the parsed array,
+#: no per-row parse), and analyzing it costs ~15× less than the 2,048
+#: ``cast(v as double)`` literals of the per-plane form. Bit-equal: both
+#: round the same decimal text to the nearest double.
+_ND_PLANES_SPARK = (
+    f"from_json('{json.dumps(ND_PLANES)}', 'array<array<array<double>>>')"
+)
+
+
+def band_buckets_spark(vec: str) -> str:
+    """All ND_BANDS bucket ids as one ``array<int>`` expression: one
+    ``transform`` over the folded plane table, bit j of a band's id set
+    iff dot(vec, plane_j) >= 0 — the values of :func:`band_buckets_frag`
+    (same fixed-order dot product)."""
+    return (
+        f"transform({_ND_PLANES_SPARK}, planes -> aggregate(sequence(0, {ND_BITS - 1}), 0,"
+        f" (b, j) -> b + if(aggregate(zip_with({vec}, planes[j], (x, y) -> cast(x as double) * y),"
+        f" cast(0.0 as double), (acc, x) -> acc + x) >= 0, shiftleft(1, j), 0)))"
+    )
 
 
 def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -240,58 +267,35 @@ def embedding_neardup_pairs(
     oracle applies the identical banding so parity stays exact.
 
     vec_id % id_mod == 0 sampling keeps the sf0.01 oracle cheap."""
-    base = tracked_persist(with_norm(
-        df.filter(F.col(id_col) % id_mod == 0).select(id_col, vec_col), vec_col
-    ))  # 3 consumers: band stage + both sides of the verify join
-    band_s, _ = band_buckets_frag(vec_col)
-    bands = base.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.expr("array(" + ", ".join(band_s) + ")")).alias(
-            "band_id", "bucket"
-        ),
+    base = tracked_persist(
+        df.where(f"`{id_col}` % {id_mod} = 0").selectExpr(
+            f"`{id_col}`", f"`{vec_col}`", f"sqrt({dot_frag(vec_col, vec_col)[0]}) AS norm"
+        )
+    )  # 3 consumers: band stage + both sides of the verify join
+    bands = base.selectExpr(
+        f"`{id_col}` AS id", f"posexplode({band_buckets_spark(vec_col)}) AS (band_id, bucket)"
     )
     # bucket-group pair generation (r16, the minhash_lsh_pairs shape):
-    # the self-join evaluated the 32 interpreted band-projection HOFs
-    # on BOTH sides (r15's persist attempt was worse — the cache
-    # barrier cost more than it saved; this computes them once with no
-    # cache at all), and the skew-guard Window folds into a size()
-    # filter on the grouped list before any pair is emitted. Ids only
-    # ride the lists — the vector-carrying twin of this rewrite in
-    # semantic_dedup_stats measured WORSE and was reverted (r16
-    # negative: collect_list of embeddings + sorted slice costs more
-    # than the cell self-join it replaces at sampled-cell scale).
-    buckets = bands.groupBy("band_id", "bucket").agg(
-        F.collect_list("id").alias("ds")
+    # the self-join evaluated the interpreted band-projection HOFs on
+    # BOTH sides (r15's persist attempt was worse — the cache barrier
+    # cost more than it saved; this computes them once with no cache at
+    # all), and the skew-guard Window folds into a size() filter on the
+    # grouped list before any pair is emitted. Ids only ride the lists —
+    # the vector-carrying twin of this rewrite in semantic_dedup_stats
+    # measured WORSE and was reverted (r16 negative: collect_list of
+    # embeddings + sorted slice costs more than the cell self-join it
+    # replaces at sampled-cell scale).
+    cand = bucket_pairs(
+        bands, ["band_id", "bucket"], "id", ("id_a", "id_b"), max_bucket_size=max_bucket_size
     )
-    size_ok = F.size("ds") >= 2
-    if max_bucket_size is not None:
-        size_ok = size_ok & (F.size("ds") <= max_bucket_size)
-    cand = (
-        buckets.where(size_ok)
-        .select(F.posexplode("ds").alias("__i", "__xa"), "ds")
-        .select(
-            "__xa",
-            F.explode(F.expr("slice(ds, __i + 2, size(ds))")).alias("__xb"),
-        )
-        .select(
-            F.least("__xa", "__xb").alias("id_a"),
-            F.greatest("__xa", "__xb").alias("id_b"),
-        )
-        .distinct()
-    )
-    va = base.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), F.col("norm").alias("na")
-    )
-    vb = base.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), F.col("norm").alias("nb")
-    )
+    va = base.selectExpr(f"`{id_col}` AS id_a", f"`{vec_col}` AS va", "norm AS na")
+    vb = base.selectExpr(f"`{id_col}` AS id_b", f"`{vec_col}` AS vb", "norm AS nb")
     ds, _ = dot_frag("va", "vb")
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
-        .withColumn("cosine", F.expr(f"{ds} / (na * nb)"))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+        .selectExpr("id_a", "id_b", f"{ds} / (na * nb) AS cosine")
+        .where(f"cosine >= {threshold}")
         .orderBy("id_a", "id_b")
     )
 
@@ -308,24 +312,7 @@ def embedding_neardup_oracle(
     _, dd_self = dot_frag(vec_col, vec_col)
     _, band_d = band_buckets_frag("vec")
     _, dd = dot_frag("va", "vb")
-    band_selects = "\n  UNION ALL ".join(
-        f"SELECT id, {j} AS band_id, {frag} AS bucket FROM base"
-        for j, frag in enumerate(band_d)
-    )
-    if max_bucket_size is not None:
-        bands_cte = f"""raw_bands AS (
-  {band_selects}
-), bands AS (
-  SELECT id, band_id, bucket FROM (
-    SELECT id, band_id, bucket,
-           COUNT(*) OVER (PARTITION BY band_id, bucket) AS bsz
-    FROM raw_bands
-  ) WHERE bsz <= {max_bucket_size}
-)"""
-    else:
-        bands_cte = f"""bands AS (
-  {band_selects}
-)"""
+    bands_cte = bands_cte_duck(band_d, "id", "bucket", "base", max_bucket_size)
     return f"""
 WITH base AS MATERIALIZED (
   SELECT {id_col} AS id, {vec_col} AS vec, sqrt({dd_self}) AS norm
@@ -840,12 +827,8 @@ def semantic_decontamination_stats(
     base = tracked_persist(
         with_norm(df.select(id_col, vec_col, label_col), vec_col)
     )
-    band_s, _ = band_buckets_frag(vec_col)
-    bands_all = base.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.expr("array(" + ", ".join(band_s) + ")")).alias(
-            "band_id", "bucket"
-        ),
+    bands_all = base.selectExpr(
+        f"`{id_col}` AS id", f"posexplode({band_buckets_spark(vec_col)}) AS (band_id, bucket)"
     )
     probe_bands = bands_all.filter(F.col("id") % probe_mod == 0).select(
         F.col("id").alias("pid"), "band_id", "bucket"

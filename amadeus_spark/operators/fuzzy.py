@@ -40,6 +40,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from amadeus_spark.functions.dedup import bucket_pairs
+
+#: keep the verified pairs — banded ``levenshtein(a, b, d)`` returns -1
+#: past ``d``. The always-false nondeterministic clause pins the filter
+#: above the codegen'd Project (trap 2 in :func:`fuzzy_self_join`).
+_KEEP_VERIFIED = "dist >= 0 OR monotonically_increasing_id() < 0"
+
 
 def deletion_variants_frag(col_sql: str, dialect: str, depth: int = 1) -> str:
     """Array of {identity} ∪ {≤ depth-deletion variants} of a string
@@ -86,6 +93,28 @@ def deletion_variants_frag(col_sql: str, dialect: str, depth: int = 1) -> str:
         f" || substr({col_sql}, j + 1))))"
     )
     return f"list_concat({d1}, {d2})"
+
+
+def _signature_hashes(
+    df: DataFrame, key_col: str, name_col: str, sigs_sql: str, k: str = "k", n: str = "n"
+) -> DataFrame:
+    """(k, n, hv): one row per DISTINCT blocking signature of each name
+    (``sigs_sql``: deletion variants or segments over ``name_col``).
+
+    array_distinct BEFORE the explode: deleting any character of a run
+    of equal characters yields the SAME variant (a name with a 7-zero
+    run has 7 identical variants), and duplicate signatures multiply
+    join output quadratically per pair (7×7 rows that the later
+    distinct collapses — measured 19× on customer names). The SET is
+    what blocking needs; duplicates carry nothing. Blocking joins on
+    the 64-bit HASH of the signature, not the string: the shuffle moves
+    8-byte keys instead of ~L-char strings (measured 13% whole-query at
+    sf0.1); equal signatures hash equal so recall is untouched, and a
+    hash collision only adds a candidate pair that the levenshtein
+    verify prunes — correctness is unaffected."""
+    return df.selectExpr(
+        f"`{key_col}` AS {k}", f"`{name_col}` AS {n}", f"explode(array_distinct({sigs_sql})) AS s"
+    ).selectExpr(k, n, "xxhash64(s) AS hv")
 
 
 #: deepest edit budget served by segment blocking: the probe fan-out
@@ -351,17 +380,10 @@ def fuzzy_self_join_segments(
         df.select(F.col(key_col).alias("k"), F.col(name_col).alias("n"))
     )
     # index side: d+1 short signatures per row — the HOF fragment is
-    # fine here (O(d) elements). Hash-keyed join: 8-byte shuffle keys;
-    # collisions only add verify-pruned rows (fuzzy_self_join reasons).
-    idx = base.select(
-        "k",
-        "n",
-        F.explode(
-            F.array_distinct(
-                F.expr(segment_signatures_frag("n", "index", max_dist))
-            )
-        ).alias("s"),
-    ).select("k", "n", F.xxhash64("s").alias("hv")).alias("b")
+    # fine here (O(d) elements)
+    idx = _signature_hashes(
+        base, "k", "n", segment_signatures_frag("n", "index", max_dist)
+    ).alias("b")
     lens = base.select(F.length("n").alias("L2")).distinct()
     prb = (
         _probe_signatures(base, max_dist, allowed_lens=lens)
@@ -387,15 +409,9 @@ def fuzzy_self_join_segments(
     )
     # banded levenshtein in the codegen'd Project + nondeterministic
     # pin, exactly as fuzzy_self_join (the two measured traps)
-    verified = cand.select(
-        "k1",
-        "k2",
-        "n1",
-        "n2",
-        F.expr(f"levenshtein(n1, n2, {max_dist})").alias("dist"),
-    )
-    never = F.monotonically_increasing_id() < 0
-    return verified.filter((F.col("dist") >= 0) | never)
+    return cand.selectExpr(
+        "k1", "k2", "n1", "n2", f"levenshtein(n1, n2, {max_dist}) AS dist"
+    ).where(_KEEP_VERIFIED)
 
 
 def fuzzy_self_join(
@@ -425,56 +441,19 @@ def fuzzy_self_join(
             " would need wider blocking (recall would silently drop"
             " otherwise)"
         )
-    v = deletion_variants_frag(name_col, "spark", depth=max_dist)
-    # array_distinct BEFORE the explode: deleting any character of a
-    # run of equal characters yields the SAME variant (a name with a
-    # 7-zero run has 7 identical variants), and duplicate variants
-    # multiply join output quadratically per pair (7×7 rows that the
-    # later distinct collapses — measured 19× on customer names).
-    # The variant SET is what blocking needs; duplicates carry nothing.
-    # join on the 64-bit HASH of the variant, not the string: the
-    # shuffle moves 8-byte keys instead of ~L-char strings (measured
-    # 13% whole-query at sf0.1); equal variants hash equal so recall is
-    # untouched, and a hash collision only adds a candidate pair that
-    # the levenshtein verify prunes — correctness is unaffected.
-    vars_df = df.select(
-        F.col(key_col).alias("k"),
-        F.col(name_col).alias("n"),
-        F.explode(F.array_distinct(F.expr(v))).alias("v"),
-    ).select("k", "n", F.xxhash64("v").alias("hv"))
+    vars_df = _signature_hashes(
+        df, key_col, name_col, deletion_variants_frag(name_col, "spark", depth=max_dist)
+    )
     # Bucket-group pair generation instead of a vars⋈vars self-join
     # (r16, the minhash_lsh_pairs shape): the join scanned the variant
     # subtree twice (hence the old persist), shuffled both sides, and
     # still needed the trailing distinct. ONE groupBy(hv) computes the
     # variants once — the persist disappears with the second consumer —
-    # and per-bucket pairs explode out of the grouped list: same
-    # O(d²)-per-bucket candidates, one Exchange in place of two plus a
-    # cache round trip (guide §2.4). Two rows of one key can share a
-    # bucket only through a cross-variant hash collision — the k1!=k2
-    # guard keeps them out, exactly like the old a.k < b.k condition.
-    buckets = vars_df.groupBy("hv").agg(
-        F.collect_list(F.struct("k", "n")).alias("ds")
-    )
-    cand = (
-        buckets.where(F.size("ds") >= 2)
-        .select(F.posexplode("ds").alias("__i", "__x"), "ds")
-        .select(
-            "__x",
-            F.explode(F.expr("slice(ds, __i + 2, size(ds))")).alias("__y"),
-        )
-        .where(F.col("__x.k") != F.col("__y.k"))
-        .select(
-            F.least(F.col("__x.k"), F.col("__y.k")).alias("k1"),
-            F.greatest(F.col("__x.k"), F.col("__y.k")).alias("k2"),
-            F.when(
-                F.col("__x.k") < F.col("__y.k"), F.col("__x.n")
-            ).otherwise(F.col("__y.n")).alias("n1"),
-            F.when(
-                F.col("__x.k") < F.col("__y.k"), F.col("__y.n")
-            ).otherwise(F.col("__x.n")).alias("n2"),
-        )
-        .distinct()
-    )
+    # and per-bucket pairs explode out of the grouped list (see
+    # dedup.bucket_pairs). Two rows of one key share a bucket through a
+    # cross-variant hash collision or a duplicate key — the helper's
+    # k1 != k2 guard keeps them out, exactly like the old a.k < b.k.
+    cand = bucket_pairs(vars_df, ["hv"], "k", ("k1", "k2"), payload=("n", "n1", "n2"))
     # Two measured traps (2.7× combined, sf0.1 customer names):
     # 1. threshold-banded levenshtein(n1, n2, d) early-exits rows far
     #    apart (returns -1) instead of filling the full DP matrix;
@@ -485,15 +464,9 @@ def fuzzy_self_join(
     #    OR-ing an always-false nondeterministic clause pins the filter
     #    above the Project without changing its result; the plan test
     #    asserts no levenshtein ever appears in a join condition.
-    verified = cand.select(
-        "k1",
-        "k2",
-        "n1",
-        "n2",
-        F.expr(f"levenshtein(n1, n2, {max_dist})").alias("dist"),
-    )
-    never = F.monotonically_increasing_id() < 0
-    return verified.filter((F.col("dist") >= 0) | never)
+    return cand.selectExpr(
+        "k1", "k2", "n1", "n2", f"levenshtein(n1, n2, {max_dist}) AS dist"
+    ).where(_KEEP_VERIFIED)
 
 
 def fuzzy_lookup_join_segments(
@@ -538,17 +511,10 @@ def fuzzy_lookup_join_segments(
         skew_probe = max_dist >= 5
     if skew_probe:
         _warn_if_degenerate(right, right_name, max_dist)
-    idx = right.select(
-        F.col(right_key).alias("rk"),
-        F.col(right_name).alias("rn"),
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    segment_signatures_frag(right_name, "index", max_dist)
-                )
-            )
-        ).alias("s"),
-    ).select("rk", "rn", F.xxhash64("s").alias("hv"))
+    idx = _signature_hashes(
+        right, right_key, right_name,
+        segment_signatures_frag(right_name, "index", max_dist), "rk", "rn",
+    )
     lens = right.select(F.length(right_name).alias("L2")).distinct()
     prb = _probe_signatures(
         left.select(
@@ -562,15 +528,9 @@ def fuzzy_lookup_join_segments(
         F.xxhash64("s").alias("hv"),
     )
     cand = prb.join(idx, "hv").select("lk", "rk", "ln", "rn").distinct()
-    verified = cand.select(
-        "lk",
-        "rk",
-        "ln",
-        "rn",
-        F.expr(f"levenshtein(ln, rn, {max_dist})").alias("dist"),
-    )
-    never = F.monotonically_increasing_id() < 0
-    return verified.filter((F.col("dist") >= 0) | never)
+    return cand.selectExpr(
+        "lk", "rk", "ln", "rn", f"levenshtein(ln, rn, {max_dist}) AS dist"
+    ).where(_KEEP_VERIFIED)
 
 
 def fuzzy_lookup_join(
@@ -608,30 +568,18 @@ def fuzzy_lookup_join(
             " would need wider blocking (recall would silently drop"
             " otherwise)"
         )
-    lv = deletion_variants_frag(left_name, "spark", depth=max_dist)
-    rv = deletion_variants_frag(right_name, "spark", depth=max_dist)
-    # hash-keyed candidate join, same reasoning as fuzzy_self_join:
-    # collisions only add verify-pruned candidates
-    lvars = left.select(
-        F.col(left_key).alias("lk"),
-        F.col(left_name).alias("ln"),
-        F.explode(F.array_distinct(F.expr(lv))).alias("v"),
-    ).select("lk", "ln", F.xxhash64("v").alias("hv"))
-    rvars = right.select(
-        F.col(right_key).alias("rk"),
-        F.col(right_name).alias("rn"),
-        F.explode(F.array_distinct(F.expr(rv))).alias("v"),
-    ).select("rk", "rn", F.xxhash64("v").alias("hv"))
-    cand = lvars.join(rvars, "hv").select("lk", "rk", "ln", "rn").distinct()
-    verified = cand.select(
-        "lk",
-        "rk",
-        "ln",
-        "rn",
-        F.expr(f"levenshtein(ln, rn, {max_dist})").alias("dist"),
+    lvars = _signature_hashes(
+        left, left_key, left_name,
+        deletion_variants_frag(left_name, "spark", depth=max_dist), "lk", "ln",
     )
-    never = F.monotonically_increasing_id() < 0
-    return verified.filter((F.col("dist") >= 0) | never)
+    rvars = _signature_hashes(
+        right, right_key, right_name,
+        deletion_variants_frag(right_name, "spark", depth=max_dist), "rk", "rn",
+    )
+    cand = lvars.join(rvars, "hv").select("lk", "rk", "ln", "rn").distinct()
+    return cand.selectExpr(
+        "lk", "rk", "ln", "rn", f"levenshtein(ln, rn, {max_dist}) AS dist"
+    ).where(_KEEP_VERIFIED)
 
 
 def fuzzy_match_stats(
@@ -645,16 +593,11 @@ def fuzzy_match_stats(
     number of fuzzy pairs and the number of distinct members with at
     least one fuzzy neighbor. All-BIGINT output."""
     pairs = fuzzy_self_join(df, key_col, name_col, max_dist)
-    left = df.select(
-        F.col(key_col).alias("k1"), F.col(group_col).alias("grp")
-    )
+    left = df.selectExpr(f"`{key_col}` AS k1", f"`{group_col}` AS grp")
     return (
         pairs.join(left, "k1")
         .groupBy("grp")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.count_distinct("k1").alias("n_members_matched"),
-        )
+        .agg(F.expr("count(1) AS n_pairs"), F.expr("count(DISTINCT k1) AS n_members_matched"))
         .orderBy("grp")
     )
 

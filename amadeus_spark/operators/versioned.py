@@ -1769,13 +1769,24 @@ def _restamp_cdf(
     contract), so a loser re-publishing at a bumped version must
     rewrite them — O(change batch), still far cheaper than re-running
     the upstream job. Writes a fresh version-stamped dir and drops the
-    stale one."""
+    stale one. A 0-row changefeed leg stages a directory with no data
+    file (see :func:`_fused_write`): there is nothing to re-stamp and no
+    schema to infer, so it is renamed instead."""
     new_dir = f"v{new_version}-{uuid.uuid4().hex[:8]}"
+    old_path = _jpath(spark, f"{root}/{CDF_DIR}/{old_dir}")
+    fs, _ = _hadoop_fs(spark, root)
+    files = fs.listFiles(old_path, True)
+    while files.hasNext():
+        if not files.next().getPath().getName().startswith(("_", ".")):
+            break
+    else:
+        if not fs.rename(old_path, _jpath(spark, f"{root}/{CDF_DIR}/{new_dir}")):
+            raise RuntimeError(f"changefeed rename failed: {old_dir} -> {new_dir}")
+        return new_dir
     spark.read.parquet(f"{root}/{CDF_DIR}/{old_dir}").withColumn(
         "_commit_version", F.lit(new_version)
     ).write.mode("errorifexists").parquet(f"{root}/{CDF_DIR}/{new_dir}")
-    fs, _ = _hadoop_fs(spark, root)
-    fs.delete(_jpath(spark, f"{root}/{CDF_DIR}/{old_dir}"), True)
+    fs.delete(old_path, True)
     return new_dir
 
 

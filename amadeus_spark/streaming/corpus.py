@@ -42,7 +42,7 @@ from amadeus_spark.functions.dedup import (
     HASH_B,
     MERSENNE_P,
     NUM_HASHES,
-    band_hashes_frag,
+    band_explode_sql,
     hash32_frag,
     shingles_from_tokens_frag,
     toks_frag,
@@ -87,13 +87,7 @@ def corpus_band_index(
     bh), shingle frame (corpus_id, sh)). The band frame is 16 rows/doc
     of (int, 32-char md5); at scale both persist as bucketed tables."""
     sigs = with_minhash(docs, id_col, text_col)
-    band_s, _ = band_hashes_frag("sig")
-    bands = sigs.select(
-        F.col(id_col).alias("corpus_id"),
-        F.posexplode(F.expr("array(" + ", ".join(band_s) + ")")).alias(
-            "band_id", "bh"
-        ),
-    )
+    bands = sigs.selectExpr(f"`{id_col}` AS corpus_id", band_explode_sql())
     shingles = sigs.select(F.col(id_col).alias("corpus_id"), F.col("sh").alias("c_sh"))
     return bands, shingles
 
@@ -115,14 +109,8 @@ def neardup_flags(
     gate shape)."""
     carry = [ts_col] if ts_col else []
     staged = with_minhash_stateless(docs, id_col, text_col, extra_cols=carry)
-    band_s, _ = band_hashes_frag("sig")
-    bands = staged.select(
-        id_col,
-        *carry,
-        "sh",
-        F.posexplode(F.expr("array(" + ", ".join(band_s) + ")")).alias(
-            "band_id", "bh"
-        ),
+    bands = staged.selectExpr(
+        *(f"`{c}`" for c in [id_col, *carry]), "sh", band_explode_sql()
     )
     cand = bands.join(band_index, ["band_id", "bh"]).filter(
         F.col(id_col) != F.col("corpus_id")

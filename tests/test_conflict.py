@@ -106,6 +106,25 @@ def test_append_race_restamps_changefeed(spark, root, monkeypatch):
     assert sorted(r["k"] for r in rows) == list(range(20, 30))
 
 
+def test_zero_row_changefeed_race_rebases(spark, root, monkeypatch):
+    """A changefeed commit with no change rows stages a changefeed dir
+    holding no data file; losing the CAS race must re-base it under the
+    bumped version (nothing to re-stamp), not fail to infer its schema."""
+    V.commit_append(spark, root, _df(spark, 0, 10, "base"), ["k"])
+    _arm_race(
+        monkeypatch,
+        lambda: V.commit_append(spark, root, _df(spark, 10, 20, "win")),
+    )
+    v, _, _ = V.commit_upsert(
+        spark, root, _df(spark, 20, 20, "lose"), "k", changefeed=True
+    )
+    assert v == 2
+    cdf_dirs = os.listdir(os.path.join(root, V.CDF_DIR))
+    assert len(cdf_dirs) == 1 and cdf_dirs[0].startswith("v2-")
+    assert V.table_changes(spark, root, starting_version=2).count() == 0
+    assert V.read_version(spark, root).count() == 20
+
+
 def test_append_race_across_remove_all_rebases(spark, root, monkeypatch):
     """An append re-bases even over a full-rewrite OPTIMIZE: its rows
     were never part of the compacted snapshot, and the log fold replays
