@@ -319,19 +319,23 @@ def minhash_lsh_oracle(
     threshold: float = 0.8,
     max_bucket_size: int | None = None,
 ) -> str:
-    """DuckDB twin of minhash_lsh_pairs — same constants, same algorithm."""
+    """DuckDB twin of minhash_lsh_pairs — same constants, same algorithm.
+    Like with_minhash, it folds all rows of one id into one document:
+    the distinct union of their shingle hashes."""
     _, shd = shingles_frag(text_col)
     _, hd = hash32_frag("s", "s")
-    sig_d = minhash_sig_frag_duck("hs")
+    sig_d = minhash_sig_frag_duck("sh")
     _, band_d = band_hashes_frag("sig")
     bands_cte = bands_cte_duck(band_d, "doc", "bh", "sigs", max_bucket_size)
     return f"""
 WITH docs AS MATERIALIZED (
   SELECT {id_col} AS doc, {shd} AS shingles FROM {table}
 ), hashed AS MATERIALIZED (
-  SELECT doc, list_transform(shingles, s -> {hd}) AS hs FROM docs
+  SELECT doc, list_distinct(flatten(list(list_transform(shingles, s -> {hd}))))
+    AS sh
+  FROM docs GROUP BY doc
 ), sigs AS MATERIALIZED (
-  SELECT doc, list_distinct(hs) AS sh, [{', '.join(sig_d)}] AS sig FROM hashed
+  SELECT doc, sh, [{', '.join(sig_d)}] AS sig FROM hashed
 ), {bands_cte}, cand AS (
   SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
   FROM bands a JOIN bands b
@@ -450,6 +454,9 @@ def simhash_pairs(
 def simhash_oracle(
     table: str, id_col: str, text_col: str, max_hamming: int = 8, limit: int = 20
 ) -> str:
+    """DuckDB twin of simhash_pairs. Like the Spark side, it folds all
+    rows of one id into one document: the concatenated multiset of
+    their token hashes."""
     _, th_d = token_hashes_frag(text_col)
     _, sh_d = simhash_from_hashes_frag("th")
     bands_d = ", ".join(
@@ -458,7 +465,7 @@ def simhash_oracle(
     )
     return f"""
 WITH hashed AS MATERIALIZED (
-  SELECT {id_col} AS doc, {th_d} AS th FROM {table}
+  SELECT {id_col} AS doc, flatten(list({th_d})) AS th FROM {table} GROUP BY {id_col}
 ), docs AS MATERIALIZED (
   SELECT doc, {sh_d} AS sh FROM hashed
 ), bands AS (

@@ -148,212 +148,6 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, hpath
 
 
-#: URI schemes the Python-side pyarrow.fs layer owns (the Hadoop FS API
-#: owns file://, hdfs://, s3a:// through the JVM). s3:// is pyarrow's
-#: native S3 — the same layer read_warc streams from.
-_ARROW_SCHEMES = ("s3://", "gs://")
-
-
-def _arrow_copy_dir(fs, src: str, dst: str) -> None:
-    """Recursive file-by-file SERVER-SIDE copy under a prefix
-    (``fs.copy_file`` → S3 CopyObject: bytes never transit the client)
-    — the explicit copy-then-delete that 'rename' MEANS on an object
-    store (S3 has no atomic rename; S3A's rename is exactly this
-    server-side copy loop). Spelled out rather than hidden so the
-    non-atomicity window is visible at the call site. Seam for
-    failure-injection tests."""
-    import pyarrow.fs as pafs
-
-    for info in fs.get_file_info(pafs.FileSelector(src, recursive=True)):
-        if info.type != pafs.FileType.File:
-            continue
-        rel = info.path[len(src) :].lstrip("/")
-        fs.copy_file(info.path, f"{dst}/{rel}")
-
-
-def arrow_swap_partitions(
-    tmp_uri: str, target_uri: str, partition_col: str
-) -> list[str]:
-    """Object-store twin of merge_upsert's Hadoop swap loop, over
-    pyarrow.fs (s3://, gs:// — stores the JVM can't reach without extra
-    jars, but the Python workers already stream from via read_warc's
-    open path). Same recovery contract as the Hadoop path: per-partition
-    delete-then-copy-then-delete-staged; a failure part-way raises with
-    the staging URI (which still holds every unswapped merged partition)
-    and never removes staging. Returns the swapped partition names.
-
-    Non-atomicity, stated plainly: each partition swap is a window where
-    the target dir is deleted and the copy is in flight — identical to
-    S3A rename semantics. The bound on damage is the same as the Hadoop
-    path's: staging survives until EVERY partition landed."""
-    import pyarrow.fs as pafs
-
-    fs, tmp_rel = pafs.FileSystem.from_uri(tmp_uri)
-    _, target_rel = pafs.FileSystem.from_uri(target_uri)
-    swapped: list[str] = []
-    try:
-        sel = pafs.FileSelector(tmp_rel, recursive=False)
-        for info in fs.get_file_info(sel):
-            entry = info.path.rsplit("/", 1)[-1]
-            if info.type != pafs.FileType.Directory or not entry.startswith(
-                f"{partition_col}="
-            ):
-                continue
-            dst = f"{target_rel}/{entry}"
-            if fs.get_file_info(dst).type != pafs.FileType.NotFound:
-                fs.delete_dir(dst)
-            _arrow_copy_dir(fs, info.path, dst)
-            fs.delete_dir(info.path)
-            swapped.append(entry)
-    except Exception as e:
-        raise RuntimeError(
-            f"merge_upsert swap failed after {swapped}; merged partitions "
-            f"remain staged at {tmp_uri} — recover by moving them into "
-            f"{target_uri} manually"
-        ) from e
-    fs.delete_dir_contents(tmp_rel, missing_dir_ok=True)
-    fs.delete_dir(tmp_rel)
-    return swapped
-
-
-def merge_upsert(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    partition_col: str,
-) -> None:
-    """Copy-on-write MERGE (upsert) on a plain partitioned parquet
-    table — the lakehouse `MERGE INTO` primitive without a table
-    format: rows in ``updates`` replace target rows with the same key
-    and insert otherwise.
-
-    Scale mechanics (the point): only partitions PRESENT IN THE UPDATE
-    are rewritten. The affected partition values are collected (bounded
-    by partition count, never row count), the target read is pruned to
-    those partitions (partition pruning at the scan), the merge is one
-    LEFT ANTI join (target rows whose key is NOT updated survive)
-    unioned with the updates, and the write uses Spark's DYNAMIC
-    partition-overwrite so untouched partitions' files are never
-    touched. At 100 TB a daily update touching 1% of partitions
-    rewrites 1% of the table.
-
-    Constraint (documented, standard for hive-style upserts): the
-    partition value of a key must not change between target and update
-    — a moved key would leave its old copy in the old partition.
-
-    Failure safety: the merged partitions are STAGED to a sibling tmp
-    dir first, then swapped in per partition (same write-then-swap
-    discipline as compact_files). Writing over ``target_path`` directly
-    — even with dynamic partition overwrite, which defers deletion to
-    job commit — leaves a window where a commit-time failure loses the
-    touched partitions with no recovery copy; with staging, the target
-    is only mutated after the full rewrite succeeded. The staging dir
-    is removed ONLY after every swap landed; if a swap fails part-way,
-    the raised error carries the staging path so the remaining merged
-    partitions can be recovered by hand (the reference routes all file
-    mutation through the store's own API for the same reason —
-    amadeus-aws/src/file.rs:227).
-
-    The swap goes through the STORE'S OWN API, never os.rename: the
-    Hadoop FileSystem API for file://, hdfs://, s3a:// (whatever the
-    session's Hadoop conf mounts), and pyarrow.fs for pyarrow-native
-    schemes (s3://, gs:// — :func:`arrow_swap_partitions`, exercised
-    against an emulated S3 in tests). On HDFS the per-partition rename
-    is atomic; on object stores rename means copy-then-delete
-    (non-atomic, O(partition bytes)) — the recovery contract above is
-    what bounds the damage there."""
-    parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    target = spark.read.parquet(target_path).filter(
-        F.col(partition_col).isin(parts)
-    )
-    survivors = target.join(
-        updates.select(*key_cols), on=key_cols, how="left_anti"
-    )
-    merged = survivors.unionByName(updates)
-    tmp = target_path.rstrip("/") + ".__merge_tmp__"
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
-    if target_path.startswith(_ARROW_SCHEMES):
-        arrow_swap_partitions(tmp, target_path, partition_col)
-        return
-    fs, hpath = _hadoop_fs(spark, tmp)
-    tmp_p = hpath(tmp)
-    swapped: list[str] = []
-    try:
-        # swap only the partitions present in the update: untouched
-        # partitions' files are never read or rewritten.
-        for status in fs.listStatus(tmp_p):
-            entry = status.getPath().getName()
-            if not entry.startswith(f"{partition_col}="):
-                continue
-            dst = hpath(hpath(target_path), entry)
-            if fs.exists(dst):
-                fs.delete(dst, True)
-            if not fs.rename(status.getPath(), dst):
-                raise IOError(f"rename {status.getPath()} -> {dst} failed")
-            swapped.append(entry)
-    except Exception as e:
-        raise RuntimeError(
-            f"merge_upsert swap failed after {swapped}; merged partitions "
-            f"remain staged at {tmp} — recover by moving them into "
-            f"{target_path} manually"
-        ) from e
-    fs.delete(tmp_p, True)
-
-
-def compact_files(
-    spark: SparkSession,
-    path: str,
-    target_mb: int = 256,
-    sort_cols: list[str] | None = None,
-) -> tuple[int, int]:
-    """Small-file compaction (the OPTIMIZE bin-packing half of table
-    maintenance): rewrite a parquet directory into ~``target_mb`` files.
-    Streaming sinks and fine-grained upserts accumulate kilobyte files;
-    at 100 TB the resulting task-per-file scheduling and footer reads
-    dominate scan cost long before the data does.
-
-    File count = ceil(current_bytes / target_mb) from the file listing
-    (no data pass); the rewrite is one coalesce-free repartition (round
-    robin — even output sizes) or, with ``sort_cols``, a range
-    repartition + within-partition sort so min/max pruning survives
-    compaction. Returns (files_before, files_after). Rewrite is
-    in-place via an overwrite of the directory; on object stores pair
-    with a committer or write-then-swap."""
-    import math
-    import os as _os
-
-    files = [
-        _os.path.join(dp, f)
-        for dp, _, fs in _os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    ]
-    total = sum(_os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    if sort_cols:
-        out = df.repartitionByRange(n_out, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
-    else:
-        out = df.repartition(n_out)
-    tmp = path.rstrip("/") + ".__compact_tmp__"
-    out.write.mode("overwrite").parquet(tmp)
-    # swap: the rewrite is complete before the old dir is dropped
-    import shutil
-
-    shutil.rmtree(path)
-    _os.rename(tmp, path)
-    after = sum(
-        1
-        for dp, _, fs in _os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    return (len(files), after)
-
-
 def write_training_shards(
     df: DataFrame, path: str, key: str, n_shards: int, epoch: int
 ) -> None:

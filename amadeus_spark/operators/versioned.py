@@ -2393,29 +2393,10 @@ def read_version(
     return out
 
 
-def commit_upsert(
-    spark: SparkSession,
-    root: str,
-    updates: DataFrame,
-    key_col: str | list[str],
-    changefeed: bool = False,
-) -> tuple[int, int, int]:
-    """Copy-on-write MERGE by key — one column or a COMPOSITE list
-    (file pruning on the FIRST; like :func:`commit_merge`) — with
-    FILE-LEVEL stats pruning: only
-    files whose index [min,max] range of the prune key intersects the
-    update's key range are rewritten (anti-join survivors + updates);
-    every other file carries over by reference — zero data movement
-    and zero log bytes (carried files simply aren't removed). The
-    pruning is a DataFrame filter; only the TOUCHED files' paths are
-    collected. Returns (new_version, files_rewritten, files_carried).
-
-    ``changefeed=True`` records change rows for :func:`table_changes`
-    (``insert`` / ``update_preimage`` / ``update_postimage`` — an
-    upsert never deletes); see :func:`apply_changes` for the capture
-    contract."""
-    key_cols = [key_col] if isinstance(key_col, str) else list(key_col)
-    prune_col = key_cols[0]
+def _keyed_table(spark: SparkSession, root: str, prune_col: str) -> dict:
+    """The resolved current snapshot for a keyed write (upsert, CDC
+    apply, MERGE), whose file pruning runs on ``prune_col`` — which
+    must therefore carry manifest stats."""
     cur = current_version(spark, root)
     if cur < 0:
         raise FileNotFoundError(f"no versioned table at {root}")
@@ -2426,37 +2407,74 @@ def commit_upsert(
             f"{prune_col} has no manifest stats (stats_cols="
             f"{seg['stats_cols']}); re-create the table with it"
         )
-    _require_full_rows(_manifest_schema(seg), updates.columns, "updates")
-    # the bounds pass also counts the batch (free in the same agg): a
-    # MEASURED row count lets every downstream join of the batch's keys
-    # broadcast-hint deliberately (guide §3.1) instead of shuffling the
-    # touched-file side on an optimizer estimate
-    bounds = updates.agg(
-        F.min(prune_col).alias("lo"), F.max(prune_col).alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    lo, hi = _bound(bounds["lo"]), _bound(bounds["hi"])
-    n_src = int(bounds["n"])
-    touched = _pruned_entries(spark, root, res, prune_col, lo, hi,
-                              slim=True)
-    n_kept = seg["total_files"] - len(touched)
+    return res
+
+
+def _keyed_rewrite(
+    spark: SparkSession,
+    root: str,
+    res: dict,
+    batch: DataFrame,
+    key_cols: list[str],
+    n: int,
+    lo,
+    hi,
+    op: str,
+    extra: dict | None = None,
+    changefeed: bool = False,
+    delete: tuple[str, str] | None = None,
+) -> tuple[int, int, int]:
+    """Copy-on-write keyed rewrite of ``batch`` into the snapshot
+    ``res`` — the one core of :func:`commit_upsert` and
+    :func:`apply_changes`. ``n``/``lo``/``hi`` are the batch's MEASURED
+    row count and bounds of the prune key ``key_cols[0]``; ``op`` names
+    the commit in the log. With ``delete=(op_col, delete_op)``, batch
+    rows whose ``op_col`` equals ``delete_op`` delete their key; every
+    other row upserts.
+
+    Only files whose [min,max] of the prune key intersects [lo, hi]
+    are rewritten (survivors anti-join + the upserted rows); every
+    other file carries over by reference — zero data movement and zero
+    log bytes. ``changefeed=True`` records the change rows for
+    :func:`table_changes`; the touched-file read is then persisted (it
+    feeds survivors AND preimages — one scan). Returns (new_version,
+    files_rewritten, files_carried)."""
+    seg = res["seg"]
+    nk = len(key_cols)
+    op_col, delete_op = delete or (None, None)
+    upserts = batch
+    if delete is not None:
+        upserts = batch.filter(F.col(op_col) != delete_op).select(
+            [c for c in batch.columns if c != op_col]
+        )
+    # no key means no key file: an empty or all-NULL-key batch matches
+    # no row (SQL equality), so it reads and removes nothing and its
+    # rows land as inserts — commit_merge's rule; _rebase_ok reads the
+    # lo=None footprint the same way (_pruned_entries would read
+    # lo=None as "no pruning" and rewrite every file)
+    touched = [] if lo is None else _pruned_entries(
+        spark, root, res, key_cols[0], lo, hi, slim=True
+    )
     # CHECK enforcement on the CHANGED leg only: survivors passed the
     # chain at their original write (pre_checked below skips the
     # full-frame re-validation _commit would otherwise run); the CDF
     # copies stay unchained — a violation aborts on the data write,
     # which runs first
     cons = seg.get("constraints") or {}
-    upd_checked = _enforce_constraints(updates, cons) if cons else updates
+    merged = _enforce_constraints(upserts, cons) if cons else upserts
     cached = []
     cdf_frame = None
+    if changefeed and not touched:
+        # every upsert is an insert; a delete hit an absent key (no row)
+        cdf_frame = upserts.withColumn("_change_type", F.lit("insert"))
     try:
         if touched:
             # survivors read through the manifest schema (_reader);
-            # allowMissingColumns lets updates ADD a column — survivors
-            # surface NULL for it (widen-only schema evolution; the
-            # omit-a-column direction raised above). _snapshot_read
-            # applies any deletion vectors, so a rewrite of a DV'd
-            # file physically purges its deleted rows.
+            # allowMissingColumns lets the batch ADD a column —
+            # survivors surface NULL for it (widen-only schema
+            # evolution; the callers raise on an omitted column).
+            # _snapshot_read applies any deletion vectors, so a
+            # rewrite of a DV'd file physically purges its deleted rows.
             touched_read = _snapshot_read(spark, root, seg, touched)
             if changefeed:
                 touched_read = touched_read.persist()
@@ -2464,65 +2482,61 @@ def commit_upsert(
             survivors = touched_read.join(
                 # no distinct: anti-join is existence — dup build keys
                 # are free, the dedup Exchange is not
-                _bc(updates.select(*key_cols), n_src, len(key_cols)),
-                key_cols, "left_anti"
+                _bc(batch.select(*key_cols), n, nk), key_cols, "left_anti"
             )
-            merged = survivors.unionByName(
-                upd_checked, allowMissingColumns=True
-            )
-            if changefeed:
+            merged = survivors.unionByName(merged, allowMissingColumns=True)
+        if changefeed and touched:
+            if delete is None:
+                # semi-join: duplicate batch keys never fan preimages out
                 pre = touched_read.join(
-                    _bc(updates.select(*key_cols), n_src, len(key_cols)),
-                    key_cols, "left_semi"
-                ).persist()
-                cached.append(pre)
-                ch_pre = pre.withColumn(
-                    "_change_type", F.lit("update_preimage")
+                    _bc(batch.select(*key_cols), n, nk), key_cols, "left_semi"
                 )
-                # post-images and inserts are both plain update rows —
-                # ONE membership join (matched key -> postimage, else
-                # insert) instead of a semi + an anti, and the matched-
-                # key side (≤ batch keys) broadcast-hints on the
-                # measured count: zero exchanges on the batch side
-                # distinct: the table may legitimately hold duplicate
-                # keys — a left join against duplicated match keys
-                # would fan each update row out (the semi/anti pair it
-                # replaces never did)
-                upd_keys = pre.select(*key_cols).distinct().withColumn(
-                    "__m", F.lit(True)
+                label = F.lit("update_preimage")
+            else:
+                # one event per key (latest-wins): one label per preimage
+                pre = touched_read.join(
+                    _bc(batch.select(*key_cols, op_col), n, nk + 1),
+                    key_cols, "inner",
                 )
-                ch_rest = (
-                    updates.join(
-                        _bc(upd_keys, n_src, len(key_cols) + 1),
-                        key_cols, "left_outer",
-                    )
-                    .withColumn(
-                        "_change_type",
-                        F.when(
-                            F.coalesce(F.col("__m"), F.lit(False)),
-                            F.lit("update_postimage"),
-                        ).otherwise(F.lit("insert")),
-                    )
-                    .drop("__m")
+                label = F.when(
+                    F.col(op_col) == delete_op, F.lit("delete")
+                ).otherwise(F.lit("update_preimage"))
+            pre = pre.persist()
+            cached.append(pre)
+            ch_pre = pre.select(
+                *[F.col(c) for c in pre.columns if c != op_col],
+                label.alias("_change_type"),
+            )
+            # post-images and inserts are both plain upsert rows — ONE
+            # membership join (matched key -> postimage, else insert),
+            # broadcast-hinted on the measured count: zero exchanges on
+            # the batch side. distinct: the table may hold duplicate
+            # keys, and a dup'd build side would fan upsert rows out
+            upd_keys = pre.select(*key_cols).distinct().withColumn(
+                "__m", F.lit(True)
+            )
+            ch_rest = (
+                upserts.join(_bc(upd_keys, n, nk + 1), key_cols, "left_outer")
+                .withColumn(
+                    "_change_type",
+                    F.when(
+                        F.coalesce(F.col("__m"), F.lit(False)),
+                        F.lit("update_postimage"),
+                    ).otherwise(F.lit("insert")),
                 )
-                cdf_frame = ch_pre.unionByName(
-                    ch_rest, allowMissingColumns=True
-                )
-        else:
-            merged = upd_checked
-            if changefeed:
-                cdf_frame = updates.withColumn(
-                    "_change_type", F.lit("insert")
-                )
+                .drop("__m")
+            )
+            cdf_frame = ch_pre.unionByName(ch_rest, allowMissingColumns=True)
         v = _commit(
             spark,
             root,
             merged,
-            "upsert",
+            op,
             seg["stats_cols"],
             removes=_rm(touched),
             removed_rows=_nrows(touched),
             removed_dv=_dv_debit(touched),
+            extra=extra,
             prev=seg,
             cdf=cdf_frame,
             pre_checked=True,
@@ -2532,7 +2546,7 @@ def commit_upsert(
             conflict={
                 "kind": "pruned",
                 "read": _rm(touched),
-                "key_col": _phys_name(seg, prune_col),
+                "key_col": _phys_name(seg, key_cols[0]),
                 "lo": lo,
                 "hi": hi,
             },
@@ -2540,7 +2554,44 @@ def commit_upsert(
     finally:
         for c in cached:
             c.unpersist()
-    return v, len(touched), n_kept
+    return v, len(touched), seg["total_files"] - len(touched)
+
+
+def commit_upsert(
+    spark: SparkSession,
+    root: str,
+    updates: DataFrame,
+    key_col: str | list[str],
+    changefeed: bool = False,
+) -> tuple[int, int, int]:
+    """Copy-on-write MERGE by key — one column or a COMPOSITE list
+    (file pruning on the FIRST; like :func:`commit_merge`): rows of
+    ``updates`` replace the table rows with the same key and insert
+    otherwise. Only files whose [min,max] range of the prune key
+    intersects the update's key range are rewritten; every other file
+    carries over by reference (see :func:`_keyed_rewrite`). Returns
+    (new_version, files_rewritten, files_carried).
+
+    ``changefeed=True`` records change rows for :func:`table_changes`
+    (``insert`` / ``update_preimage`` / ``update_postimage`` — an
+    upsert never deletes); see :func:`apply_changes` for the capture
+    contract."""
+    key_cols = [key_col] if isinstance(key_col, str) else list(key_col)
+    res = _keyed_table(spark, root, key_cols[0])
+    _require_full_rows(_manifest_schema(res["seg"]), updates.columns, "updates")
+    # the bounds pass also counts the batch (free in the same agg): a
+    # MEASURED row count lets every downstream join of the batch's keys
+    # broadcast-hint deliberately (guide §3.1) instead of shuffling the
+    # touched-file side on an optimizer estimate
+    bounds = updates.agg(
+        F.min(key_cols[0]).alias("lo"), F.max(key_cols[0]).alias("hi"),
+        F.count(F.lit(1)).alias("n"),
+    ).collect()[0]
+    return _keyed_rewrite(
+        spark, root, res, updates, key_cols, int(bounds["n"]),
+        _bound(bounds["lo"]), _bound(bounds["hi"]), "upsert",
+        changefeed=changefeed,
+    )
 
 
 def _touched_by_predicate(
@@ -3236,16 +3287,9 @@ def commit_merge(
             raise ValueError("not_matched clauses can only insert")
     key_cols = [key_col] if isinstance(key_col, str) else list(key_col)
     prune_col = key_cols[0]
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
-    res = _resolve(spark, root, cur)
+    res = _keyed_table(spark, root, prune_col)
     seg = res["seg"]
-    if _phys_name(seg, prune_col) not in seg["stats_cols"]:
-        raise ValueError(
-            f"{prune_col} has no manifest stats (stats_cols="
-            f"{seg['stats_cols']}); re-create the table with it"
-        )
+    cur = seg["version"]
     schema = _manifest_schema(seg)
     # the merge machinery stages clause-indexed __-prefixed columns on
     # both frames — a user column by any such name silently corrupts
@@ -4024,13 +4068,13 @@ def apply_changes(
     the trailing columns make the winner total-order deterministic
     when a key carries tied timestamps.
 
-    File-level pruning as commit_upsert: only files whose index
-    [min,max] of ``key_col`` intersects the CHANGE KEY RANGE are
-    rewritten (survivors anti-join + surviving upserts); everything
-    else carries by reference. A delete whose key hits no file is a
-    no-op, an upsert for an absent key is an insert — no read-first
-    existence check, so the apply is one bounded job regardless of
-    table size. Returns (new_version, n_upserts, n_deletes).
+    The latest events go through :func:`_keyed_rewrite`, as
+    commit_upsert's batch does: only files whose [min,max] of
+    ``key_col`` intersects the CHANGE KEY RANGE are rewritten. A
+    delete whose key hits no file is a no-op, an upsert for an absent
+    key is an insert — no read-first existence check, so the apply is
+    one bounded job regardless of table size. Returns (new_version,
+    n_upserts, n_deletes).
 
     ``changefeed=True`` additionally records the commit's CHANGE ROWS
     (Delta CDF semantics: ``insert`` / ``update_preimage`` /
@@ -4038,23 +4082,14 @@ def apply_changes(
     touched files, a delete of an absent key emits nothing) for
     :func:`table_changes` — captured here, at merge time, because the
     merge is the only moment the pre/post split is known without
-    diffing snapshots. Cost: the touched-file read is persisted (it
-    feeds survivors AND preimages — one scan) plus one bounded write
-    of O(change batch) rows."""
+    diffing snapshots."""
     from pyspark.sql import Window
 
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
-    res = _resolve(spark, root, cur)
-    seg = res["seg"]
-    if _phys_name(seg, key_col) not in seg["stats_cols"]:
-        raise ValueError(
-            f"{key_col} has no manifest stats (stats_cols="
-            f"{seg['stats_cols']})"
-        )
+    res = _keyed_table(spark, root, key_col)
     payload_cols = [c for c in changes.columns if c not in (ts_col, op_col)]
-    _require_full_rows(_manifest_schema(seg), payload_cols, "change payload")
+    _require_full_rows(
+        _manifest_schema(res["seg"]), payload_cols, "change payload"
+    )
     w = Window.partitionBy(key_col).orderBy(
         *(
             F.desc(c)
@@ -4066,127 +4101,28 @@ def apply_changes(
         changes.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn", ts_col)
-    )
-    # one pass over the (small) change batch: key bounds + op counts
-    latest = latest.persist()
-    agg = latest.agg(
-        F.min(key_col).alias("lo"),
-        F.max(key_col).alias("hi"),
-        F.sum((F.col(op_col) == delete_op).cast("bigint")).alias("nd"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    lo, hi = _bound(agg["lo"]), _bound(agg["hi"])
-    n_deletes = int(agg["nd"] or 0)
-    n_upserts = int(agg["n"]) - n_deletes
-    upserts = latest.filter(F.col(op_col) != delete_op).select(payload_cols)
-    # CHECK the CHANGED leg only (survivors passed at original write;
-    # _commit skips its full-frame pass via pre_checked); CDF copies
-    # stay unchained — the data write runs first and aborts
-    cons = seg.get("constraints") or {}
-    ups_checked = _enforce_constraints(upserts, cons) if cons else upserts
-    cached = [latest]
+    ).persist()
     try:
-        # hybrid pruning (same path as commit_upsert/read_version):
-        # driver-side entry filter below a checkpoint — a CDC
-        # micro-batch must not pay a createDataFrame+collect job to
-        # filter a handful of in-memory entries; index-DataFrame
-        # _prune above it (lo=None → all files)
-        touched = _pruned_entries(spark, root, res, key_col, lo, hi,
-                                  slim=True)
-        cdf_frame = None
-        if touched:
-            # manifest-schema read + allowMissingColumns: same widen-
-            # only schema-evolution contract as commit_upsert;
-            # _snapshot_read applies any deletion vectors
-            touched_read = _snapshot_read(spark, root, seg, touched)
-            if changefeed:
-                # one scan feeds survivors AND preimages
-                touched_read = touched_read.persist()
-                cached.append(touched_read)
-            survivors = touched_read.join(
-                # latest is already one-row-per-key (row_number = 1);
-                # and the anti-join is existence anyway — no distinct
-                _bc(latest.select(key_col), int(agg["n"])),
-                key_col, "left_anti"
-            )
-            merged = survivors.unionByName(
-                ups_checked, allowMissingColumns=True
-            )
-            if changefeed:
-                pre = touched_read.join(
-                    _bc(latest.select(key_col, op_col), int(agg["n"]), 2),
-                    key_col, "inner"
-                ).persist()
-                cached.append(pre)
-                ch_pre = pre.select(
-                    *[F.col(c) for c in pre.columns if c != op_col],
-                    F.when(F.col(op_col) == delete_op, F.lit("delete"))
-                    .otherwise(F.lit("update_preimage"))
-                    .alias("_change_type"),
-                )
-                # post-images and inserts are both plain upsert rows —
-                # ONE membership join against the DISTINCT matched keys
-                # (the table may hold duplicate keys; a dup'd build
-                # side would fan rows out where the semi/anti pair it
-                # replaces never did), broadcast-hinted on the measured
-                # batch count: the batch side never shuffles
-                upd_keys = pre.select(key_col).distinct().withColumn(
-                    "__m", F.lit(True)
-                )
-                ch_rest = (
-                    upserts.join(
-                        _bc(upd_keys, int(agg["n"]), 2),
-                        key_col, "left_outer",
-                    )
-                    .withColumn(
-                        "_change_type",
-                        F.when(
-                            F.coalesce(F.col("__m"), F.lit(False)),
-                            F.lit("update_postimage"),
-                        ).otherwise(F.lit("insert")),
-                    )
-                    .drop("__m")
-                )
-                cdf_frame = ch_pre.unionByName(
-                    ch_rest, allowMissingColumns=True
-                )
-        else:
-            merged = ups_checked
-            if changefeed:
-                # empty touch set: every non-delete is an insert,
-                # every delete hit an absent key (no change row)
-                cdf_frame = upserts.withColumn(
-                    "_change_type", F.lit("insert")
-                )
-        v = _commit(
-            spark,
-            root,
-            merged,
-            "cdc",
-            seg["stats_cols"],
-            pre_checked=True,
-            removes=_rm(touched),
-            removed_rows=_nrows(touched),
-            removed_dv=_dv_debit(touched),
-            extra=extra_meta,
-            prev=seg,
-            cdf=cdf_frame,
-            # same key-pruned re-base contract as commit_upsert
-            conflict={
-                "kind": "pruned",
-                "read": _rm(touched),
-                "key_col": _phys_name(seg, key_col),
-                "lo": lo,
-                "hi": hi,
-            },
-        )
+        # one pass over the (small) change batch: key bounds + op counts
+        agg = latest.agg(
+            F.min(key_col).alias("lo"),
+            F.max(key_col).alias("hi"),
+            F.sum((F.col(op_col) == delete_op).cast("bigint")).alias("nd"),
+            F.count(F.lit(1)).alias("n"),
+        ).collect()[0]
+        v = _keyed_rewrite(
+            spark, root, res, latest, [key_col], int(agg["n"]),
+            _bound(agg["lo"]), _bound(agg["hi"]), "cdc",
+            extra=extra_meta, changefeed=changefeed,
+            delete=(op_col, delete_op),
+        )[0]
     finally:
         # unpersist on failure too: a long-lived streaming driver
         # calling this per micro-batch would otherwise leak one cached
         # frame per commit conflict / write failure
-        for c in cached:
-            c.unpersist()
-    return v, n_upserts, n_deletes
+        latest.unpersist()
+    n_deletes = int(agg["nd"] or 0)
+    return v, int(agg["n"]) - n_deletes, n_deletes
 
 
 def optimize(
@@ -4218,8 +4154,7 @@ def optimize(
     as a log-fold barrier like a checkpoint.
 
     Old versions stay time-travelable — compaction is a new snapshot,
-    never an in-place rewrite (the versioned twin of
-    storage.compact_files, which overwrites plain directories).
+    never an in-place rewrite.
     Returns (new_version, files_before, files_after)."""
     import math as _math
 

@@ -396,55 +396,6 @@ def run_to_postgres_sink(
     q.awaitTermination()
 
 
-def run_cdc_upsert_sink(
-    stream_df: DataFrame,
-    target_path: str,
-    key_cols: list[str],
-    partition_col: str,
-    order_col: str | None = None,
-) -> None:
-    """CDC apply: stream -> foreachBatch -> partition-pruned
-    copy-on-write MERGE (operators/storage.merge_upsert). Each
-    micro-batch's rows upsert into the parquet dimension by key; only
-    partitions the batch touches are rewritten, so the amortized write
-    cost tracks the CHANGE rate, not the table size — the standard CDC
-    landing pattern without a table format. Within a micro-batch one
-    row per key survives: the max of ``order_col`` wins when given
-    (the CDC sequence/LSN column), otherwise an arbitrary row
-    (dropDuplicates) — without this dedup, duplicate keys in one batch
-    would BOTH insert and permanently break the one-row-per-key
-    contract. Runs with availableNow to completion."""
-    from pyspark.sql import Window
-
-    from amadeus_spark.operators.storage import merge_upsert
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        if order_col is not None:
-            # the CDC sequence/LSN orders the batch but is not stored:
-            # survivors read from the target don't carry it, so the
-            # merge union requires dropping it here
-            w = Window.partitionBy(*key_cols).orderBy(F.desc(order_col))
-            batch_df = (
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn", order_col)
-            )
-        else:
-            batch_df = batch_df.dropDuplicates(key_cols)
-        merge_upsert(spark, target_path, batch_df, key_cols, partition_col)
-
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", target_path.rstrip("/") + "__ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def run_cdc_versioned_sink(
     stream_df: DataFrame,
     root: str,

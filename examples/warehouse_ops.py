@@ -1,10 +1,10 @@
-"""Warehouse-operations tour — the table-maintenance layer on plain
-parquet, end-to-end:
+"""Warehouse-operations tour — the table-maintenance layer, end-to-end:
 
   1. land a partitioned fact table, Z-ordered for 2-D data skipping
   2. validate it with a declarative expectation suite
-  3. apply a CDC-style upsert (only touched partitions rewrite)
-  4. compact the fragments the upsert left behind
+  3. adopt it as a versioned table (no data rewrite) and apply a
+     CDC-style upsert (only files whose key range it hits rewrite)
+  4. compact the fragments the upsert left behind, as a new version
   5. build an SCD2 dimension from the events change log and join facts
      to the version current at their timestamp (temporal join)
 
@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from amadeus_spark import get_spark
 from amadeus_spark.functions import quality
-from amadeus_spark.operators import storage
+from amadeus_spark.operators import storage, versioned
 from amadeus_spark.operators.joins import temporal_join
 from amadeus_spark.operators.scd import scd2_from_changelog
 from amadeus_spark.tables import load_events
@@ -62,18 +62,28 @@ def main(sf_dir: str, work: str) -> None:
     for r in report.collect():
         print("  ", r.check, r.violations)
 
-    # 3. CDC upsert: bump two orders; only their partitions rewrite
+    # 3. adopt the landed files as version 0 of a versioned table (hard
+    # links, footer stats harvested), then upsert: bump two orders; only
+    # the files whose o_orderkey range holds them rewrite
+    table = os.path.join(work, "orders_table")
+    versioned.convert_to_versioned(
+        spark, table, fact,
+        stats_cols=["o_orderkey"], partition_cols=["o_orderstatus"],
+    )
     updates = (
-        spark.read.parquet(fact)
+        versioned.read_version(spark, table)
+        .orderBy("o_orderkey")
         .limit(2)
         .withColumn("o_totalprice", F.col("o_totalprice") + 1.0)
     )
-    storage.merge_upsert(
-        spark, fact, updates, ["o_orderkey"], "o_orderstatus"
+    _, rewritten, carried = versioned.commit_upsert(
+        spark, table, updates, "o_orderkey"
     )
+    print(f"upsert: {rewritten} files rewritten, {carried} carried")
 
-    # 4. compact the small files the upsert produced
-    before, after = storage.compact_files(spark, fact, target_mb=64)
+    # 4. compact the small files into a new version (the old one stays
+    # readable by time travel)
+    _, before, after = versioned.optimize(spark, table, target_mb=64)
     print(f"compaction: {before} files -> {after}")
 
     # 5. SCD2 dimension from events + temporal join

@@ -8,7 +8,6 @@ Usage: SPARK_GRAFT_PROBE="merge_into" python scripts/job_ledger.py
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
@@ -87,7 +86,6 @@ def main() -> None:
     for act in ("parquet", "save", "json", "csv"):
         _wrap(DataFrameWriter, act, njobs)
 
-    out = {}
     for name in names:
         fn = queries[name]
         # warm
@@ -107,13 +105,6 @@ def main() -> None:
         ledger = list(LEDGER)
         acc_j = sum(e["jobs"] for e in ledger)
         acc_s = sum(e["s"] for e in ledger)
-        out[name] = {
-            "total_s": round(total_s, 3),
-            "total_jobs": total_j,
-            "ledger_jobs": acc_j,
-            "ledger_s": round(acc_s, 3),
-            "actions": ledger,
-        }
         print(f"== {name}: {total_j} jobs / {total_s:.2f}s "
               f"(ledger: {acc_j} jobs / {acc_s:.2f}s across "
               f"{len(ledger)} actions)")
@@ -137,8 +128,6 @@ def main() -> None:
                                 )
                     print(f"        job {j}: {' | '.join(names)}")
                 jid += e["jobs"]
-    with open("/tmp/job_ledger.json", "w") as f:
-        json.dump(out, f, indent=1)
 
 
 if __name__ == "__main__":

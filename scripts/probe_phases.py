@@ -67,8 +67,6 @@ def main() -> None:
             "jobs": _njobs(spark) - j0,
         }
         print(name, json.dumps(out[name]), flush=True)
-    with open("/tmp/probe_phases.json", "w") as f:
-        json.dump(out, f, indent=1)
 
 
 if __name__ == "__main__":

@@ -103,9 +103,8 @@ def _rows(rows) -> set[tuple]:
 def test_duplicate_ids_emit_no_self_pairs(spark, duck):
     """With an id present twice, the bucket lists hold it twice; the
     shared pair guard must keep (d, d) out, as the oracles' ``a < b``
-    does. Compared as sets: with_minhash groups a duplicated id into one
-    signature row where the MinHash oracle keeps two, so that kernel's
-    oracle repeats each of the id's pairs."""
+    does. Compared as sets: the embedding oracle keeps one row per
+    input row, so it repeats each of the duplicated id's pairs."""
     cases = [
         (
             "documents",
@@ -132,6 +131,43 @@ def test_duplicate_ids_emit_no_self_pairs(spark, duck):
         got = _rows(build(df).collect())
         assert got and all(r[0] != r[1] for r in got), table
         assert got == _rows(duck.sql(oracle(dup_table)).fetchall()), (table, ids)
+
+
+def test_duplicate_id_with_different_texts_is_one_document(spark, duck):
+    """An id present twice with DIFFERENT texts is one document in both
+    engines: its MinHash covers the union of both texts' shingle hashes,
+    its SimHash the concatenated token-hash multiset. Id ``a`` of the
+    first oracle pair also gets the text of a document ``c`` from a
+    pair that does not involve it."""
+    cases = [
+        (
+            lambda df: dedup.minhash_lsh_pairs(df, "doc_id", "text", 0.8),
+            lambda t: dedup.minhash_lsh_oracle(t, "doc_id", "text", 0.8),
+        ),
+        (
+            lambda df: dedup.simhash_pairs(df, "doc_id", "text", 8, 200),
+            lambda t: dedup.simhash_oracle(t, "doc_id", "text", 8, 200),
+        ),
+    ]
+    src = spark.read.parquet(os.path.join(SF_ORACLE, "documents.parquet"))
+    for build, oracle in cases:
+        pairs = duck.sql(oracle("documents")).fetchall()
+        a, b = pairs[0][:2]
+        c = next(p[0] for p in pairs if {p[0], p[1]}.isdisjoint({a, b}))
+        dup = src.unionByName(
+            src.where(F.col("doc_id") == c).withColumn(
+                "doc_id", F.lit(a).cast(src.schema["doc_id"].dataType)
+            )
+        )
+        duck.execute(
+            "CREATE OR REPLACE VIEW documents_retext AS SELECT * FROM documents"
+            f" UNION ALL SELECT * REPLACE (CAST({a} AS BIGINT) AS doc_id)"
+            f" FROM documents WHERE doc_id = {c}"
+        )
+        got = sorted(build(dup).collect())
+        want = duck.sql(oracle("documents_retext")).fetchall()
+        assert got and all(r[0] != r[1] for r in got)
+        assert sorted(map(tuple, got)) == sorted(want), (a, c)
 
 
 # ---------------------------------------------------------- schema cache

@@ -1,0 +1,169 @@
+"""The keyed copy-on-write rewrite shared by ``commit_upsert`` and
+``apply_changes`` (versioned._keyed_rewrite): Spark jobs per call, parity
+between the two entry points, and the batch shapes with no usable key
+(empty, all-NULL) that must touch no file."""
+
+from __future__ import annotations
+
+import pytest
+
+from amadeus_spark.operators import versioned as V
+
+
+@pytest.fixture()
+def root(tmp_path):
+    return str(tmp_path / "vt")
+
+
+def _next_job(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _four_file_table(spark, root):
+    """400 rows in 4 files with disjoint ``k`` ranges [0,100) .. [300,400)."""
+    V.commit_append(
+        spark, root,
+        spark.range(0, 400, 1, 4).selectExpr(
+            "id AS k", "id % 3 AS g", "CAST(id AS string) AS v"
+        ),
+        ["k"],
+    )
+    assert len(V._live_entries(spark, root, 0)) == 4
+
+
+def _batch(spark, ops: bool = False):
+    """35 rows, k in [380, 415): 20 updates of the last file, 15 inserts.
+    With ``ops``, every fifth key is a delete event."""
+    df = spark.range(380, 415).selectExpr(
+        "id AS k", "id % 3 AS g", "concat('new', CAST(id AS string)) AS v"
+    )
+    if ops:
+        df = df.selectExpr(
+            "*", "1L AS ts", "CASE WHEN k % 5 = 0 THEN 'D' ELSE 'U' END AS op"
+        )
+    return df
+
+
+#: Spark jobs one call launches on a fresh 4-file table (bounds pass,
+#: commit write, manifest/stat bookkeeping; the changefeed adds the
+#: persisted touched-file read, preimages and the change-row write)
+JOB_BUDGETS = {
+    ("upsert", False): 4,
+    ("upsert", True): 11,
+    ("upsert_composite", False): 4,
+    ("upsert_composite", True): 11,
+    ("cdc", False): 5,
+    ("cdc", True): 12,
+}
+
+
+@pytest.mark.parametrize("call,cf", sorted(JOB_BUDGETS))
+def test_jobs_per_keyed_rewrite(spark, root, call, cf):
+    _four_file_table(spark, root)
+    j0 = _next_job(spark)
+    if call == "cdc":
+        V.apply_changes(
+            spark, root, _batch(spark, ops=True), "k", "ts", changefeed=cf
+        )
+    else:
+        key = "k" if call == "upsert" else ["k", "g"]
+        V.commit_upsert(spark, root, _batch(spark), key, changefeed=cf)
+    assert _next_job(spark) - j0 == JOB_BUDGETS[(call, cf)]
+
+
+def _rows(df):
+    return sorted(map(str, df.collect()))
+
+
+def _feed(spark, root, v):
+    return _rows(
+        V.table_changes(spark, root, v, v).drop("_commit_timestamp")
+    )
+
+
+def test_upsert_equals_delete_free_apply_changes(spark, tmp_path, monkeypatch):
+    """``commit_upsert(rows)`` and ``apply_changes(rows + ts/op)`` with no
+    delete event: same snapshot, same change rows, same conflict footprint."""
+    roots = {m: str(tmp_path / m) for m in ("upsert", "cdc")}
+    batch = _batch(spark)
+    changes = batch.selectExpr("*", "1L AS ts", "'U' AS op")
+    run = {
+        "upsert": lambda r: V.commit_upsert(
+            spark, r, batch, "k", changefeed=True
+        ),
+        "cdc": lambda r: V.apply_changes(
+            spark, r, changes, "k", "ts", changefeed=True
+        ),
+    }
+    for r in roots.values():
+        _four_file_table(spark, r)
+
+    # the conflict footprint, taken on ONE table so file identities match
+    conflicts = {}
+    real = V._commit
+
+    class _Abort(Exception):
+        pass
+
+    def capture(*a, **k):
+        conflicts[name] = k["conflict"]
+        raise _Abort
+
+    monkeypatch.setattr(V, "_commit", capture)
+    for name, fn in run.items():
+        with pytest.raises(_Abort):
+            fn(roots["upsert"])
+    monkeypatch.setattr(V, "_commit", real)
+    assert conflicts["upsert"] == conflicts["cdc"]
+    assert conflicts["upsert"]["kind"] == "pruned"
+    assert len(conflicts["upsert"]["read"]) == 1
+
+    out = {name: fn(roots[name]) for name, fn in run.items()}
+    assert out["upsert"][0] == out["cdc"][0] == 1
+    assert _rows(V.read_version(spark, roots["upsert"])) == _rows(
+        V.read_version(spark, roots["cdc"])
+    )
+    assert _feed(spark, roots["upsert"], 1) == _feed(spark, roots["cdc"], 1)
+    kinds = {
+        r["_change_type"]
+        for r in V.table_changes(spark, roots["cdc"], 1, 1).collect()
+    }
+    assert kinds == {"update_preimage", "update_postimage", "insert"}
+
+
+_NO_KEY = {
+    "empty": [],
+    "null_key": [(None, 7, "nullkey")],
+}
+
+
+@pytest.mark.parametrize("entry", ["upsert", "cdc"])
+@pytest.mark.parametrize("shape", sorted(_NO_KEY))
+def test_keyless_batch_touches_no_file(spark, root, entry, shape):
+    """A batch with no non-NULL key (empty, or only NULL keys) can match
+    no row: every file carries, and its rows land as pure inserts."""
+    _four_file_table(spark, root)
+    before = _rows(V.read_version(spark, root))
+    old_files = {(e["dir"], e["path"]) for e in V._live_entries(spark, root, 0)}
+    batch = spark.createDataFrame(_NO_KEY[shape], "k long, g long, v string")
+    if entry == "upsert":
+        v, rewritten, carried = V.commit_upsert(
+            spark, root, batch, "k", changefeed=True
+        )
+        assert (rewritten, carried) == (0, 4)
+    else:
+        v, n_up, n_del = V.apply_changes(
+            spark, root, batch.selectExpr("*", "1L AS ts", "'U' AS op"),
+            "k", "ts", changefeed=True,
+        )
+        assert (n_up, n_del) == (len(_NO_KEY[shape]), 0)
+    assert v == 1
+    live = {(e["dir"], e["path"]) for e in V._live_entries(spark, root, v)}
+    assert old_files <= live
+    assert _rows(V.read_version(spark, root)) == sorted(
+        before + _rows(batch)
+    )
+    feed = V.table_changes(spark, root, v, v)
+    assert {r["_change_type"] for r in feed.collect()} <= {"insert"}
+    assert feed.count() == len(_NO_KEY[shape])
+    assert _rows(feed.select("k", "g", "v")) == _rows(batch)

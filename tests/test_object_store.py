@@ -114,87 +114,6 @@ def _keys(client, bucket: str, prefix: str) -> set[str]:
     }
 
 
-def test_arrow_swap_partitions_on_object_store(s3_server):
-    """merge_upsert's object-store swap (arrow_swap_partitions) against
-    emulated S3: touched partitions replaced, new partitions created,
-    untouched partitions byte-identical, staging removed only at the
-    end — all mutation through the store's API."""
-    from amadeus_spark.operators import storage
-
-    port = s3_server
-    client = _client(port)
-    bucket = "swap-bucket"
-    client.create_bucket(Bucket=bucket)
-    _put_all(
-        client,
-        bucket,
-        {
-            "table/part=a/old.parquet": b"OLD-A",
-            "table/part=b/keep.parquet": b"KEEP-B",
-            "table.__merge_tmp__/part=a/new.parquet": b"NEW-A",
-            "table.__merge_tmp__/part=c/new.parquet": b"NEW-C",
-        },
-    )
-    q = f"?endpoint_override=127.0.0.1:{port}&scheme=http&region=us-east-1"
-    swapped = storage.arrow_swap_partitions(
-        f"s3://{KEY_ID}:{SECRET}@{bucket}/table.__merge_tmp__{q}",
-        f"s3://{KEY_ID}:{SECRET}@{bucket}/table{q}",
-        "part",
-    )
-    assert swapped == ["part=a", "part=c"]
-    assert _keys(client, bucket, "table/") == {
-        "table/part=a/new.parquet",
-        "table/part=b/keep.parquet",
-        "table/part=c/new.parquet",
-    }
-    body = client.get_object(Bucket=bucket, Key="table/part=a/new.parquet")
-    assert body["Body"].read() == b"NEW-A"
-    assert _keys(client, bucket, "table.__merge_tmp__") == set()
-
-
-def test_arrow_swap_failure_preserves_staging(s3_server, monkeypatch):
-    """A swap dying part-way must leave the staging prefix intact and
-    name it in the error — on an object store that staged copy is the
-    only copy of the not-yet-swapped merged partitions (the same
-    recovery contract as the Hadoop-path test in test_storage)."""
-    from amadeus_spark.operators import storage
-
-    port = s3_server
-    client = _client(port)
-    bucket = "swap-fail-bucket"
-    client.create_bucket(Bucket=bucket)
-    _put_all(
-        client,
-        bucket,
-        {
-            "t/part=a/old.parquet": b"OLD-A",
-            "t.__merge_tmp__/part=a/new.parquet": b"NEW-A",
-            "t.__merge_tmp__/part=c/new.parquet": b"NEW-C",
-        },
-    )
-    real_copy = storage._arrow_copy_dir
-    calls = {"n": 0}
-
-    def flaky(fs, src, dst):
-        calls["n"] += 1
-        if calls["n"] >= 2:
-            raise IOError("simulated mid-swap network failure")
-        real_copy(fs, src, dst)
-
-    monkeypatch.setattr(storage, "_arrow_copy_dir", flaky)
-    q = f"?endpoint_override=127.0.0.1:{port}&scheme=http&region=us-east-1"
-    with pytest.raises(RuntimeError, match="remain staged"):
-        storage.arrow_swap_partitions(
-            f"s3://{KEY_ID}:{SECRET}@{bucket}/t.__merge_tmp__{q}",
-            f"s3://{KEY_ID}:{SECRET}@{bucket}/t{q}",
-            "part",
-        )
-    # the unswapped partition's merged data still lives in staging
-    assert "t.__merge_tmp__/part=c/new.parquet" in _keys(
-        client, bucket, "t.__merge_tmp__"
-    )
-
-
 def test_object_store_read_is_streamed_not_buffered(s3_server):
     """The open returns a STREAM (range/chunked reads), not a whole-
     object buffer: parse a multi-record object directly off the wire

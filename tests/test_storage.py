@@ -122,165 +122,6 @@ def test_zorder_write_improves_two_dim_skipping(spark, tmp_path):
     assert spark.read.parquet(zdir).count() == li.count()
 
 
-def test_merge_upsert_rewrites_only_touched_partitions(spark, tmp_path):
-    """MERGE semantics (update + insert) AND the physical guarantee:
-    files in partitions the update doesn't touch are byte-identical
-    afterwards (same paths, same mtimes) — the 1%-update-rewrites-1%
-    property that makes copy-on-write viable at scale."""
-    import glob as _glob
-    import os as _os
-
-    target = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0), (4, "c", 40.0)],
-        "id long, part string, val double",
-    )
-    base.write.partitionBy("part").parquet(target)
-    before = {
-        f: _os.path.getmtime(f)
-        for f in _glob.glob(f"{target}/part=*/*.parquet")
-    }
-
-    updates = spark.createDataFrame(
-        [(2, "a", 99.0), (5, "a", 50.0)], "id long, part string, val double"
-    )
-    storage.merge_upsert(spark, target, updates, ["id"], "part")
-
-    got = {
-        (r.id, r.part, r.val) for r in spark.read.parquet(target).collect()
-    }
-    assert got == {
-        (1, "a", 10.0), (2, "a", 99.0), (5, "a", 50.0),
-        (3, "b", 30.0), (4, "c", 40.0),
-    }
-    after = {
-        f: _os.path.getmtime(f)
-        for f in _glob.glob(f"{target}/part=*/*.parquet")
-    }
-    untouched_before = {f: m for f, m in before.items() if "/part=a/" not in f}
-    untouched_after = {f: m for f, m in after.items() if "/part=a/" not in f}
-    assert untouched_before == untouched_after  # b, c never rewritten
-    assert all("/part=a/" not in f or f not in before for f in after
-               if "/part=a/" in f)  # a's files are new
-
-
-def test_compact_files_binpacks_and_preserves_rows(spark, tmp_path):
-    d = str(tmp_path / "frag")
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    li.repartition(40).write.parquet(d)  # fragment: 40 tiny files
-    n = li.count()
-    before, after = storage.compact_files(spark, d, target_mb=64)
-    assert before >= 40 and after <= 2
-    assert spark.read.parquet(d).count() == n
-
-    # sorted compaction keeps clustering: per-file l_orderkey ranges
-    # must not all span the whole domain
-    before, after = storage.compact_files(
-        spark, d, target_mb=1, sort_cols=["l_orderkey"]
-    )
-    import pyarrow.parquet as pq
-    import os as _os
-
-    spans = []
-    for f in _os.listdir(d):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(_os.path.join(d, f)).metadata
-        mins, maxs = [], []
-        for i in range(md.num_row_groups):
-            rg = md.row_group(i)
-            for j in range(rg.num_columns):
-                c = rg.column(j)
-                if c.path_in_schema == "l_orderkey" and c.statistics:
-                    mins.append(c.statistics.min)
-                    maxs.append(c.statistics.max)
-        if mins:
-            spans.append((min(mins), max(maxs)))
-    if len(spans) > 1:
-        spans.sort()
-        overlaps = sum(
-            1 for (a, b), (c, _) in zip(spans, spans[1:]) if c < b
-        )
-        assert overlaps == 0  # disjoint ranges -> pruning survives
-    assert spark.read.parquet(d).count() == n
-
-
-def test_merge_upsert_swap_uses_filesystem_api(spark, tmp_path, monkeypatch):
-    """The staged swap must route through the Hadoop FileSystem API so
-    the identical code runs on hdfs:///s3a:// (reference posture:
-    amadeus-aws/src/file.rs:227 — all mutation through the store's own
-    API). Pin it behaviorally: poison os.rename/shutil.rmtree for the
-    duration; a regression back to local-fs calls raises instantly."""
-    import os as _os
-    import shutil as _shutil
-
-    def _boom(*a, **k):
-        raise AssertionError("local-fs mutation API used in merge_upsert")
-
-    target = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0)], "id long, part string, val double"
-    ).write.partitionBy("part").parquet(target)
-    updates = spark.createDataFrame(
-        [(1, "a", 9.0)], "id long, part string, val double"
-    )
-    monkeypatch.setattr(_os, "rename", _boom)
-    monkeypatch.setattr(_os, "replace", _boom)
-    monkeypatch.setattr(_shutil, "rmtree", _boom)
-    storage.merge_upsert(spark, target, updates, ["id"], "part")
-    got = {(r.id, r.part, r.val) for r in spark.read.parquet(target).collect()}
-    assert got == {(1, "a", 9.0), (2, "b", 2.0)}
-    assert not _os.path.isdir(target + ".__merge_tmp__")  # staging cleaned
-
-
-def test_merge_upsert_failed_swap_preserves_staging(spark, tmp_path):
-    """If the swap dies part-way, the staging dir must SURVIVE and the
-    error must name it — that tmp copy is the only copy of a partition
-    whose target dir was already dropped (the r5 advice's unrecoverable-
-    loss window)."""
-    import pytest as _pytest
-
-    target = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, "a", 1.0)], "id long, part string, val double"
-    ).write.partitionBy("part").parquet(target)
-    updates = spark.createDataFrame(
-        [(1, "a", 9.0)], "id long, part string, val double"
-    )
-    import os as _os
-
-    # inject a realistic failure through the FS seam: rename returning
-    # False is exactly what HDFS/S3A report for a lost race or missing
-    # parent (the Hadoop API's documented failure mode, not an exception)
-    class _RenameFails:
-        def __init__(self, fs):
-            self._fs = fs
-
-        def listStatus(self, p):  # noqa: N802 — Hadoop API casing
-            return self._fs.listStatus(p)
-
-        def exists(self, p):
-            return self._fs.exists(p)
-
-        def delete(self, p, recursive):
-            return self._fs.delete(p, recursive)
-
-        def rename(self, src, dst):
-            return False
-
-    real = storage._hadoop_fs
-    tmp_dir = target + ".__merge_tmp__"
-    try:
-        storage._hadoop_fs = lambda s, p: (
-            lambda fs_path: (_RenameFails(fs_path[0]), fs_path[1])
-        )(real(s, p))
-        with _pytest.raises(RuntimeError, match="remain staged"):
-            storage.merge_upsert(spark, target, updates, ["id"], "part")
-        assert _os.path.isdir(tmp_dir)  # recovery copy survives
-    finally:
-        storage._hadoop_fs = real
-
-
 def test_training_shards_ordered_and_pruned(spark, tmp_path):
     """write_training_shards: every shard directory holds exactly its
     epoch_shuffle rows SORTED by pos (file order == epoch order), a

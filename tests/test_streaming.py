@@ -276,48 +276,6 @@ def test_stream_static_enrich_matches_batch(spark, event_stream_dir):
     assert any(a for _, a, _ in got)  # some events do flag
 
 
-def test_cdc_upsert_sink_matches_batch_merge(spark, tmp_path):
-    """Streaming CDC apply == one batch merge of the same updates:
-    per-key final state identical, untouched partitions untouched."""
-    import glob as _glob
-    import os as _os
-
-    from amadeus_spark.operators import storage
-
-    target = str(tmp_path / "dim")
-    base = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)],
-        "id long, part string, val double",
-    )
-    base.write.partitionBy("part").parquet(target)
-    before_c = {
-        f: _os.path.getmtime(f)
-        for f in _glob.glob(f"{target}/part=c/*.parquet")
-    }
-
-    upd_dir = str(tmp_path / "updates")
-    # id=1 appears TWICE in the batch: the higher seq must win and only
-    # ONE row may land (the in-batch dedup contract)
-    spark.createDataFrame(
-        [(1, "a", 5.0, 1), (1, "a", 10.0, 2), (4, "b", 40.0, 1)],
-        "id long, part string, val double, seq long",
-    ).write.json(upd_dir)
-    stream = spark.readStream.schema(
-        "id long, part string, val double, seq long"
-    ).json(upd_dir)
-    ev.run_cdc_upsert_sink(stream, target, ["id"], "part", order_col="seq")
-
-    got = {(r.id, r.part, r.val) for r in spark.read.parquet(target).collect()}
-    assert got == {
-        (1, "a", 10.0), (2, "b", 2.0), (4, "b", 40.0), (3, "c", 3.0)
-    }  # one row for id=1 and it is the max-seq version
-    after_c = {
-        f: _os.path.getmtime(f)
-        for f in _glob.glob(f"{target}/part=c/*.parquet")
-    }
-    assert before_c == after_c  # partition c never touched
-
-
 def test_cdc_versioned_sink_commits_and_replays_idempotently(spark, tmp_path):
     """Streaming CDC -> versioned table: one manifest version per
     micro-batch, final state == one-shot latest-wins fold, and a FULL
