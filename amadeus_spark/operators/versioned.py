@@ -142,6 +142,30 @@ def _bc(df: DataFrame, n_rows, n_cols: int = 1) -> DataFrame:
     return df
 
 
+def _q(name: str) -> str:
+    """A column name as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_str(s: str) -> str:
+    """A Python string as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _ddl(dt) -> str:
+    """A DataType as a SQL type for ``CAST`` — ``simpleString`` with
+    struct field names quoted (they may hold any character)."""
+    if isinstance(dt, _st.StructType):
+        return "struct<" + ",".join(
+            f"{_q(f.name)}:{_ddl(f.dataType)}" for f in dt.fields
+        ) + ">"
+    if isinstance(dt, _st.ArrayType):
+        return f"array<{_ddl(dt.elementType)}>"
+    if isinstance(dt, _st.MapType):
+        return f"map<{_ddl(dt.keyType)},{_ddl(dt.valueType)}>"
+    return dt.simpleString()
+
+
 def _fuse_ok(root: str) -> bool:
     """True when the fused data+CDF write applies: directory rename is
     a cheap METADATA move on local/HDFS-like filesystems, so one Spark
@@ -154,30 +178,63 @@ def _fuse_ok(root: str) -> bool:
     ) != "0"
 
 
+def _emit_legs(df: DataFrame, names: list[str], legs: list[tuple]) -> DataFrame:
+    """Every output row of a commit from ONE pass over ``df``: each
+    ``(cond, change_type, values)`` leg emits, for each row where the
+    SQL ``cond`` holds, the SQL ``values`` as columns ``names`` plus
+    ``_change_type`` (NULL for a DATA row, else the change type) — one
+    ``inline(filter(array(IF(cond, named_struct(..)), ..)))``
+    projection (Delta's MERGE output shape). N filtered copies of one
+    frame would re-plan its upstream (broadcasts, scans, cache stages)
+    once per copy. A lone data leg is a plain filter + select with no
+    ``_change_type`` column."""
+    if len(legs) == 1 and legs[0][1] is None:
+        cond, _, vals = legs[0]
+        out = df if cond == "true" else df.where(cond)
+        return out.selectExpr(
+            *[f"{v} AS {_q(n)}" for v, n in zip(vals, names)]
+        )
+    arms = []
+    for cond, change_type, vals in legs:
+        fields = ", ".join(
+            f"{_sql_str(n)}, {v}" for n, v in zip(names, vals)
+        )
+        ct = "CAST(NULL AS STRING)" if change_type is None else _sql_str(
+            change_type
+        )
+        arms.append(
+            f"IF({cond}, named_struct({fields}, '_change_type', {ct}), NULL)"
+        )
+    return df.selectExpr(
+        f"inline(filter(array({', '.join(arms)}), x -> x IS NOT NULL))"
+    )
+
+
 def _fused_write(
     spark: SparkSession,
-    df: DataFrame,
-    cdf_full: DataFrame,
+    legs: DataFrame,
+    version: int,
     commit_dir: str,
     cdf_path: str,
 ) -> None:
     """ONE job writes a commit's data rows AND its change rows (guide
-    §2.4 — the two frames share their upstream, and sequential writes
-    paid a second job launch + a second pass over the shared subtree's
-    cache): union by name under a reserved tag partition, write
-    partitioned to a unique staging dir, rename each leg's directory
-    into its home. Data files gain two all-NULL trailing columns
-    (``_change_type`` / ``_commit_version``) — invisible to every
-    consumer because reads plan the explicit manifest schema
-    (:func:`_reader`); change files come out byte-compatible with the
-    two-write path. An empty leg still yields its directory (narrow
-    commits must stay readable; the CDF contract expects the dir)."""
+    §2.4 — both come from one upstream, and sequential writes paid a
+    second job launch + a second pass over it): ``legs`` is the tagged
+    frame of :func:`_emit_legs` (``_change_type`` NULL = data row),
+    written partitioned by a reserved tag column to a unique staging
+    dir, each leg's directory then renamed into its home. Data files
+    gain two all-NULL trailing columns (``_change_type`` /
+    ``_commit_version``) — invisible to every consumer because reads
+    plan the explicit manifest schema (:func:`_reader`); change files
+    carry the two-write path's columns. An empty leg
+    still yields its directory (narrow commits must stay readable; the
+    CDF contract expects the dir)."""
     tag = "__cdf"
-    d = df
-    for c, t in (("_change_type", "string"), ("_commit_version", "bigint")):
-        d = d.withColumn(c, F.lit(None).cast(t))
-    fused = d.withColumn(tag, F.lit("d")).unionByName(
-        cdf_full.withColumn(tag, F.lit("c")), allowMissingColumns=True
+    fused = legs.selectExpr(
+        "*",
+        f"IF(_change_type IS NULL, NULL, CAST({int(version)} AS BIGINT)) "
+        "AS _commit_version",
+        f"IF(_change_type IS NULL, 'd', 'c') AS {tag}",
     )
     tmp = f"{os.path.dirname(commit_dir)}/fuse-{uuid.uuid4().hex[:8]}"
     fused.write.partitionBy(tag).mode("errorifexists").parquet(tmp)
@@ -586,9 +643,15 @@ def _to_logical(df: DataFrame, man: dict) -> DataFrame:
     if not mapping or df is None:
         return df
     p2l = {p: l for l, p in mapping.items()}
-    return df.select(
-        *[F.col(c).alias(p2l.get(c, c)) for c in df.columns]
-    )
+    return df.toDF(*[p2l.get(c, c) for c in df.columns])
+
+
+def _to_physical(df: DataFrame | None, mapping: dict) -> DataFrame | None:
+    """Rename a logically-named frame to the PHYSICAL names it is
+    written under (columns outside ``mapping`` keep theirs)."""
+    if df is None or not any(c in mapping for c in df.columns):
+        return df
+    return df.toDF(*[mapping.get(c, c) for c in df.columns])
 
 
 def _reader(spark: SparkSession, man: dict):
@@ -1382,10 +1445,31 @@ def _dv_debit(entries: list[dict]) -> tuple[int, int]:
 #: (commit dir, file name, row index within the file)
 _ID_COLS = ("__dv_dir", "__dv_path", "__dv_ri")
 
+# the identity derived from the file path, RELATIVE to the owning
+# table's data/ dir (greedy regexp → LAST "/data/"; hive segments are
+# "k=v", never a bare "data", so the last one is the real anchor):
+# dir = first segment, path = the rest — equal to the old (-2 segment,
+# file name) derivation on flat layouts, and equal to entry (dir, path)
+# on hive layouts, which keeps DV anti-joins exact for both.
+# _metadata.file_path is URI-ENCODED ("tag=a b" surfaces as
+# "tag=a%20b"): percent-decode back into entry-path space, protecting
+# literal "+" first (url_decode is java URLDecoder, which would turn
+# it into a space; encoding never creates "/" so the split stays safe)
+_REL_SQL = (
+    "url_decode(replace(regexp_extract(_metadata.file_path, "
+    f"'^.*/{DATA_DIR}/(.+)$', 1), '+', '%2B'))"
+)
+_IDENT_SQL = (
+    f"substring_index({_REL_SQL}, '/', 1) AS {_ID_COLS[0]}",
+    f"substr({_REL_SQL}, length(substring_index({_REL_SQL}, '/', 1)) + 2)"
+    f" AS {_ID_COLS[1]}",
+    f"_metadata.row_index AS {_ID_COLS[2]}",
+)
+
 
 def _check_reserved(cols, what: str, *, prefix: bool = False) -> None:
     """The DV/merge machinery stages internal columns (``__dv_*``,
-    merge's ``__fl_*``/``__nc_*``/``__del``/...) onto user frames — a
+    merge's ``__cl``/``__nc_*``/``__del``/...) onto user frames — a
     table that legitimately carries one of those names would silently
     corrupt DV identity or clause resolution. Raise loudly instead.
     ``prefix=True`` reserves the whole ``__`` prefix (MERGE, whose
@@ -1440,32 +1524,6 @@ def _snapshot_read(
         # column by the same name would be silently corrupted
         _check_reserved([f.name for f in schema.fields], "table schema")
     frames = []
-    # physical row identity from the file path, derived RELATIVE to
-    # the owning table's data/ dir (greedy regexp → LAST "/data/";
-    # hive segments are "k=v", never a bare "data", so the last one
-    # is the real anchor): dir = first segment, path = the rest —
-    # equal to the old (-2 segment, file name) derivation on flat
-    # layouts, and equal to entry (dir, path) on hive layouts, which
-    # keeps DV anti-joins exact for both. _metadata.file_path is
-    # URI-ENCODED ("tag=a b" surfaces as "tag=a%20b"): percent-decode
-    # back into entry-path space, protecting literal "+" first
-    # (url_decode is java URLDecoder, which would turn it into a
-    # space; encoding never creates "/" so the split stays safe)
-    _rel = F.url_decode(
-        F.replace(
-            F.regexp_extract(
-                F.col("_metadata.file_path"), f"^.*/{DATA_DIR}/(.+)$", 1
-            ),
-            F.lit("+"),
-            F.lit("%2B"),
-        )
-    )
-    _dir = F.substring_index(_rel, "/", 1)
-    ident = [
-        _dir.alias(_ID_COLS[0]),
-        F.substr(_rel, F.length(_dir) + F.lit(2)).alias(_ID_COLS[1]),
-        F.col("_metadata.row_index").alias(_ID_COLS[2]),
-    ]
 
     def _scans(subset: list[dict]) -> list[DataFrame]:
         """One scan for the flat pool + one per hive commit dir."""
@@ -1493,21 +1551,17 @@ def _snapshot_read(
     if plain:
         for df in _scans(plain):
             if keep_identity:
-                df = df.select("*", *ident)
+                df = df.selectExpr("*", *_IDENT_SQL)
             frames.append(df)
     if dved:
         data = None
         for s in _scans(dved):
-            s = s.select("*", *ident)
+            s = s.selectExpr("*", *_IDENT_SQL)
             data = s if data is None else data.unionByName(s)
         dv_dirs = sorted({e["dv"]["dir"] for e in dved})
         dvf = spark.read.schema(
             "dir string, path string, row_index bigint"
-        ).parquet(*[_dv_uri(root, d) for d in dv_dirs]).select(
-            F.col("dir").alias(_ID_COLS[0]),
-            F.col("path").alias(_ID_COLS[1]),
-            F.col("row_index").alias(_ID_COLS[2]),
-        )
+        ).parquet(*[_dv_uri(root, d) for d in dv_dirs]).toDF(*_ID_COLS)
         # the manifest carries every entry's DV row count: a small
         # deleted-row set broadcast-hints on the KNOWN total, so the
         # data side of the anti-join never shuffles (guide §3.1); big
@@ -1819,6 +1873,16 @@ def _commit(
     # surfacing as the "concurrent commit" conflict commit_with_retry
     # exists to catch — the optimistic-concurrency contract.
     _require_plain_root(root, "a data commit")
+    # cdf="tagged": df is ONE frame of data AND change rows
+    # (:func:`_emit_legs` — _change_type NULL marks a data row); the
+    # caller enforced CHECK constraints on its changed rows itself
+    legs = None
+    if isinstance(cdf, str) and cdf == "tagged":
+        if not pre_checked:
+            raise ValueError("a tagged commit frame must be pre-checked")
+        legs = df
+        df = legs.where("_change_type IS NULL").drop("_change_type")
+        cdf = legs.where("_change_type IS NOT NULL")
     cur = prev["version"] if prev is not None else current_version(spark, root)
     version = cur + 1
     # streaming txn high-water marks (run_cdc_versioned_sink) survive
@@ -1916,12 +1980,10 @@ def _commit(
         # frame chain here would be the same pure waste
         if constraints and op != "optimize" and not pre_checked:
             df = _enforce_constraints(df, constraints)
-        if mapping and any(c in mapping for c in df.columns):
-            # rename to PHYSICAL names for the write (enforcement just
-            # ran on logical names); stats_cols are physical already
-            df = df.select(
-                *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
-            )
+        # rename to PHYSICAL names for the write (enforcement just ran
+        # on logical names); stats_cols are physical already
+        df = _to_physical(df, mapping)
+        legs = _to_physical(legs, mapping)
     # data + change rows FUSE into one write job when the commit has
     # both and renames are cheap (guide §2.4; see _fused_write) — the
     # write itself then happens in the cdf block below. The reserved
@@ -1986,17 +2048,17 @@ def _commit(
         )
     if cdf is not None:
         cdf_dir = f"v{version}-{uuid.uuid4().hex[:8]}"
-        if mapping and any(c in mapping for c in cdf.columns):
-            # change files store PHYSICAL names too (the from_add path
-            # already does: it re-reads the committed files) — a feed
-            # spanning a rename unifies on the stable physical name
-            cdf = cdf.select(
-                *[F.col(c).alias(mapping.get(c, c)) for c in cdf.columns]
-            )
-        cdf_full = cdf.withColumn("_commit_version", F.lit(version))
+        # change files store PHYSICAL names too (the from_add path
+        # already does: it re-reads the committed files) — a feed
+        # spanning a rename unifies on the stable physical name
+        cdf = _to_physical(cdf, mapping)
         if fuse_cdf:
+            if legs is None:
+                legs = df.selectExpr(
+                    "*", "CAST(NULL AS STRING) AS _change_type"
+                ).unionByName(cdf, allowMissingColumns=True)
             _fused_write(
-                spark, df, cdf_full, commit_dir,
+                spark, legs, version, commit_dir,
                 f"{root}/{CDF_DIR}/{cdf_dir}",
             )
             fresh = _file_entries(commit_dir, stats_cols)
@@ -2010,9 +2072,9 @@ def _commit(
                     set(df.columns),
                 )
         else:
-            cdf_full.write.mode("errorifexists").parquet(
-                f"{root}/{CDF_DIR}/{cdf_dir}"
-            )
+            cdf.withColumn("_commit_version", F.lit(version)).write.mode(
+                "errorifexists"
+            ).parquet(f"{root}/{CDF_DIR}/{cdf_dir}")
         cdf_mark = {"dir": cdf_dir}
     elif op == "append":
         cdf_mark = "add"
@@ -2615,10 +2677,15 @@ def _touched_by_predicate(
         .distinct()
         .collect()
     )
+    return _found_entries(refs, [tuple(r) for r in matched])
+
+
+def _found_entries(refs: list[dict], keys) -> list[dict]:
+    """The entries of ``refs`` behind scan-derived ``(dir, path)``
+    identities (a file-finding scan's result), sorted."""
     by_key = _ident_map(refs, "predicate file-finding")
     out = []
-    for r in matched:
-        key = (r[_ID_COLS[0]], r[_ID_COLS[1]])
+    for key in keys:
         if key not in by_key:
             raise RuntimeError(
                 f"matched file {key} not in the resolved snapshot "
@@ -3190,15 +3257,171 @@ def _update_where_dv(
     return v, 0, seg["total_files"]
 
 
-def _clause_flag(cond: str | None, ctx_expr) -> "F.Column":
-    """A merge clause's applicability as a Column: the clause context
-    (matched / not-matched / not-matched-by-source) AND the user
-    condition, NULL-explicit — a NULL condition is NOT TRUE and must
-    not fire the clause (iron rule 9)."""
-    c = ctx_expr
-    if cond is not None:
-        c = c & F.coalesce(F.expr(cond), F.lit(False))
-    return c
+def _sql_cond(cond: str | None) -> str:
+    """A merge clause's user condition as SQL, NULL-explicit — a NULL
+    condition is NOT TRUE and must not fire the clause (iron rule 9)."""
+    return "true" if cond is None else f"coalesce(({cond}), false)"
+
+
+def _merge_plan(
+    spark: SparkSession,
+    root: str,
+    seg: dict,
+    source: DataFrame,
+    key_cols: list[str],
+    matched: bool,
+    nmbs: list[dict],
+    refs: list[dict],
+) -> tuple:
+    """A MERGE's ONE planning action: a tagged union of two small
+    results under one global aggregate —
+
+    - the source's bounds on the prune key ``key_cols[0]`` and its row
+      count (the MEASURED count lets the merge join broadcast-hint the
+      source deliberately, guide §3.1); with ``matched`` clauses the
+      rows are grouped by the merge keys first, so max(count) <= 1
+      proves no source key repeats and the cardinality probe skips;
+    - the files holding >=1 live row where the OR of the by-source
+      conditions could fire (Delta's file-finding scan; a by-source
+      clause without a condition touches every file, no scan).
+
+    Returns ``(lo, hi, src_has_dup_keys, n_src, by_source_files)``."""
+    prune = _q(key_cols[0])
+    if matched:
+        parts = (
+            source.groupBy(*key_cols)
+            .agg(F.expr("count(1) AS __n"))
+            .selectExpr(f"{prune} AS __k", "__n")
+        )
+    else:
+        parts = source.selectExpr(f"{prune} AS __k", "1L AS __n")
+    aggs = ["min(__k) AS lo", "max(__k) AS hi", "max(__n) AS mx",
+            "sum(__n) AS n"]
+    conds = [cl.get("condition") for cl in nmbs]
+    find = bool(refs) and bool(nmbs) and None not in conds
+    if find:
+        found = (
+            _snapshot_read(spark, root, seg, refs, keep_identity=True)
+            .where(" OR ".join(_sql_cond(c) for c in conds))
+            .selectExpr(
+                f"named_struct('d', {_ID_COLS[0]}, 'p', {_ID_COLS[1]}) AS __f"
+            )
+        )
+        parts = parts.unionByName(found, allowMissingColumns=True)
+        aggs.append("collect_set(__f) AS f")
+    r = parts.selectExpr(*aggs).collect()[0]
+    if find:
+        hit = _found_entries(refs, [tuple(x) for x in r["f"]])
+    else:
+        hit = refs if nmbs else []
+    return (
+        _bound(r["lo"]), _bound(r["hi"]), (r["mx"] or 0) > 1,
+        int(r["n"] or 0), hit,
+    )
+
+
+def _merge_join(
+    spark: SparkSession,
+    root: str,
+    seg: dict,
+    touched: list[dict],
+    source: DataFrame,
+    key_cols: list[str],
+    schema,
+    old_names: set[str],
+    matched: list[dict],
+    nmbs: list[dict],
+    n_src: int,
+    keep_pre: bool,
+    dv: bool,
+) -> DataFrame:
+    """The touched target rows LEFT-joined to the source and resolved
+    through the matched / by-source clauses, in a few SQL fragments:
+    the table columns (post-update values, cast to the manifest types),
+    ``__del`` / ``__upd`` (the row's first-true clause deletes /
+    updates it), with ``keep_pre`` the pre-update row as ``__pre_<col>``
+    and with ``dv`` the row identity (:data:`_ID_COLS`)."""
+    fields = {f.name: f.dataType for f in schema.fields}
+    t = _snapshot_read(spark, root, seg, touched, keep_identity=dv)
+    # evolved columns don't exist in the touched files yet: stage them
+    # as typed NULLs FIRST, so every downstream reference (clause
+    # expressions, the simultaneous select, __pre_ capture) sees one
+    # uniform evolved row shape
+    evolved = [
+        f"CAST(NULL AS {_ddl(f.dataType)}) AS {_q(f.name)}"
+        for f in schema.fields
+        if f.name not in old_names
+    ]
+    if evolved:
+        t = t.selectExpr("*", *evolved)
+    # by-source flags/values are staged on the TARGET frame: their
+    # expressions use bare target column names, which go ambiguous
+    # after the join (source carries the same names)
+    by_src = []
+    for i, cl in enumerate(nmbs):
+        by_src.append(f"{_sql_cond(cl.get('condition'))} AS __nc_{i}")
+        for c, ex in (cl.get("set") or {}).items():
+            by_src.append(
+                f"CAST(({ex}) AS {_ddl(fields[c])}) AS {_q(f'__nv_{i}_{c}')}"
+            )
+    if by_src:
+        t = t.selectExpr("*", *by_src)
+    # without matched clauses the source side only marks is_matched
+    # (nmbs expressions are target-only) — join the DISTINCT keys, or a
+    # duplicate source key would fan a pass-through matched row out
+    # into duplicates. The planning action measured the source: a small
+    # batch broadcast-hints, so the touched-file side never shuffles
+    src_side = source if matched else source.select(*key_cols).distinct()
+    j = t.alias("t").join(
+        _bc(
+            src_side.selectExpr("*", "true AS __s_matched"),
+            n_src, len(src_side.columns) + 1,
+        ).alias("s"),
+        F.expr(" AND ".join(f"t.{_q(c)} = s.{_q(c)}" for c in key_cols)),
+        "left_outer",
+    )
+    # first-true clause resolution: the winning clause's index as ONE
+    # staged column (matched and by-source contexts are disjoint, so
+    # one CASE orders both lists)
+    m = "coalesce(s.__s_matched, false)"
+    clauses = matched + nmbs
+    arms = []
+    for i, cl in enumerate(clauses):
+        if i < len(matched):
+            c = cl.get("condition")
+            ctx = m if c is None else f"{m} AND {_sql_cond(c)}"
+        else:
+            ctx = f"NOT {m} AND t.__nc_{i - len(matched)}"
+        arms.append(f"WHEN {ctx} THEN {i}")
+    j = j.selectExpr("*", f"CASE {' '.join(arms)} END AS __cl")
+
+    def _in(action: str) -> str:
+        ix = [str(i) for i, cl in enumerate(clauses) if cl["action"] == action]
+        return f"coalesce(__cl IN ({', '.join(ix)}), false)" if ix else "false"
+
+    # ONE simultaneous select: every SET expression sees the pre-update
+    # row; results cast to the manifest column type
+    cols = []
+    for f in schema.fields:
+        branches = []
+        for i, cl in enumerate(clauses):
+            if cl["action"] != "update" or f.name not in (cl.get("set") or {}):
+                continue
+            if i < len(matched):
+                ex = f"CAST(({cl['set'][f.name]}) AS {_ddl(f.dataType)})"
+            else:
+                ex = "t." + _q(f"__nv_{i - len(matched)}_{f.name}")
+            branches.append(f"WHEN {i} THEN {ex}")
+        col = f"t.{_q(f.name)}"
+        if branches:
+            col = f"CASE __cl {' '.join(branches)} ELSE {col} END"
+        cols.append(f"{col} AS {_q(f.name)}")
+    cols += [f"{_in('delete')} AS __del", f"{_in('update')} AS __upd"]
+    if keep_pre:
+        cols += [f"t.{_q(n)} AS {_q('__pre_' + n)}" for n in fields]
+    if dv:
+        cols += [f"t.{c} AS {c}" for c in _ID_COLS]
+    return j.selectExpr(*cols)
 
 
 def commit_merge(
@@ -3352,48 +3575,21 @@ def commit_merge(
             )
     if any(cl.get("values") is None for cl in not_matched):
         _require_full_rows(schema, source.columns, "INSERT * source")
-    # source feeds 4 consumers (bounds, cardinality check, the matched
-    # join, the insert anti-join) — persist, never re-execute upstream
+    # source feeds the planning action, the cardinality probe, the
+    # matched join and the insert anti-join — persist, never re-execute
+    # upstream
     source = source.persist()
     cached: list[DataFrame] = [source]
-    cdf_frame = None
+    nk = len(key_cols)
+    names = [f.name for f in schema.fields]
     try:
-        # ONE bounded pass sizes the prune range AND (with matched
-        # clauses) detects duplicate source keys: min/max over the
-        # per-key counts' groups equal min/max over rows, and
-        # max(count)<=1 proves no source key repeats — the expensive
-        # dup-keys ⋈ target-keys cardinality probe below then skips
-        # entirely (r15: it was an unconditional extra action per
-        # merge; well-formed sources never need it)
-        if matched:
-            bounds = (
-                source.groupBy(*key_cols)
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .agg(
-                    F.min(prune_col).alias("lo"),
-                    F.max(prune_col).alias("hi"),
-                    F.max("__n").alias("__mx"),
-                    # total source rows, free in the same agg: the
-                    # MEASURED count lets the merge join broadcast-hint
-                    # the source side deliberately (guide §3.1)
-                    F.sum("__n").alias("__tot"),
-                )
-                .collect()[0]
-            )
-            src_has_dup_keys = (bounds["__mx"] or 0) > 1
-            n_src = int(bounds["__tot"] or 0)
-        else:
-            bounds = source.agg(
-                F.min(prune_col).alias("lo"), F.max(prune_col).alias("hi"),
-                F.count(F.lit(1)).alias("__tot"),
-            ).collect()[0]
-            src_has_dup_keys = False
-            n_src = int(bounds["__tot"])
-        lo, hi = _bound(bounds["lo"]), _bound(bounds["hi"])
         # dv mode re-ADDS touched entries (stats must carry) — full
         # entries there; the rewrite path only needs identity/rows/dv
         slim = mode != "dv"
         refs = _pruned_entries(spark, root, res, slim=slim)
+        lo, hi, src_has_dup_keys, n_src, hit = _merge_plan(
+            spark, root, seg, source, key_cols, bool(matched), nmbs, refs
+        )
         if lo is None:  # all-NULL or empty source: no key can match
             key_files: list[dict] = []
         else:
@@ -3409,237 +3605,62 @@ def commit_merge(
         rewrite: dict[tuple, dict] = {}
         if matched:
             rewrite.update({(e["dir"], e["path"]): e for e in key_files})
-        if nmbs:
-            # a by-source clause can touch rows in ANY file: one
-            # predicate-pushed scan finds files holding >=1 row where
-            # the OR of the clause conditions could fire
-            conds = [cl.get("condition") for cl in nmbs]
-            if any(c is None for c in conds):
-                hit = refs
-            else:
-                pred = F.coalesce(F.expr(conds[0]), F.lit(False))
-                for c in conds[1:]:
-                    pred = pred | F.coalesce(F.expr(c), F.lit(False))
-                hit = _touched_by_predicate(spark, root, seg, refs, pred)
-            rewrite.update({(e["dir"], e["path"]): e for e in hit})
+        rewrite.update({(e["dir"], e["path"]): e for e in hit})
         touched = sorted(
             rewrite.values(), key=lambda e: (e["dir"], e["path"])
         )
         n_kept = seg["total_files"] - len(touched)
-        if key_files:
-            # DV-applied: an already-deleted row's key must neither
-            # block an insert nor trip the cardinality check. tkeys
-            # feeds up to two consumers (cardinality check + insert
-            # anti-join) — persist the small distinct-key frame so the
-            # key-file scan runs once.
-            key_read = _snapshot_read(spark, root, seg, key_files)
-            # no distinct: both consumers (cardinality semi, insert
-            # anti) are EXISTENCE joins — duplicate build-side keys
-            # change nothing, and dropping the dedup removes the only
-            # Exchange (+ its AQE stage job) in the merged write plan
-            tkeys = key_read.select(*key_cols).persist()
-            cached.append(tkeys)
-            # distinct target keys in range: bounded by the key-pruned
-            # files' manifest row totals — known here with no extra
-            # action, so the anti/semi joins below can broadcast-hint
-            n_tkeys = sum(e["rows"] for e in key_files)
+        # the target keys in the source range, DV-applied: an already-
+        # deleted row's key must neither block an insert nor trip the
+        # cardinality check. Their count is bounded by the key-pruned
+        # files' manifest row totals — known with no action, so the
+        # joins below broadcast-hint. No distinct: both consumers are
+        # EXISTENCE joins, duplicate build-side keys change nothing.
+        n_tkeys = sum(e["rows"] for e in key_files)
+        probe = bool(matched) and src_has_dup_keys
+        tkeys = None
+        if key_files and (not_matched or probe):
+            tkeys = _snapshot_read(spark, root, seg, key_files).select(
+                *key_cols
+            )
+        if tkeys is not None and probe:
+            if not_matched:
+                # the probe and the insert anti-join both read it
+                tkeys = tkeys.persist()
+                cached.append(tkeys)
             # matched-clause cardinality: >1 source row hitting one
             # target row makes update/delete nondeterministic (Delta
             # raises; so do we). Only source keys that actually match
             # count — a duplicated INSERT key is two legitimate inserts.
-            if matched and src_has_dup_keys:
-                dup_keys = (
-                    source.groupBy(*key_cols)
-                    .agg(F.count(F.lit(1)).alias("__n"))
-                    .where("__n > 1")
-                    .select(*key_cols)
+            dup_keys = (
+                source.groupBy(*key_cols)
+                .agg(F.expr("count(1) AS __n"))
+                .where("__n > 1")
+                .select(*key_cols)
+            )
+            if not dup_keys.join(
+                _bc(tkeys, n_tkeys, nk), key_cols, "left_semi"
+            ).isEmpty():
+                raise ValueError(
+                    "merge cardinality violation: >1 source row "
+                    f"matches one target row on {key_cols} while a "
+                    "matched clause exists (nondeterministic result)"
                 )
-                if not dup_keys.join(
-                    _bc(tkeys, n_tkeys, len(key_cols)),
-                    key_cols, "left_semi"
-                ).isEmpty():
-                    raise ValueError(
-                        "merge cardinality violation: >1 source row "
-                        f"matches one target row on {key_cols} while a "
-                        "matched clause exists (nondeterministic result)"
-                    )
-        else:
-            tkeys = spark.createDataFrame(
-                [],
-                _st.StructType(
-                    [_st.StructField(c, fields[c]) for c in key_cols]
-                ),
-            )
-            n_tkeys = 0
-        touched_read = (
-            _snapshot_read(
-                spark, root, seg, touched, keep_identity=(mode == "dv")
-            )
-            if touched
-            else None
-        )
 
         # ---- rewritten target rows (matched + not-matched-by-source)
-        # CHECK enforcement is per-LEG: the rewrite frame gates the
-        # chain on __upd (pass-through rows skip the constraint
-        # expressions entirely — they passed at their original write),
-        # inserts/DV post-images are all-changed and chain plainly;
-        # _commit then skips its full-frame pass (pre_checked)
-        cons = seg.get("constraints") or {}
-        rewritten = None
-        upd_clauses = []  # (flag column name, set dict or None-for-delete)
-        if touched_read is not None:
-            t = touched_read
-            # evolved columns don't exist in the touched files yet:
-            # stage them as typed NULLs FIRST, so every downstream
-            # reference (clause expressions, the simultaneous select,
-            # __pre_ capture) sees one uniform evolved row shape
-            for f in schema.fields:
-                if f.name not in old_names:
-                    t = t.withColumn(f.name, F.lit(None).cast(f.dataType))
-            # stage by-source flags/values on the TARGET frame first:
-            # their expressions use bare target column names, which go
-            # ambiguous after the join (source carries the same names)
-            for i, cl in enumerate(nmbs):
-                t = t.withColumn(
-                    f"__nc_{i}", _clause_flag(cl.get("condition"), F.lit(True))
-                )
-                for col, ex in (cl.get("set") or {}).items():
-                    t = t.withColumn(
-                        f"__nv_{i}_{col}", F.expr(ex).cast(fields[col])
-                    )
-            # without matched clauses the source side only marks
-            # is_matched (nmbs expressions are target-only) — join the
-            # DISTINCT keys, or a duplicate source key would fan a
-            # pass-through matched row out into duplicates
-            src_side = (
-                source
-                if matched
-                else source.select(*key_cols).distinct()
+        j = None
+        if touched:
+            j = _merge_join(
+                spark, root, seg, touched, source, key_cols, schema,
+                old_names, matched, nmbs, n_src,
+                keep_pre=changefeed, dv=(mode == "dv"),
             )
-            key_eq = F.lit(True)
-            for c in key_cols:
-                key_eq = key_eq & (F.col(f"t.{c}") == F.col(f"s.{c}"))
-            # the bounds pass measured the source: a small batch
-            # broadcast-hints, so the touched-file side never shuffles
-            # for this join (guide §3.1/§2.4)
-            j = t.alias("t").join(
-                _bc(
-                    src_side.withColumn("__s_matched", F.lit(True)),
-                    n_src, len(src_side.columns) + 1,
-                ).alias("s"),
-                key_eq,
-                "left_outer",
-            )
-            is_matched = F.coalesce(F.col("s.__s_matched"), F.lit(False))
-            # first-true clause resolution: stage each clause's APPLIED
-            # flag as a column (no CSE across inlined copies otherwise)
-            prior = F.lit(False)
-            n_fl = 0
-            for i, cl in enumerate(matched):
-                fl = _clause_flag(cl.get("condition"), is_matched) & ~prior
-                j = j.withColumn(f"__fl_{n_fl}", fl)
-                prior = prior | F.col(f"__fl_{n_fl}")
-                upd_clauses.append(
-                    (f"__fl_{n_fl}",
-                     cl.get("set") if cl["action"] == "update" else None,
-                     "matched")
-                )
-                n_fl += 1
-            prior = F.lit(False)
-            for i, cl in enumerate(nmbs):
-                fl = (~is_matched) & F.col(f"t.__nc_{i}") & ~prior
-                j = j.withColumn(f"__fl_{n_fl}", fl)
-                prior = prior | F.col(f"__fl_{n_fl}")
-                upd_clauses.append(
-                    (f"__fl_{n_fl}",
-                     {c: f"t.__nv_{i}_{c}" for c in (cl.get("set") or {})}
-                     if cl["action"] == "update" else None,
-                     "nmbs")
-                )
-                n_fl += 1
-            del_any = F.lit(False)
-            upd_any = F.lit(False)
-            for fl, st, _ctx in upd_clauses:
-                if st is None:
-                    del_any = del_any | F.col(fl)
-                else:
-                    upd_any = upd_any | F.col(fl)
-            # ONE simultaneous select: every SET expression sees the
-            # pre-update row; results cast to the manifest column type
-            out_cols = []
-            for f in schema.fields:
-                v = F.col(f"t.{f.name}")
-                for fl, st, ctx in upd_clauses:
-                    if st and f.name in st:
-                        ex = (F.col(st[f.name]) if ctx == "nmbs"
-                              else F.expr(st[f.name]).cast(f.dataType))
-                        v = F.when(F.col(fl), ex).otherwise(v)
-                out_cols.append(v.alias(f.name))
-            ident_cols = (
-                [F.col(f"t.{c}").alias(c) for c in _ID_COLS]
-                if mode == "dv"
-                else []
-            )
-            j = j.select(
-                *out_cols,
-                del_any.alias("__del"),
-                upd_any.alias("__upd"),
-                *[F.col(f"t.{f.name}").alias(f"__pre_{f.name}")
-                  for f in schema.fields],
-                *ident_cols,
-            )
-            if changefeed or mode == "dv":
-                # dv mode: j feeds the DV staging collect, the
-                # post-image write and (optionally) the CDF frames
+            if mode == "dv" or (changefeed and not _fuse_ok(root)):
+                # dv: j feeds the DV staging collect, the DV write and
+                # the commit write; a two-write commit (object stores)
+                # reads it once per leg
                 j = j.persist()
                 cached.append(j)
-            rewritten = j.where(~F.col("__del")).select(
-                *[F.col(f.name) for f in schema.fields],
-                F.col("__upd"),
-            )
-            # dv mode discards this frame below (only __upd rows leave
-            # their files, chained plainly there) — don't build a dead
-            # gated chain for it
-            if cons and mode != "dv":
-                rewritten = _enforce_constraints(
-                    rewritten, cons, gate="__upd"
-                )
-            rewritten = rewritten.drop("__upd")
-
-        # ---- inserts (not matched by target)
-        ins_rows = None
-        if not_matched:
-            ins_src = source.join(
-                _bc(tkeys, n_tkeys, len(key_cols)), key_cols, "left_anti"
-            )
-            prior = F.lit(False)
-            flags = []
-            for i, cl in enumerate(not_matched):
-                fl = _clause_flag(cl.get("condition"), F.lit(True)) & ~prior
-                ins_src = ins_src.withColumn(f"__ic_{i}", fl)
-                prior = prior | F.col(f"__ic_{i}")
-                flags.append(f"__ic_{i}")
-            any_fl = F.lit(False)
-            for fl in flags:
-                any_fl = any_fl | F.col(fl)
-            ins_cols = []
-            for f in schema.fields:
-                v = F.lit(None).cast(f.dataType)
-                for i, cl in enumerate(not_matched):
-                    vals = cl.get("values")
-                    ex = (F.col(f.name) if vals is None
-                          else (F.expr(vals[f.name]) if f.name in vals
-                                else F.lit(None)))
-                    v = F.when(F.col(flags[i]), ex.cast(f.dataType)) \
-                         .otherwise(v)
-                ins_cols.append(v.alias(f.name))
-            ins_rows = ins_src.where(any_fl).select(*ins_cols)
-            if cons:
-                ins_rows = _enforce_constraints(ins_rows, cons)
-            if changefeed:
-                ins_rows = ins_rows.persist()
-                cached.append(ins_rows)
 
         # dv mode: only rows a clause CHANGED leave their files — stage
         # their identities as a deletion vector, append update
@@ -3648,46 +3669,87 @@ def commit_merge(
         # else is untouched
         dv_path = None
         new_entries = None
-        if mode == "dv" and rewritten is not None:
-            changed = j.where(F.col("__del") | F.col("__upd")).select(
-                *_ID_COLS
+        if mode == "dv" and j is not None:
+            staged = _stage_dv(
+                spark, root, cur, touched,
+                j.where("__del OR __upd").select(*_ID_COLS),
             )
-            staged = _stage_dv(spark, root, cur, touched, changed)
             if staged is None:
                 touched = []
-                rewritten = None
+                j = None
             else:
                 touched, _per_file, dv_path, new_entries = staged
-                rewritten = j.where(F.col("__upd")).select(
-                    *[F.col(f.name) for f in schema.fields]
+
+        # every output row — data rows AND change rows — from one pass
+        # over each input frame (see _emit_legs). CHECK enforcement is
+        # per-LEG: with constraints every leg carries a __chk gate,
+        # true only on data rows a clause changed or inserted, and ONE
+        # gated chain runs over the union — pass-through rows passed
+        # the chain at their original write, change rows are copies
+        # (_commit then skips its full-frame pass: pre_checked)
+        cons = seg.get("constraints") or {}
+        out_names = names + (["__chk"] if cons else [])
+
+        def _leg(cond, change_type, cols, chk):
+            vals = [_q(c) for c in cols] + ([chk] if cons else [])
+            return cond, change_type, vals
+
+        outs = []
+        if j is not None:
+            pre = [f"__pre_{n}" for n in names]
+            legs = [
+                _leg("__upd" if mode == "dv" else "NOT __del", None, names,
+                     "__upd")
+            ]
+            if changefeed:
+                legs += [
+                    _leg("__upd", "update_preimage", pre, "false"),
+                    _leg("__upd", "update_postimage", names, "false"),
+                    _leg("__del", "delete", pre, "false"),
+                ]
+            outs.append(_emit_legs(j, out_names, legs))
+
+        # ---- inserts (not matched by target)
+        if not_matched:
+            ins = source if tkeys is None else source.join(
+                _bc(tkeys, n_tkeys, nk), key_cols, "left_anti"
+            )
+            # first-true clause wins: the clause index as one CASE
+            arms = " ".join(
+                f"WHEN {_sql_cond(cl.get('condition'))} THEN {i}"
+                for i, cl in enumerate(not_matched)
+            )
+            ins = ins.selectExpr("*", f"CASE {arms} END AS __ic").where(
+                "__ic IS NOT NULL"
+            )
+            cols = []
+            for f in schema.fields:
+                ty = _ddl(f.dataType)
+                branches = []
+                for i, cl in enumerate(not_matched):
+                    vals = cl.get("values")
+                    ex = _q(f.name) if vals is None else vals.get(f.name)
+                    if ex is not None:
+                        branches.append(f"WHEN {i} THEN CAST(({ex}) AS {ty})")
+                cols.append(
+                    f"CASE __ic {' '.join(branches)} END AS {_q(f.name)}"
+                    if branches
+                    else f"CAST(NULL AS {ty}) AS {_q(f.name)}"
                 )
-                if cons:
-                    # DV post-images are all changed rows: plain chain
-                    rewritten = _enforce_constraints(rewritten, cons)
-        parts = [p for p in (rewritten, ins_rows) if p is not None]
-        if not parts and not (mode == "dv" and new_entries):
+            legs = [_leg("true", None, names, "true")]
+            if changefeed:
+                legs.append(_leg("true", "insert", names, "false"))
+            outs.append(_emit_legs(ins.selectExpr(*cols), out_names, legs))
+
+        if not outs:
             return cur, 0, len(refs)
-        merged = parts[0] if parts else None
-        for p in parts[1:]:
-            merged = merged.unionByName(p)
-        if changefeed:
-            ch = []
-            if touched_read is not None:
-                pre_cols = [F.col(f"__pre_{f.name}").alias(f.name)
-                            for f in schema.fields]
-                fin_cols = [F.col(f.name) for f in schema.fields]
-                ch.append(j.where(F.col("__upd")).select(
-                    *pre_cols, F.lit("update_preimage").alias("_change_type")))
-                ch.append(j.where(F.col("__upd")).select(
-                    *fin_cols, F.lit("update_postimage").alias("_change_type")))
-                ch.append(j.where(F.col("__del")).select(
-                    *pre_cols, F.lit("delete").alias("_change_type")))
-            if ins_rows is not None:
-                ch.append(ins_rows.withColumn(
-                    "_change_type", F.lit("insert")))
-            cdf_frame = ch[0]
-            for c in ch[1:]:
-                cdf_frame = cdf_frame.unionByName(c)
+        merged = outs[0]
+        for o in outs[1:]:
+            merged = merged.unionByName(o)
+        if cons:
+            merged = _enforce_constraints(
+                merged, cons, gate="__chk"
+            ).drop("__chk")
         # conflict footprint for the CAS re-base: without by-source
         # clauses the merge's result depends only on target rows in
         # the source key range — it read the key-pruned files (anti-
@@ -3716,7 +3778,7 @@ def commit_merge(
                 removed_rows=_nrows(touched),
                 removed_dv=_dv_debit(touched),
                 prev=seg,
-                cdf=cdf_frame,
+                cdf="tagged" if changefeed else None,
                 add_entries=new_entries,
                 conflict=conflict_info,
                 pre_checked=True,

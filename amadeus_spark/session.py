@@ -31,6 +31,13 @@ _DEFAULTS = {
     # testdata events.parquet uses TIMESTAMP(NANOS); read as long ns
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
+    # PySpark captures the Python call site of every Column/DataFrame
+    # function call for error query contexts — several py4j round trips
+    # per call (getActiveSession + conf.get + origin set/clear), about a
+    # third of a MERGE commit's driver build. Nothing here reads those
+    # contexts; analysis errors (AnalysisException) still raise with
+    # their message, only without the Python stack excerpt
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.ui.enabled": "false",
     # stage-progress bars interleave with stdout under redirection and

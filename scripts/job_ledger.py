@@ -4,6 +4,22 @@ so a lifecycle query's job count decomposes into named actions. Guide
 §1: attribute before cutting. Measurement-only — never on a query path.
 
 Usage: SPARK_GRAFT_PROBE="merge_into" python scripts/job_ledger.py
+
+Each named query runs twice (warm, then measured) and the measured run
+prints its total jobs and one line per action: jobs, seconds, action
+and the repo call sites that launched it.
+
+Environment:
+  SPARK_GRAFT_PROBE          comma-separated registry query names
+                             (default: merge_into)
+  SPARK_GRAFT_SF_DIR         scale-factor directory the queries read
+                             (default: the sf0.1 testdata directory;
+                             the benchmark reads perfbench/data/sf0.01)
+  SPARK_GRAFT_LEDGER_STAGES  set (any value) to also list, under each
+                             action, every job it launched with its
+                             stage names and task counts — e.g. an AQE
+                             cache stage, a broadcast or a write
+  SPARK_GRAFT_CPUS           local cores for the session (get_spark)
 """
 
 from __future__ import annotations

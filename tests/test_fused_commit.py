@@ -8,7 +8,10 @@ schema."""
 
 from __future__ import annotations
 
+import json
 import os
+
+import pytest
 
 from amadeus_spark.operators import versioned as V
 
@@ -101,3 +104,81 @@ def test_fused_data_files_keep_logical_schema(spark, tmp_path):
         str(tmp_path / "vt" / "data" / e["dir"] / e["path"])
     )
     assert "_change_type" in raw.names and "_commit_version" in raw.names
+
+
+# ------------------------------------------- merge: fused vs two-write
+
+def _merge_table(spark, root, variant):
+    """60 rows in 2 files, then the variant's table change."""
+    base = spark.range(0, 60).selectExpr("id AS k", "id * 10 AS val")
+    V.commit_append(spark, root, base.coalesce(2), ["k"])
+    if variant == "check":
+        V.set_check_constraint(spark, root, "nonneg", "val >= 0")
+    elif variant == "mapping":
+        V.rename_column(spark, root, "val", "amount")
+
+
+def _merge_call(spark, root, variant, mode):
+    val = "amount" if variant == "mapping" else "val"
+    src = spark.range(40, 80).selectExpr("id AS k", f"id + 1 AS {val}")
+    kw = {}
+    if variant == "evolve":
+        src = src.selectExpr("*", "concat('n', CAST(k AS string)) AS note")
+        kw["evolve_schema"] = True
+    if variant == "empty_legs":
+        # the matched clauses never fire: 0 update and 0 delete rows,
+        # the touched rows pass through and the new keys insert
+        matched = [
+            {"action": "delete", "condition": "s.k < 0"},
+            {"action": "update", "condition": "s.k < 0",
+             "set": {val: f"s.{val}"}},
+        ]
+        nmbs = []
+    else:
+        matched = [
+            {"action": "delete", "condition": "s.k % 5 = 0"},
+            {"action": "update",
+             "set": {val: f"t.{val} + s.{val}",
+                     **({"note": "s.note"} if variant == "evolve" else {})}},
+        ]
+        nmbs = [{"action": "delete", "condition": "k % 7 = 3"}]
+    return V.commit_merge(
+        spark, root, src, "k", matched=matched,
+        not_matched=[{"action": "insert", "values": None}],
+        not_matched_by_source=nmbs, changefeed=True, mode=mode, **kw,
+    )
+
+
+@pytest.mark.parametrize("mode", ["rewrite", "dv"])
+@pytest.mark.parametrize("variant", ["check", "mapping", "evolve", "empty_legs"])
+def test_fused_merge_matches_two_write_path(
+    spark, tmp_path, monkeypatch, variant, mode
+):
+    """A changefeed MERGE committed through the one-pass fused write and
+    through the two-write path (kill-switch off) yields the same
+    snapshot, change rows and manifest row totals."""
+    out = {}
+    for path, env in (("fused", "1"), ("plain", "0")):
+        monkeypatch.setenv("AMADEUS_FUSE_CDF", env)
+        root = str(tmp_path / f"vt_{path}")
+        _merge_table(spark, root, variant)
+        v, _, _ = _merge_call(spark, root, variant, mode)
+        man = V._read_manifest(spark, root, v)
+        out[path] = (
+            _state(spark, root),
+            sorted(map(str, V.table_changes(spark, root, v, v).collect())),
+            man["total_rows"], man.get("total_dv_rows", 0),
+            json.loads(man["schema"]), man.get("column_mapping"),
+        )
+    monkeypatch.delenv("AMADEUS_FUSE_CDF", raising=False)
+    assert out["fused"] == out["plain"]
+    state, feed = out["fused"][:2]
+    kinds = {r.split("_change_type='")[1].split("'")[0] for r in feed}
+    if variant == "empty_legs":
+        assert kinds == {"insert"}
+    else:
+        assert kinds == {"insert", "update_preimage", "update_postimage",
+                         "delete"}
+    assert len(state) == 60 + 20 - (
+        0 if variant == "empty_legs" else 4 + 6
+    )

@@ -2634,8 +2634,8 @@ def test_check_enforcement_only_on_changed_legs(spark, root, monkeypatch):
     """Rewrite commits validate ONLY their changed legs (r12 advice /
     r13 verdict nit): pass-through rows passed the CHECK chain at
     their original write, so upsert/update/merge/cdc enforce the
-    updated/inserted frames (merge gates its single rewrite frame on
-    __upd) and DELETE enforces nothing; _commit's full-frame pass is
+    updated/inserted rows (merge gates its one output frame on __chk)
+    and DELETE enforces nothing; _commit's full-frame pass is
     skipped (pre_checked). Pinned by counting _enforce_constraints
     invocations per op — one extra call means the full merged frame
     went back through the chain."""
@@ -2674,7 +2674,8 @@ def test_check_enforcement_only_on_changed_legs(spark, root, monkeypatch):
     V.commit_delete_where(spark, root, "k = 7")
     assert calls == []
     calls.clear()
-    # merge rewrite: ONE gated call for the mixed frame + one for ins
+    # merge rewrite: ONE call, gated on the changed/inserted data rows
+    # of the single output frame (pass-through rows bypass it)
     src = spark.createDataFrame([(2, 5), (500, 9)], "k bigint, v bigint")
     V.commit_merge(
         spark, root, src, "k",
@@ -2682,7 +2683,7 @@ def test_check_enforcement_only_on_changed_legs(spark, root, monkeypatch):
         not_matched=[{"action": "insert",
                       "values": {"k": "k", "val": "v"}}],
     )
-    assert sorted(calls, key=str) == [None, "__upd"]
+    assert calls == ["__chk"]
     calls.clear()
     # cdc: upserts leg only
     V.apply_changes(
@@ -2720,9 +2721,9 @@ def test_check_gate_skips_passthrough_rows(spark):
 def test_check_enforcement_dv_merge_chains_postimages_only(
     spark, root, monkeypatch
 ):
-    """DV-mode merge: only the post-image frame chains (plainly) — the
-    rewrite-mode gated chain must not be built for a frame dv mode
-    discards (review finding r14)."""
+    """DV-mode merge: ONE chain, gated so that only the post-images
+    (the data rows it writes) are checked — no second chain is built
+    for a frame dv mode discards (review finding r14)."""
     calls = []
     orig = V._enforce_constraints
 
@@ -2743,7 +2744,7 @@ def test_check_enforcement_dv_merge_chains_postimages_only(
         spark, root, src, "k", mode="dv",
         matched=[{"action": "update", "set": {"val": "s.v"}}],
     )
-    assert calls == [None]
+    assert calls == ["__chk"]
     assert V.read_version(spark, root).where("k = 2").collect()[0][
         "val"] == 5
     # and the constraint still bites on a violating dv-mode post-image
