@@ -126,11 +126,11 @@ _INDEX_SCHEMA = (
 #: estimates after filters are unreliable; measured counts are not).
 #: 1M cells of key/identity data ≈ 10-30 MB built — comfortably inside
 #: executor memory at any deployment size; larger batches keep the
-#: shuffled join. Env-tunable for cluster profiles; NOT a local-only
-#: knob: a CDC/merge micro-batch is small at 100 TB scale too, and the
-#: explicit hint removes the big side's exchange (and AQE's per-stage
-#: materialization jobs) that the estimate-blind planner would pay.
-_BC_CELLS = int(os.environ.get("AMADEUS_BROADCAST_CELLS", "1000000"))
+#: shuffled join. NOT a local-only knob: a CDC/merge micro-batch is
+#: small at 100 TB scale too, and the explicit hint removes the big
+#: side's exchange (and AQE's per-stage materialization jobs) that the
+#: estimate-blind planner would pay.
+_BC_CELLS = 1_000_000
 
 
 def _bc(df: DataFrame, n_rows, n_cols: int = 1) -> DataFrame:
@@ -171,11 +171,19 @@ def _fuse_ok(root: str) -> bool:
     a cheap METADATA move on local/HDFS-like filesystems, so one Spark
     job can stage both halves under a tag partition and the driver
     renames them into place. Object stores rename by COPY — they keep
-    the two-write path. Env kill-switch for debugging only."""
+    the two-write path."""
     scheme = root.split("://", 1)[0] if "://" in root else ""
-    return scheme in ("", "file", "hdfs") and os.environ.get(
-        "AMADEUS_FUSE_CDF", "1"
-    ) != "0"
+    return scheme in ("", "file", "hdfs")
+
+
+def _stage_names(cols, *bases: str) -> list[str]:
+    """``bases`` behind an underscore run no column of ``cols`` starts
+    with: the SQL legs reference a staged column by name, so it must
+    never shadow a table column."""
+    pre = "__"
+    while any(c.startswith(pre) for c in cols):
+        pre += "_"
+    return [pre + b for b in bases]
 
 
 def _emit_legs(df: DataFrame, names: list[str], legs: list[tuple]) -> DataFrame:
@@ -186,9 +194,10 @@ def _emit_legs(df: DataFrame, names: list[str], legs: list[tuple]) -> DataFrame:
     ``inline(filter(array(IF(cond, named_struct(..)), ..)))``
     projection (Delta's MERGE output shape). N filtered copies of one
     frame would re-plan its upstream (broadcasts, scans, cache stages)
-    once per copy. A lone data leg is a plain filter + select with no
-    ``_change_type`` column."""
-    if len(legs) == 1 and legs[0][1] is None:
+    once per copy. Data legs alone carry no ``_change_type`` column; a
+    lone data leg is a plain filter + select."""
+    tagged = any(change_type is not None for _, change_type, _ in legs)
+    if len(legs) == 1 and not tagged:
         cond, _, vals = legs[0]
         out = df if cond == "true" else df.where(cond)
         return out.selectExpr(
@@ -199,15 +208,40 @@ def _emit_legs(df: DataFrame, names: list[str], legs: list[tuple]) -> DataFrame:
         fields = ", ".join(
             f"{_sql_str(n)}, {v}" for n, v in zip(names, vals)
         )
-        ct = "CAST(NULL AS STRING)" if change_type is None else _sql_str(
-            change_type
-        )
-        arms.append(
-            f"IF({cond}, named_struct({fields}, '_change_type', {ct}), NULL)"
-        )
+        if tagged:
+            fields += ", '_change_type', " + (
+                "CAST(NULL AS STRING)" if change_type is None
+                else _sql_str(change_type)
+            )
+        arms.append(f"IF({cond}, named_struct({fields}), NULL)")
     return df.selectExpr(
         f"inline(filter(array({', '.join(arms)}), x -> x IS NOT NULL))"
     )
+
+
+def _commit_frame(parts: list[tuple], names: list[str], cons: dict) -> DataFrame:
+    """The one output frame of a copy-on-write commit (for
+    ``_commit(cdf="tagged")``, or its plain data frame when no leg is
+    a change leg): the union of :func:`_emit_legs` over each ``(frame,
+    legs)`` of ``parts``, a leg extended by ``chk``, SQL true on the
+    rows the CHECK constraints ``cons`` must validate — the data rows
+    the commit changed or inserted (pass-through rows passed at their
+    original write, change rows are copies). ONE chain gated on it
+    runs over the union; _commit then skips its full-frame pass."""
+    chk_col = _stage_names(names, "chk")[0]
+    out_names = names + ([chk_col] if cons else [])
+    out = None
+    for df, legs in parts:
+        f = _emit_legs(df, out_names, [
+            (cond, ct, vals + ([chk] if cons else []))
+            for cond, ct, vals, chk in legs
+        ])
+        out = f if out is None else out.unionByName(
+            f, allowMissingColumns=True
+        )
+    if cons:
+        out = _enforce_constraints(out, cons, gate=chk_col).drop(chk_col)
+    return out
 
 
 def _fused_write(
@@ -1488,6 +1522,31 @@ def _check_reserved(cols, what: str, *, prefix: bool = False) -> None:
         )
 
 
+#: the columns a changefeed commit adds to its rows: the change type,
+#: the version stamp, and the leg partition of :func:`_fused_write`
+_CDF_COLS = ("_change_type", "_commit_version", "__cdf")
+
+
+def _check_cdf_cols(seg: dict | None, cols=()) -> None:
+    """Refuse, before anything is written or read, a changefeed commit
+    or read whose table (logical or physical names in ``seg``) or
+    incoming columns ``cols`` hold one of :data:`_CDF_COLS`: the
+    tagged frame would carry the column twice, or the feed's own
+    columns would shadow the table's."""
+    names = set(cols)
+    schema = _manifest_schema(seg) if seg else None
+    if schema is not None:
+        for f in schema.fields:
+            names |= {f.name, _phys_name(seg, f.name)}
+    bad = sorted(names & set(_CDF_COLS))
+    if bad:
+        raise ValueError(
+            f"changefeed commit: column(s) {bad} collide with the "
+            f"change-row columns {list(_CDF_COLS)} — rename them "
+            "(or commit without a changefeed)"
+        )
+
+
 def _snapshot_read(
     spark: SparkSession,
     root: str,
@@ -1873,16 +1932,22 @@ def _commit(
     # surfacing as the "concurrent commit" conflict commit_with_retry
     # exists to catch — the optimistic-concurrency contract.
     _require_plain_root(root, "a data commit")
-    # cdf="tagged": df is ONE frame of data AND change rows
-    # (:func:`_emit_legs` — _change_type NULL marks a data row); the
-    # caller enforced CHECK constraints on its changed rows itself
+    # ONE way in for data AND change rows: cdf="tagged", df being the
+    # one frame of :func:`_commit_frame` (_change_type NULL marks a
+    # data row) whose changed rows the caller CHECK-enforced itself. A
+    # DataFrame cdf is a change-only commit (df=None: DV delete,
+    # restore).
     legs = None
+    if isinstance(cdf, DataFrame) and df is not None:
+        raise ValueError(
+            "data and change rows arrive together only as one tagged "
+            "frame (cdf='tagged')"
+        )
     if isinstance(cdf, str) and cdf == "tagged":
         if not pre_checked:
             raise ValueError("a tagged commit frame must be pre-checked")
-        legs = df
+        legs, cdf = df, None
         df = legs.where("_change_type IS NULL").drop("_change_type")
-        cdf = legs.where("_change_type IS NOT NULL")
     cur = prev["version"] if prev is not None else current_version(spark, root)
     version = cur + 1
     # streaming txn high-water marks (run_cdc_versioned_sink) survive
@@ -1984,22 +2049,29 @@ def _commit(
         # on logical names); stats_cols are physical already
         df = _to_physical(df, mapping)
         legs = _to_physical(legs, mapping)
-    # data + change rows FUSE into one write job when the commit has
-    # both and renames are cheap (guide §2.4; see _fused_write) — the
-    # write itself then happens in the cdf block below. The reserved
-    # column names must be free on BOTH frames (a physical table
-    # column named like them would corrupt the union's alignment).
-    fuse_cdf = (
-        df is not None
-        and isinstance(cdf, DataFrame)
-        and _fuse_ok(root)
-        and not (
-            {"_change_type", "_commit_version", "__cdf"}
-            & (set(df.columns) | (set(cdf.columns) - {"_change_type"}))
-        )
-    )
-    if df is not None and not fuse_cdf:
+    cdf_dir = f"v{version}-{uuid.uuid4().hex[:8]}"
+    cdf_path = f"{root}/{CDF_DIR}/{cdf_dir}"
+    if legs is not None:
+        # data + change rows FUSE into one write job where renames are
+        # cheap (guide §2.4; see _fused_write). Object stores write
+        # twice, both writes reading the one tagged frame — persisted
+        # here, so its upstream runs once
+        if _fuse_ok(root):
+            _fused_write(spark, legs, version, commit_dir, cdf_path)
+        else:
+            legs = legs.persist()
+            try:
+                legs.where("_change_type IS NULL").drop(
+                    "_change_type"
+                ).write.mode("errorifexists").parquet(commit_dir)
+                legs.where("_change_type IS NOT NULL").withColumn(
+                    "_commit_version", F.lit(version)
+                ).write.mode("errorifexists").parquet(cdf_path)
+            finally:
+                legs.unpersist()
+    elif df is not None:
         df.write.mode("errorifexists").parquet(commit_dir)
+    if df is not None:
         fresh = _file_entries(commit_dir, stats_cols)
         new_files = new_files + fresh
         if bloom_spec and bloom_spec.get("cols"):
@@ -2035,46 +2107,13 @@ def _commit(
         # CDF serves neither): feeds SPAN them contributing nothing
         cdf_mark = "none"
         cdf = None
-    if isinstance(cdf, str) and cdf == "from_add":
-        # streamable append: re-read the JUST-COMMITTED files (cheaper
-        # than re-running an expensive upstream plan twice) and copy
-        # them into the feed as inserts
-        cdf = (
-            spark.read.parquet(commit_dir).withColumn(
-                "_change_type", F.lit("insert")
-            )
-            if new_files
-            else None
-        )
     if cdf is not None:
-        cdf_dir = f"v{version}-{uuid.uuid4().hex[:8]}"
-        # change files store PHYSICAL names too (the from_add path
-        # already does: it re-reads the committed files) — a feed
-        # spanning a rename unifies on the stable physical name
-        cdf = _to_physical(cdf, mapping)
-        if fuse_cdf:
-            if legs is None:
-                legs = df.selectExpr(
-                    "*", "CAST(NULL AS STRING) AS _change_type"
-                ).unionByName(cdf, allowMissingColumns=True)
-            _fused_write(
-                spark, legs, version, commit_dir,
-                f"{root}/{CDF_DIR}/{cdf_dir}",
-            )
-            fresh = _file_entries(commit_dir, stats_cols)
-            new_files = new_files + fresh
-            if bloom_spec and bloom_spec.get("cols"):
-                _write_bloom_sidecar(
-                    spark, root, commit_dir, bloom_spec, fresh,
-                    _physical_schema(
-                        {"schema": schema_json, "column_mapping": mapping}
-                    ),
-                    set(df.columns),
-                )
-        else:
-            cdf.withColumn("_commit_version", F.lit(version)).write.mode(
-                "errorifexists"
-            ).parquet(f"{root}/{CDF_DIR}/{cdf_dir}")
+        # change files store PHYSICAL names too — a feed spanning a
+        # rename unifies on the stable physical name
+        _to_physical(cdf, mapping).withColumn(
+            "_commit_version", F.lit(version)
+        ).write.mode("errorifexists").parquet(cdf_path)
+    if cdf is not None or legs is not None:
         cdf_mark = {"dir": cdf_dir}
     elif op == "append":
         cdf_mark = "add"
@@ -2319,19 +2358,25 @@ def commit_append(
     The segment records only the ADDED files — O(batch) bytes.
 
     ``changefeed=True`` additionally COPIES the batch into
-    ``_change_data/`` as insert rows (read back from the
-    just-committed files, not recomputed). Batch :func:`table_changes`
-    never needs this — an append's add files ARE its inserts — but a
-    STREAMING consumer (:func:`stream_table_changes`, a plain file
-    source over _change_data/) only sees what lands there; opt in on
-    tables feeding one, at the cost of one extra copy of each append
-    batch."""
+    ``_change_data/`` as insert rows, from the same pass that writes
+    the data files (one tagged frame, see :func:`_commit_frame`).
+    Batch :func:`table_changes` never needs this — an append's add
+    files ARE its inserts — but a STREAMING consumer
+    (:func:`stream_table_changes`, a plain file source over
+    _change_data/) only sees what lands there; opt in on tables
+    feeding one, at the cost of one extra copy of each append batch."""
     cur = current_version(spark, root)
     prev = _read_manifest(spark, root, cur) if cur >= 0 else None
+    if changefeed:
+        _check_cdf_cols(prev, df.columns)
+        vals = [_q(c) for c in df.columns]
+        df = _commit_frame([(df, [
+            ("true", None, vals, "true"), ("true", "insert", vals, "false"),
+        ])], df.columns, (prev or {}).get("constraints") or {})
     cols = stats_cols or (prev["stats_cols"] if prev else [])
     return _commit(
         spark, root, df, "append", cols, prev=prev,
-        cdf="from_add" if changefeed else None,
+        cdf="tagged" if changefeed else None, pre_checked=changefeed,
         # AddFile-only, reads nothing: a CAS loss re-publishes the
         # staged files at the bumped version (never re-runs the job)
         conflict={"kind": "append"},
@@ -2498,17 +2543,15 @@ def _keyed_rewrite(
     are rewritten (survivors anti-join + the upserted rows); every
     other file carries over by reference — zero data movement and zero
     log bytes. ``changefeed=True`` records the change rows for
-    :func:`table_changes`; the touched-file read is then persisted (it
-    feeds survivors AND preimages — one scan). Returns (new_version,
-    files_rewritten, files_carried)."""
+    :func:`table_changes`, tagged in the data frame itself (see
+    :func:`_commit_frame`). Returns (new_version, files_rewritten,
+    files_carried)."""
     seg = res["seg"]
     nk = len(key_cols)
     op_col, delete_op = delete or (None, None)
     upserts = batch
     if delete is not None:
-        upserts = batch.filter(F.col(op_col) != delete_op).select(
-            [c for c in batch.columns if c != op_col]
-        )
+        upserts = batch.filter(F.col(op_col) != delete_op).drop(op_col)
     # no key means no key file: an empty or all-NULL-key batch matches
     # no row (SQL equality), so it reads and removes nothing and its
     # rows land as inserts — commit_merge's rule; _rebase_ok reads the
@@ -2517,105 +2560,96 @@ def _keyed_rewrite(
     touched = [] if lo is None else _pruned_entries(
         spark, root, res, key_cols[0], lo, hi, slim=True
     )
-    # CHECK enforcement on the CHANGED leg only: survivors passed the
-    # chain at their original write (pre_checked below skips the
-    # full-frame re-validation _commit would otherwise run); the CDF
-    # copies stay unchained — a violation aborts on the data write,
-    # which runs first
+    # survivors read through the manifest schema (_reader); the batch
+    # may ADD a column — survivors surface NULL for it (widen-only
+    # schema evolution; the callers raise on an omitted column).
+    # _snapshot_read applies any deletion vectors, so a rewrite of a
+    # DV'd file physically purges its deleted rows.
+    read = _snapshot_read(spark, root, seg, touched) if touched else None
     cons = seg.get("constraints") or {}
-    merged = _enforce_constraints(upserts, cons) if cons else upserts
-    cached = []
-    cdf_frame = None
-    if changefeed and not touched:
-        # every upsert is an insert; a delete hit an absent key (no row)
-        cdf_frame = upserts.withColumn("_change_type", F.lit("insert"))
-    try:
+    if not changefeed:
+        # CHECK enforcement on the CHANGED leg only: survivors passed
+        # the chain at their original write (pre_checked below skips
+        # the full-frame re-validation _commit would otherwise run)
+        out = _enforce_constraints(upserts, cons) if cons else upserts
         if touched:
-            # survivors read through the manifest schema (_reader);
-            # allowMissingColumns lets the batch ADD a column —
-            # survivors surface NULL for it (widen-only schema
-            # evolution; the callers raise on an omitted column).
-            # _snapshot_read applies any deletion vectors, so a
-            # rewrite of a DV'd file physically purges its deleted rows.
-            touched_read = _snapshot_read(spark, root, seg, touched)
-            if changefeed:
-                touched_read = touched_read.persist()
-                cached.append(touched_read)
-            survivors = touched_read.join(
+            out = read.join(
                 # no distinct: anti-join is existence — dup build keys
                 # are free, the dedup Exchange is not
                 _bc(batch.select(*key_cols), n, nk), key_cols, "left_anti"
+            ).unionByName(out, allowMissingColumns=True)
+    else:
+        # one pass over each side: the touched rows emit survivors and
+        # preimages/deletes, the upserts themselves and their
+        # postimages/inserts. Column d, left-joined by key, is NULL
+        # where the batch misses the key, else whether the batch
+        # deletes it
+        names, parts = upserts.columns, []
+        d = _stage_names(names + (read.columns if touched else []), "d")[0]
+        ups = upserts.selectExpr("*", f"CAST(NULL AS BOOLEAN) AS {d}")
+        if touched:
+            names = read.columns + [c for c in names if c not in read.columns]
+            is_del = (
+                f"coalesce({_q(op_col)} = {_sql_str(delete_op)}, false)"
+                if delete else "false"
             )
-            merged = survivors.unionByName(merged, allowMissingColumns=True)
-        if changefeed and touched:
-            if delete is None:
-                # semi-join: duplicate batch keys never fan preimages out
-                pre = touched_read.join(
-                    _bc(batch.select(*key_cols), n, nk), key_cols, "left_semi"
-                )
-                label = F.lit("update_preimage")
-            else:
-                # one event per key (latest-wins): one label per preimage
-                pre = touched_read.join(
-                    _bc(batch.select(*key_cols, op_col), n, nk + 1),
-                    key_cols, "inner",
-                )
-                label = F.when(
-                    F.col(op_col) == delete_op, F.lit("delete")
-                ).otherwise(F.lit("update_preimage"))
-            pre = pre.persist()
-            cached.append(pre)
-            ch_pre = pre.select(
-                *[F.col(c) for c in pre.columns if c != op_col],
-                label.alias("_change_type"),
+            keys = _bc(batch.selectExpr(
+                *[_q(c) for c in key_cols], f"{is_del} AS {d}"
+            ), n, nk + 1)
+            # the touched keys the batch hits; distinct, as the table
+            # may hold duplicate keys (a dup'd build side fans rows out)
+            hit = _bc(
+                read.select(*key_cols).join(keys, key_cols).distinct(),
+                n, nk + 1,
             )
-            # post-images and inserts are both plain upsert rows — ONE
-            # membership join (matched key -> postimage, else insert),
-            # broadcast-hinted on the measured count: zero exchanges on
-            # the batch side. distinct: the table may hold duplicate
-            # keys, and a dup'd build side would fan upsert rows out
-            upd_keys = pre.select(*key_cols).distinct().withColumn(
-                "__m", F.lit(True)
-            )
-            ch_rest = (
-                upserts.join(_bc(upd_keys, n, nk + 1), key_cols, "left_outer")
-                .withColumn(
-                    "_change_type",
-                    F.when(
-                        F.coalesce(F.col("__m"), F.lit(False)),
-                        F.lit("update_postimage"),
-                    ).otherwise(F.lit("insert")),
-                )
-                .drop("__m")
-            )
-            cdf_frame = ch_pre.unionByName(ch_rest, allowMissingColumns=True)
-        v = _commit(
-            spark,
-            root,
-            merged,
-            op,
-            seg["stats_cols"],
-            removes=_rm(touched),
-            removed_rows=_nrows(touched),
-            removed_dv=_dv_debit(touched),
-            extra=extra,
-            prev=seg,
-            cdf=cdf_frame,
-            pre_checked=True,
-            # key-pruned footprint: a CAS loss re-bases when every
-            # winner is provably outside [lo, hi] and removed none of
-            # the touched files (see _rebase_ok)
-            conflict={
-                "kind": "pruned",
-                "read": _rm(touched),
-                "key_col": _phys_name(seg, key_cols[0]),
-                "lo": lo,
-                "hi": hi,
-            },
-        )
-    finally:
-        for c in cached:
-            c.unpersist()
+            pre = [
+                _q(c) if c in read.columns
+                else f"CAST(NULL AS {_ddl(upserts.schema[c].dataType)})"
+                for c in names
+            ]
+            # a CDC batch holds one event per key (latest-wins), so the
+            # touched rows join its keys directly; an upsert batch may
+            # repeat a key, so they join the hit frame the upserts join
+            # (one plan, one exchange — unless the batch is cached:
+            # Spark reuses no exchange over a cached frame)
+            parts.append((read.join(
+                keys if delete else hit, key_cols, "left_outer"
+            ), [
+                (f"{d} IS NULL", None, pre, "false"),
+                (f"NOT {d}", "update_preimage", pre, "false"),
+                (d, "delete", pre, "false"),
+            ]))
+            ups = upserts.join(hit, key_cols, "left_outer")
+        vals = [_q(c) for c in names]
+        out = _commit_frame(parts + [(ups, [
+            ("true", None, vals, "true"),
+            (f"NOT {d}", "update_postimage", vals, "false"),
+            (f"{d} IS NULL", "insert", vals, "false"),
+        ])], names, cons)
+    v = _commit(
+        spark,
+        root,
+        out,
+        op,
+        seg["stats_cols"],
+        removes=_rm(touched),
+        removed_rows=_nrows(touched),
+        removed_dv=_dv_debit(touched),
+        extra=extra,
+        prev=seg,
+        cdf="tagged" if changefeed else None,
+        pre_checked=True,
+        # key-pruned footprint: a CAS loss re-bases when every
+        # winner is provably outside [lo, hi] and removed none of
+        # the touched files (see _rebase_ok)
+        conflict={
+            "kind": "pruned",
+            "read": _rm(touched),
+            "key_col": _phys_name(seg, key_cols[0]),
+            "lo": lo,
+            "hi": hi,
+        },
+    )
     return v, len(touched), seg["total_files"] - len(touched)
 
 
@@ -2641,6 +2675,8 @@ def commit_upsert(
     key_cols = [key_col] if isinstance(key_col, str) else list(key_col)
     res = _keyed_table(spark, root, key_cols[0])
     _require_full_rows(_manifest_schema(res["seg"]), updates.columns, "updates")
+    if changefeed:
+        _check_cdf_cols(res["seg"], updates.columns)
     # the bounds pass also counts the batch (free in the same agg): a
     # MEASURED row count lets every downstream join of the batch's keys
     # broadcast-hint deliberately (guide §3.1) instead of shuffling the
@@ -2744,19 +2780,21 @@ def commit_delete_where(
         raise FileNotFoundError(f"no versioned table at {root}")
     res = _resolve(spark, root, cur)
     seg = res["seg"]
+    if changefeed:
+        _check_cdf_cols(seg)
     pred = F.expr(predicate)
     # only the DV leg re-ADDS entries (stats must carry); the rewrite
     # leg reads/removes them — identity/rows/dv suffice (slim skips
     # deserializing the per-file stats maps through a checkpoint index)
     refs = _pruned_entries(spark, root, res, slim=(mode != "dv"))
+    conflict = _predicate_conflict(seg, predicate)
     if mode == "dv":
-        return _delete_where_dv(
-            spark, root, cur, seg, refs, pred, changefeed,
-            conflict=_predicate_conflict(seg, predicate),
+        v, n = _dv_commit(
+            spark, root, cur, seg, refs, pred, "delete", changefeed, conflict
         )
+        return v, 0, seg["total_files"], n
     return _delete_where_rewrite(
-        spark, root, cur, seg, refs, pred, changefeed,
-        conflict=_predicate_conflict(seg, predicate),
+        spark, root, cur, seg, refs, pred, changefeed, conflict
     )
 
 
@@ -2780,41 +2818,37 @@ def _delete_where_rewrite(
         # carried = the WHOLE snapshot (refs may be a pruned subset)
         return cur, 0, seg["total_files"], 0
     n_kept = seg["total_files"] - len(touched)
-    touched_read = _snapshot_read(spark, root, seg, touched)
-    keep = touched_read.where(~F.coalesce(pred, F.lit(False)))
-    cached = []
-    cdf_frame = None
-    try:
-        if changefeed:
-            touched_read = touched_read.persist()
-            cached.append(touched_read)
-            keep = touched_read.where(~F.coalesce(pred, F.lit(False)))
-            cdf_frame = touched_read.where(pred).withColumn(
-                "_change_type", F.lit("delete")
-            )
-        v = _commit(
-            spark,
-            root,
-            keep,
-            "delete",
-            seg["stats_cols"],
-            # a DELETE writes only pass-through survivors — rows that
-            # passed CHECK at their original write; nothing to enforce
-            pre_checked=True,
-            removes=_rm(touched),
-            removed_rows=_nrows(touched),
-            removed_dv=_dv_debit(touched),
-            prev=seg,
-            cdf=cdf_frame,
-            # simple predicates classify: a racing APPEND whose stats
-            # refute the predicate re-bases this delete instead of
-            # recomputing it (see _rebase_ok kind="predicate");
-            # keyed deletes classify as kind="pruned" on their range
-            conflict=conflict,
-        )
-    finally:
-        for c in cached:
-            c.unpersist()
+    # the predicate staged ONCE as column p; the kept rows are the data
+    # leg, the deleted rows the delete leg (see _emit_legs)
+    read = _snapshot_read(spark, root, seg, touched)
+    p = _stage_names(read.columns, "p")[0]
+    cols = [_q(c) for c in read.columns]
+    legs = [(f"NOT {p}", None, cols)]
+    if changefeed:
+        legs.append((p, "delete", cols))
+    v = _commit(
+        spark,
+        root,
+        _emit_legs(
+            read.select("*", F.coalesce(pred, F.lit(False)).alias(p)),
+            read.columns, legs,
+        ),
+        "delete",
+        seg["stats_cols"],
+        # a DELETE writes only pass-through survivors — rows that
+        # passed CHECK at their original write; nothing to enforce
+        pre_checked=True,
+        removes=_rm(touched),
+        removed_rows=_nrows(touched),
+        removed_dv=_dv_debit(touched),
+        prev=seg,
+        cdf="tagged" if changefeed else None,
+        # simple predicates classify: a racing APPEND whose stats
+        # refute the predicate re-bases this delete instead of
+        # recomputing it (see _rebase_ok kind="predicate");
+        # keyed deletes classify as kind="pruned" on their range
+        conflict=conflict,
+    )
     # count from THIS commit's own entries (touched minus kept-rows
     # written) — rebase-proof, unlike a stale-snapshot totals diff
     # (a re-based loser's final total also carries the winner's adds)
@@ -2868,6 +2902,8 @@ def commit_delete_keys(
         raise FileNotFoundError(f"no versioned table at {root}")
     res = _resolve(spark, root, cur)
     seg = res["seg"]
+    if changefeed:
+        _check_cdf_cols(seg)
     phys = _phys_name(seg, key_col)
     lo = hi = None
     if phys in seg["stats_cols"]:
@@ -2896,12 +2932,12 @@ def commit_delete_keys(
         else None
     )
     if mode == "dv":
-        return _delete_where_dv(
-            spark, root, cur, seg, refs, pred, changefeed,
-            conflict=conflict,
+        v, n = _dv_commit(
+            spark, root, cur, seg, refs, pred, "delete", changefeed, conflict
         )
+        return v, 0, seg["total_files"], n
     return _delete_where_rewrite(
-        spark, root, cur, seg, refs, pred, changefeed, conflict=conflict
+        spark, root, cur, seg, refs, pred, changefeed, conflict
     )
 
 
@@ -2998,63 +3034,68 @@ def _drop_dv_dir(spark: SparkSession, dv_path: str) -> None:
     fs.delete(_jpath(spark, dv_path), True)
 
 
-def _delete_where_dv(
+def _dv_commit(
     spark: SparkSession,
     root: str,
     cur: int,
     seg: dict,
     refs: list[dict],
     pred,
+    op: str,
     changefeed: bool,
     conflict: dict | None = None,
-) -> tuple[int, int, int, int]:
-    """The merge-on-read DELETE leg: one DV-applied scan finds the
-    matched LIVE rows; their identities (plus the touched files'
-    existing DV rows) land in a fresh deletion-vector parquet via
-    :func:`_stage_dv`; the touched entries re-commit by reference."""
+    output=None,
+) -> tuple[int, int]:
+    """The merge-on-read DELETE/UPDATE leg (Delta's deletion vectors):
+    one DV-applied scan finds the matched LIVE rows; their identities
+    (plus the touched files' existing DV rows) land in a fresh
+    deletion-vector parquet via :func:`_stage_dv`; the touched entries
+    re-commit by reference — no file rewrites, the commit moves
+    O(matched rows). An UPDATE's ``output`` builds its commit frame
+    from the matched rows (post-images append as a NEW data file); a
+    DELETE commits its change rows only. Returns ``(new_version,
+    rows_matched)``, ``(cur, 0)`` when nothing matched."""
     if not refs:
-        return cur, 0, 0, 0
+        return cur, 0
     live = _snapshot_read(spark, root, seg, refs, keep_identity=True)
     matched = live.where(F.coalesce(pred, F.lit(False)))
-    if not changefeed:
+    if output is None and not changefeed:
         # column-prune the scan to predicate + identity columns
         matched = matched.select(*_ID_COLS)
     matched = matched.persist()
     try:
         staged = _stage_dv(spark, root, cur, refs, matched)
         if staged is None:
-            # carried = the WHOLE snapshot (refs may be a pruned
-            # subset — the keyed-delete path hands in candidates only)
-            return cur, 0, seg["total_files"], 0
+            return cur, 0
         touched, per_file, dv_path, new_entries = staged
-        cdf_frame = (
-            matched.drop(*_ID_COLS).withColumn(
-                "_change_type", F.lit("delete")
-            )
-            if changefeed
-            else None
-        )
+        rows = matched.drop(*_ID_COLS)
+        df, cdf = None, "tagged" if changefeed else None
+        if output is not None:
+            df = output(rows, F.lit(True))
+        elif changefeed:
+            cdf = rows.withColumn("_change_type", F.lit("delete"))
         try:
             v = _commit(
                 spark,
                 root,
-                None,
-                "delete",
+                df,
+                op,
                 seg["stats_cols"],
                 removes=_rm(touched),
                 removed_rows=_nrows(touched),
                 removed_dv=_dv_debit(touched),
                 prev=seg,
-                cdf=cdf_frame,
+                cdf=cdf,
                 add_entries=new_entries,
                 conflict=conflict,
+                pre_checked=True,
             )
         except RuntimeError:
             _drop_dv_dir(spark, dv_path)
             raise
     finally:
         matched.unpersist()
-    return v, 0, seg["total_files"], sum(per_file.values())
+    return v, sum(per_file.values())
 
 
 def commit_update_where(
@@ -3112,149 +3153,76 @@ def commit_update_where(
             + [_st.StructField(c, probe.schema[c].dataType) for c in unknown]
         )
     fields = {f.name: f.dataType for f in schema.fields}
+    if changefeed:
+        _check_cdf_cols(seg, fields)
     pred = F.expr(predicate)
+    cons = seg.get("constraints") or {}
 
-    def apply_set(frame: DataFrame) -> DataFrame:
-        # ONE select: every SET expression evaluates against the
-        # pre-update row, then casts to the column's manifest type
-        return frame.select(
-            *[
-                (
-                    F.expr(set_exprs[f.name]).cast(f.dataType).alias(f.name)
-                    if f.name in set_exprs
-                    else F.col(f.name)
-                )
-                for f in schema.fields
-            ]
+    def output(frame: DataFrame, hit) -> DataFrame:
+        # the row's match ``hit`` and every SET value staged ONCE: each
+        # SET expression sees the PRE-update row (one simultaneous
+        # select), casts to the column's manifest type and runs only
+        # where the row matches. The data leg keeps or updates each
+        # row, CHECK-gated on the updated ones; the changefeed legs
+        # copy the pre/post images. Evolved columns do not exist in
+        # the touched files: pre-images read them as typed NULLs
+        p, *vals = _stage_names(
+            frame.columns, "p", *["v_" + c for c in set_exprs]
         )
-
-    def widen(frame: DataFrame) -> DataFrame:
-        # evolved columns don't exist in the touched files: carry
-        # untouched/pre-image rows through the evolved shape as typed
-        # NULLs so unions line up column-for-column
-        if not unknown:
-            return frame
-        return frame.select(
-            *[
-                F.col(f.name)
-                if f.name in old_names
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
+        val = dict(zip(set_exprs, vals))
+        staged = frame.select("*", hit.alias(p)).selectExpr("*", *[
+            f"IF({p}, CAST(({ex}) AS {_ddl(fields[c])}), NULL) AS "
+            f"{_q(val[c])}"
+            for c, ex in set_exprs.items()
+        ])
+        pre = [
+            _q(c) if c in old_names else f"CAST(NULL AS {_ddl(t)})"
+            for c, t in fields.items()
+        ]
+        post = [
+            _q(val[c]) if c in set_exprs else pr
+            for c, pr in zip(fields, pre)
+        ]
+        data = [
+            f"IF({p}, {po}, {pr})" if c in set_exprs else pr
+            for c, pr, po in zip(fields, pre, post)
+        ]
+        legs = [("true", None, data, p)]
+        if changefeed:
+            legs += [
+                (p, "update_preimage", pre, "false"),
+                (p, "update_postimage", post, "false"),
             ]
-        )
+        return _commit_frame([(staged, legs)], list(fields), cons)
 
     # slim for the rewrite leg (stats never re-added), full for dv
     refs = _pruned_entries(spark, root, res, slim=(mode != "dv"))
     if mode == "dv":
-        return _update_where_dv(
-            spark, root, cur, seg, refs, pred, apply_set, widen,
-            changefeed, conflict=_predicate_conflict(seg, predicate),
-        )
+        return _dv_commit(
+            spark, root, cur, seg, refs, pred, "update", changefeed,
+            _predicate_conflict(seg, predicate), output,
+        )[0], 0, seg["total_files"]
     touched = _touched_by_predicate(spark, root, seg, refs, pred)
     if not touched:
         return cur, 0, len(refs)
-    n_kept = seg["total_files"] - len(touched)
-    touched_read = _snapshot_read(spark, root, seg, touched)
-    cached = []
-    cdf_frame = None
-    try:
-        if changefeed:
-            touched_read = touched_read.persist()
-            cached.append(touched_read)
-        unchanged = widen(
-            touched_read.where(~F.coalesce(pred, F.lit(False)))
-        )
-        pre = touched_read.where(pred)
-        post = apply_set(pre)
-        # CHECK only the UPDATED leg — unchanged rows passed the chain
-        # at their original write (pre_checked below); the CDF copies
-        # stay unchained (the data write runs first and aborts)
-        cons = seg.get("constraints") or {}
-        merged = unchanged.unionByName(
-            _enforce_constraints(post, cons) if cons else post
-        )
-        if changefeed:
-            cdf_frame = widen(pre).withColumn(
-                "_change_type", F.lit("update_preimage")
-            ).unionByName(
-                post.withColumn("_change_type", F.lit("update_postimage"))
-            )
-        v = _commit(
-            spark,
-            root,
-            merged,
-            "update",
-            seg["stats_cols"],
-            removes=_rm(touched),
-            removed_rows=_nrows(touched),
-            removed_dv=_dv_debit(touched),
-            prev=seg,
-            cdf=cdf_frame,
-            conflict=_predicate_conflict(seg, predicate),
-            pre_checked=True,
-        )
-    finally:
-        for c in cached:
-            c.unpersist()
-    return v, len(touched), n_kept
-
-
-def _update_where_dv(
-    spark: SparkSession,
-    root: str,
-    cur: int,
-    seg: dict,
-    refs: list[dict],
-    pred,
-    apply_set,
-    widen,
-    changefeed: bool,
-    conflict: dict | None = None,
-) -> tuple[int, int, int]:
-    """The merge-on-read UPDATE leg (Delta's DV update): the matched
-    LIVE rows are DV-deleted in place and their post-images append as
-    a NEW data file in the same commit — the touched files never
-    rewrite; the commit moves O(matched rows)."""
-    if not refs:
-        return cur, 0, 0
-    live = _snapshot_read(spark, root, seg, refs, keep_identity=True)
-    matched = live.where(F.coalesce(pred, F.lit(False))).persist()
-    try:
-        staged = _stage_dv(spark, root, cur, refs, matched)
-        if staged is None:
-            return cur, 0, len(refs)
-        touched, per_file, dv_path, new_entries = staged
-        pre = matched.drop(*_ID_COLS)
-        post = apply_set(pre)
-        cdf_frame = (
-            widen(pre).withColumn("_change_type", F.lit("update_preimage"))
-            .unionByName(
-                post.withColumn("_change_type", F.lit("update_postimage"))
-            )
-            if changefeed
-            else None
-        )
-        try:
-            v = _commit(
-                spark,
-                root,
-                post,
-                "update",
-                seg["stats_cols"],
-                removes=_rm(touched),
-                removed_rows=_nrows(touched),
-                removed_dv=_dv_debit(touched),
-                prev=seg,
-                cdf=cdf_frame,
-                add_entries=new_entries,
-                conflict=conflict,
-            )
-        except RuntimeError:
-            _drop_dv_dir(spark, dv_path)
-            raise
-    finally:
-        matched.unpersist()
-    return v, 0, seg["total_files"]
+    v = _commit(
+        spark,
+        root,
+        output(
+            _snapshot_read(spark, root, seg, touched),
+            F.coalesce(pred, F.lit(False)),
+        ),
+        "update",
+        seg["stats_cols"],
+        removes=_rm(touched),
+        removed_rows=_nrows(touched),
+        removed_dv=_dv_debit(touched),
+        prev=seg,
+        cdf="tagged" if changefeed else None,
+        conflict=_predicate_conflict(seg, predicate),
+        pre_checked=True,
+    )
+    return v, len(touched), seg["total_files"] - len(touched)
 
 
 def _sql_cond(cond: str | None) -> str:
@@ -3551,6 +3519,8 @@ def commit_merge(
             json.loads(_evolve_schema(seg.get("schema"), relevant))
         )
     fields = {f.name: f.dataType for f in schema.fields}
+    if changefeed:
+        _check_cdf_cols(seg, fields)
     hint = (
         "MERGE only evolves schema from SOURCE columns"
         if evolve_schema
@@ -3655,10 +3625,9 @@ def commit_merge(
                 old_names, matched, nmbs, n_src,
                 keep_pre=changefeed, dv=(mode == "dv"),
             )
-            if mode == "dv" or (changefeed and not _fuse_ok(root)):
-                # dv: j feeds the DV staging collect, the DV write and
-                # the commit write; a two-write commit (object stores)
-                # reads it once per leg
+            if mode == "dv":
+                # j feeds the DV staging collect, the DV write and the
+                # commit write
                 j = j.persist()
                 cached.append(j)
 
@@ -3681,33 +3650,21 @@ def commit_merge(
                 touched, _per_file, dv_path, new_entries = staged
 
         # every output row — data rows AND change rows — from one pass
-        # over each input frame (see _emit_legs). CHECK enforcement is
-        # per-LEG: with constraints every leg carries a __chk gate,
-        # true only on data rows a clause changed or inserted, and ONE
-        # gated chain runs over the union — pass-through rows passed
-        # the chain at their original write, change rows are copies
-        # (_commit then skips its full-frame pass: pre_checked)
-        cons = seg.get("constraints") or {}
-        out_names = names + (["__chk"] if cons else [])
-
-        def _leg(cond, change_type, cols, chk):
-            vals = [_q(c) for c in cols] + ([chk] if cons else [])
-            return cond, change_type, vals
-
-        outs = []
+        # over each input frame, CHECK-gated on the data rows a clause
+        # changed or inserted (see _commit_frame)
+        post = [_q(n) for n in names]
+        parts = []
         if j is not None:
-            pre = [f"__pre_{n}" for n in names]
-            legs = [
-                _leg("__upd" if mode == "dv" else "NOT __del", None, names,
-                     "__upd")
-            ]
+            pre = [_q(f"__pre_{n}") for n in names]
+            legs = [("__upd" if mode == "dv" else "NOT __del", None, post,
+                     "__upd")]
             if changefeed:
                 legs += [
-                    _leg("__upd", "update_preimage", pre, "false"),
-                    _leg("__upd", "update_postimage", names, "false"),
-                    _leg("__del", "delete", pre, "false"),
+                    ("__upd", "update_preimage", pre, "false"),
+                    ("__upd", "update_postimage", post, "false"),
+                    ("__del", "delete", pre, "false"),
                 ]
-            outs.append(_emit_legs(j, out_names, legs))
+            parts.append((j, legs))
 
         # ---- inserts (not matched by target)
         if not_matched:
@@ -3736,20 +3693,14 @@ def commit_merge(
                     if branches
                     else f"CAST(NULL AS {ty}) AS {_q(f.name)}"
                 )
-            legs = [_leg("true", None, names, "true")]
+            legs = [("true", None, post, "true")]
             if changefeed:
-                legs.append(_leg("true", "insert", names, "false"))
-            outs.append(_emit_legs(ins.selectExpr(*cols), out_names, legs))
+                legs.append(("true", "insert", post, "false"))
+            parts.append((ins.selectExpr(*cols), legs))
 
-        if not outs:
+        if not parts:
             return cur, 0, len(refs)
-        merged = outs[0]
-        for o in outs[1:]:
-            merged = merged.unionByName(o)
-        if cons:
-            merged = _enforce_constraints(
-                merged, cons, gate="__chk"
-            ).drop("__chk")
+        merged = _commit_frame(parts, names, seg.get("constraints") or {})
         # conflict footprint for the CAS re-base: without by-source
         # clauses the merge's result depends only on target rows in
         # the source key range — it read the key-pruned files (anti-
@@ -4069,6 +4020,7 @@ def restore_version(
                 "restore changefeed across schema evolution is not "
                 "well-defined; restore with changefeed=False"
             )
+        _check_cdf_cols(cur_seg)
         tgt_df = read_version(spark, root, version)
         cur_df = read_version(spark, root, cur)
         cdf_frame = tgt_df.exceptAll(cur_df).withColumn(
@@ -4152,6 +4104,8 @@ def apply_changes(
     _require_full_rows(
         _manifest_schema(res["seg"]), payload_cols, "change payload"
     )
+    if changefeed:
+        _check_cdf_cols(res["seg"], payload_cols)
     w = Window.partitionBy(key_col).orderBy(
         *(
             F.desc(c)
@@ -4621,6 +4575,7 @@ def table_changes(
     # (Delta's columnMapping CDF contract). A physical dropped by the
     # ending version is omitted — it is not part of the read schema.
     end_seg = _read_manifest(spark, root, end)
+    _check_cdf_cols(end_seg)
     end_schema = _manifest_schema(end_seg)
     p2l_end = (
         {_phys_name(end_seg, f.name): f.name for f in end_schema.fields}
@@ -4741,6 +4696,7 @@ def stream_table_changes(
     from pyspark.sql.types import LongType, StringType
 
     cur_seg = _read_manifest(spark, root, cur)
+    _check_cdf_cols(cur_seg)
     schema = _physical_schema(cur_seg)
     if schema is None:
         raise ValueError(

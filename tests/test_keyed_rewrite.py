@@ -1,7 +1,8 @@
 """The keyed copy-on-write rewrite shared by ``commit_upsert`` and
-``apply_changes`` (versioned._keyed_rewrite): Spark jobs per call, parity
-between the two entry points, and the batch shapes with no usable key
-(empty, all-NULL) that must touch no file."""
+``apply_changes`` (versioned._keyed_rewrite): Spark jobs per call (with
+the predicate DELETE/UPDATE commits beside them), parity between the
+two entry points, and the batch shapes with no usable key (empty,
+all-NULL) that must touch no file."""
 
 from __future__ import annotations
 
@@ -44,16 +45,72 @@ def _batch(spark, ops: bool = False):
     return df
 
 
-#: Spark jobs one call launches on a fresh 4-file table (bounds pass,
-#: commit write, manifest/stat bookkeeping; the changefeed adds the
-#: persisted touched-file read, preimages and the change-row write)
+def _local_batch(spark):
+    """The ``_batch(ops=True)`` events as a local relation: unlike the
+    range batch, it carries no partitioning on ``k``, so apply_changes'
+    latest-wins window adds a hash exchange (one more job)."""
+    return spark.createDataFrame(
+        [
+            (k, k % 3, f"new{k}", 1, "D" if k % 5 == 0 else "U")
+            for k in range(380, 415)
+        ],
+        "k long, g long, v string, ts long, op string",
+    )
+
+
+#: the predicate of the delete/update rows: 21 rows of the last two files
+PRED = "k % 7 = 3 AND k >= 250"
+
+#: one call per shape on a fresh 4-file table
+CALLS = {
+    "upsert": lambda s, r, cf: V.commit_upsert(
+        s, r, _batch(s), "k", changefeed=cf
+    ),
+    "upsert_composite": lambda s, r, cf: V.commit_upsert(
+        s, r, _batch(s), ["k", "g"], changefeed=cf
+    ),
+    "cdc": lambda s, r, cf: V.apply_changes(
+        s, r, _batch(s, ops=True), "k", "ts", changefeed=cf
+    ),
+    "cdc_local": lambda s, r, cf: V.apply_changes(
+        s, r, _local_batch(s), "k", "ts", changefeed=cf
+    ),
+    "delete_rewrite": lambda s, r, cf: V.commit_delete_where(
+        s, r, PRED, changefeed=cf
+    ),
+    "delete_dv": lambda s, r, cf: V.commit_delete_where(
+        s, r, PRED, changefeed=cf, mode="dv"
+    ),
+    "update_rewrite": lambda s, r, cf: V.commit_update_where(
+        s, r, PRED, {"v": "concat(v, '!')"}, changefeed=cf
+    ),
+    "update_dv": lambda s, r, cf: V.commit_update_where(
+        s, r, PRED, {"v": "concat(v, '!')"}, changefeed=cf, mode="dv"
+    ),
+}
+
+#: Spark jobs one call launches on a fresh 4-file table. Keyed: the
+#: bounds pass, the commit write (with a changefeed also the key-hit
+#: broadcasts, one tagged write), manifest/stat bookkeeping. Predicate:
+#: the file-finding scan and the write (dv: the DV staging collect and
+#: the DV write too)
 JOB_BUDGETS = {
     ("upsert", False): 4,
-    ("upsert", True): 11,
+    ("upsert", True): 6,
     ("upsert_composite", False): 4,
-    ("upsert_composite", True): 11,
+    ("upsert_composite", True): 6,
     ("cdc", False): 5,
-    ("cdc", True): 12,
+    ("cdc", True): 8,
+    ("cdc_local", False): 6,
+    ("cdc_local", True): 9,
+    ("delete_rewrite", False): 3,
+    ("delete_rewrite", True): 3,
+    ("delete_dv", False): 4,
+    ("delete_dv", True): 5,
+    ("update_rewrite", False): 3,
+    ("update_rewrite", True): 3,
+    ("update_dv", False): 5,
+    ("update_dv", True): 5,
 }
 
 
@@ -61,13 +118,7 @@ JOB_BUDGETS = {
 def test_jobs_per_keyed_rewrite(spark, root, call, cf):
     _four_file_table(spark, root)
     j0 = _next_job(spark)
-    if call == "cdc":
-        V.apply_changes(
-            spark, root, _batch(spark, ops=True), "k", "ts", changefeed=cf
-        )
-    else:
-        key = "k" if call == "upsert" else ["k", "g"]
-        V.commit_upsert(spark, root, _batch(spark), key, changefeed=cf)
+    CALLS[call](spark, root, cf)
     assert _next_job(spark) - j0 == JOB_BUDGETS[(call, cf)]
 
 

@@ -2634,7 +2634,8 @@ def test_check_enforcement_only_on_changed_legs(spark, root, monkeypatch):
     """Rewrite commits validate ONLY their changed legs (r12 advice /
     r13 verdict nit): pass-through rows passed the CHECK chain at
     their original write, so upsert/update/merge/cdc enforce the
-    updated/inserted rows (merge gates its one output frame on __chk)
+    updated/inserted rows (update and merge gate their one output frame
+    on __chk)
     and DELETE enforces nothing; _commit's full-frame pass is
     skipped (pre_checked). Pinned by counting _enforce_constraints
     invocations per op — one extra call means the full merged frame
@@ -2666,9 +2667,10 @@ def test_check_enforcement_only_on_changed_legs(spark, root, monkeypatch):
         spark.createDataFrame([(3, 7)], "k bigint, val bigint"), "k")
     assert calls == [None]
     calls.clear()
-    # update rewrite: post leg only
+    # update rewrite: ONE call, gated on the updated rows of the one
+    # output frame (kept rows bypass it)
     V.commit_update_where(spark, root, "k = 5", {"val": "val + 1"})
-    assert calls == [None]
+    assert calls == ["__chk"]
     calls.clear()
     # delete rewrite: pure pass-through, NOTHING re-validates
     V.commit_delete_where(spark, root, "k = 7")
