@@ -41,10 +41,10 @@ files:
   compare-and-swap; race test in tests/test_object_store.py); on
   hdfs:// a Hadoop rename onto a checked-absent destination;
 - data lands under a UNIQUE staging directory name
-  (``commit-vN-<uuid>``) recorded in the manifest: a crashed or
-  losing concurrent commit leaves an orphan directory that can never
-  collide with a future commit's write (vacuum reclaims it), and a
-  losing commit cleans its own staging dir up;
+  (``commit-vN-<uuid>``) recorded in the manifest: a crashed writer
+  leaves an orphan directory that can never collide with a future
+  commit's write (vacuum reclaims it), and a commit that fails or
+  loses the race without publishing deletes every dir it staged;
 - upserts are copy-on-write at FILE granularity: index stats prune
   the rewrite set to files whose key range intersects the update, so
   a 1%-of-keys update rewrites ~1% of files; untouched files are
@@ -227,7 +227,7 @@ def _commit_frame(parts: list[tuple], names: list[str], cons: dict) -> DataFrame
     rows the CHECK constraints ``cons`` must validate — the data rows
     the commit changed or inserted (pass-through rows passed at their
     original write, change rows are copies). ONE chain gated on it
-    runs over the union; _commit then skips its full-frame pass."""
+    runs over the union; _commit runs no CHECK of its own."""
     chk_col = _stage_names(names, "chk")[0]
     out_names = names + ([chk_col] if cons else [])
     out = None
@@ -270,7 +270,7 @@ def _fused_write(
         "AS _commit_version",
         f"IF(_change_type IS NULL, 'd', 'c') AS {tag}",
     )
-    tmp = f"{os.path.dirname(commit_dir)}/fuse-{uuid.uuid4().hex[:8]}"
+    tmp = _fuse_dir(commit_dir)
     fused.write.partitionBy(tag).mode("errorifexists").parquet(tmp)
     fs, _ = _hadoop_fs(spark, tmp)
     for leg, dst in (("d", commit_dir), ("c", cdf_path)):
@@ -285,6 +285,12 @@ def _fused_write(
         else:
             fs.mkdirs(dstp)
     fs.delete(_jpath(spark, tmp), True)
+
+
+def _fuse_dir(commit_dir: str) -> str:
+    """Where :func:`_fused_write` stages the tagged frame of the commit
+    whose data dir is ``commit_dir``."""
+    return f"{os.path.dirname(commit_dir)}/fuse-{os.path.basename(commit_dir)}"
 
 
 def _jpath(spark: SparkSession, path: str):
@@ -578,6 +584,14 @@ def current_version(spark: SparkSession, root: str) -> int:
     """Latest committed version, or -1 for a nonexistent table."""
     segs, _ = _list_log(spark, root)
     return max(segs, default=-1)
+
+
+def _head(spark: SparkSession, root: str) -> int:
+    """Latest committed version of a table that must exist."""
+    cur = current_version(spark, root)
+    if cur < 0:
+        raise FileNotFoundError(f"no versioned table at {root}")
+    return cur
 
 
 def _stat_jsonable(v):
@@ -1680,9 +1694,9 @@ def _enforce_constraints(
     column IS written, Catalyst cannot prune the check away, and the
     write task aborts on the FIRST violating row with the constraint
     name and the row as JSON — no second validation scan, no commit,
-    no manifest published (the staged files are unreferenced orphans,
-    vacuumable). A frame that omits a constrained column fails loudly
-    at analysis instead of writing unchecked rows.
+    no manifest published (:func:`_commit` deletes the staged dirs). A
+    frame that omits a constrained column fails loudly at analysis
+    instead of writing unchecked rows.
 
     ``gate``: a boolean column name — rows where it is false BYPASS
     the whole chain (CASE's lazy evaluation never touches the
@@ -1910,441 +1924,324 @@ def _commit(
     op: str,
     stats_cols: list[str],
     *,
-    removes: list[tuple[str, str]] | None = None,
+    removed: list[dict] | None = None,
     remove_all: bool = False,
-    removed_rows: int = 0,
-    removed_dv: tuple[int, int] = (0, 0),
     extra: dict | None = None,
     prev: dict | None = None,
     cdf: DataFrame | str | None = None,
     add_entries: list[dict] | None = None,
     schema_json_override: str | None = None,
     conflict: dict | None = None,
-    pre_checked: bool = False,
+    staged: tuple[str, ...] = (),
 ) -> int:
-    # The commit version is PINNED to the snapshot the caller resolved
-    # (prev) — never re-read at publish time. Re-reading would silently
-    # absorb a commit that landed between snapshot resolution and
-    # publish: the merge's removes/survivor rewrite were planned
-    # against the OLD snapshot, so publishing over the interposed
-    # commit resurrects its removed rows / drops its adds. Pinning
-    # makes any interposed commit COLLIDE on the version file instead,
-    # surfacing as the "concurrent commit" conflict commit_with_retry
-    # exists to catch — the optimistic-concurrency contract.
+    """Publish one log segment — the one funnel of every versioned-table
+    write, and the one place that knows the commit contract:
+
+    - ``removed``: the live entries this commit removes; the remove
+      actions, the row debit and the DV debit all derive from them.
+    - ``df`` is written as is: callers enforce CHECK constraints on the
+      rows they change (:func:`_commit_frame`, or
+      :func:`_enforce_constraints` for a plain append). ``cdf="tagged"``
+      marks ``df`` as the one frame of :func:`_commit_frame`
+      (``_change_type`` NULL = data row); a DataFrame ``cdf`` is a
+      change-only commit (``df=None``: DV delete, restore).
+    - ``staged``: the directories the caller wrote before calling
+      (a DV dir, adopted or mirrored files). They and this commit's own
+      data, bloom-sidecar and changefeed dirs are deleted whenever
+      nothing was published — an error before the first publish or a
+      CAS loss that cannot re-base. Any other publish error leaves
+      every dir in place: the manifest may have landed.
+
+    The version is PINNED to the snapshot the caller resolved
+    (``prev``) — never re-read at publish time, which would silently
+    absorb a commit that landed in between: the removes and rewrites
+    were planned against the OLD snapshot. Pinning makes an interposed
+    commit COLLIDE on the version file instead (the optimistic-
+    concurrency contract); a loser whose ``conflict`` footprint is
+    provably disjoint from every winner re-publishes its already-staged
+    files over the winner (:func:`_rebase_ok`), anything else raises
+    for :func:`commit_with_retry` to recompute."""
     _require_plain_root(root, "a data commit")
-    # ONE way in for data AND change rows: cdf="tagged", df being the
-    # one frame of :func:`_commit_frame` (_change_type NULL marks a
-    # data row) whose changed rows the caller CHECK-enforced itself. A
-    # DataFrame cdf is a change-only commit (df=None: DV delete,
-    # restore).
-    legs = None
     if isinstance(cdf, DataFrame) and df is not None:
         raise ValueError(
             "data and change rows arrive together only as one tagged "
             "frame (cdf='tagged')"
         )
-    if isinstance(cdf, str) and cdf == "tagged":
-        if not pre_checked:
-            raise ValueError("a tagged commit frame must be pre-checked")
-        legs, cdf = df, None
-        df = legs.where("_change_type IS NULL").drop("_change_type")
-    cur = prev["version"] if prev is not None else current_version(spark, root)
-    version = cur + 1
-    # streaming txn high-water marks (run_cdc_versioned_sink) survive
-    # interleaved maintenance commits: carry the previous segment's
-    # txn map forward and overlay this commit's, else an optimize/
-    # append between two micro-batches would silently drop the replay
-    # guard and re-open the at-least-once window
-    txn: dict = {}
-    prev_schema = None
-    constraints: dict = {}
-    mapping: dict = {}
-    tomb: list = []
-    bloom_spec: dict | None = None
-    if cur >= 0:
-        if prev is None:
-            prev = _read_manifest(spark, root, cur)
-        txn = dict(prev.get("txn", {}))
-        prev_schema = prev.get("schema")
-        # CHECK constraints carry forward like txn; set/drop commits
-        # pass the full replacement map through extra
-        constraints = dict(prev.get("constraints", {}))
-        # column mapping + dropped-physical tombstones carry the same
-        # way; rename/drop/restore pass replacements through extra
-        mapping = dict(prev.get("column_mapping", {}))
-        tomb = list(prev.get("dropped_physical", []))
-        # bloom-index spec is carried state too (set/drop_bloom_index
-        # pass the replacement through extra); data commits below
-        # build sidecars for their fresh files when it is active
-        bloom_spec = prev.get("bloom")
-    txn.update((extra or {}).get("txn", {}))
-    if "constraints" in (extra or {}):
-        constraints = dict(extra["constraints"])
-    if "column_mapping" in (extra or {}):
-        mapping = dict(extra["column_mapping"])
-    if "dropped_physical" in (extra or {}):
-        tomb = list(extra["dropped_physical"])
-    if "bloom" in (extra or {}):
-        bloom_spec = extra["bloom"]
-    # UNIQUE staging dir: a crashed/losing writer's data can never
-    # collide with a later commit's errorifexists write (orphans are
-    # unreferenced and vacuumable)
+    if prev is None:
+        cur = current_version(spark, root)
+        prev = (
+            _read_manifest(spark, root, cur) if cur >= 0 else {"version": -1}
+        )
+    version = prev["version"] + 1
+    # UNIQUE staging dirs: a crashed/losing writer's data can never
+    # collide with a later commit's errorifexists write
     commit_dir = f"{root}/{DATA_DIR}/commit-v{version}-{uuid.uuid4().hex[:8]}"
-    # BY-REFERENCE adds (restore): the commit re-links entries whose
-    # data files already exist under other commits' dirs — zero data
-    # movement, the entries carry their original (dir, path) identity
-    new_files: list[dict] = list(add_entries or [])
-    # SCHEMA lives in the log (the lakehouse contract): readers plan
-    # against it instead of merging 10^6 footers, old files missing a
-    # later-added column surface NULLs through it, and each snapshot
-    # time-travels with the schema it was written under. Evolution is
-    # WIDEN-ONLY (see _evolve_schema — validated BEFORE data lands);
-    # a df-less commit carries the previous schema.
-    schema_json = (
-        _evolve_schema(prev_schema, df.schema) if df is not None else prev_schema
+    cdf_dir = f"v{version}-{uuid.uuid4().hex[:8]}"
+    extra = dict(extra or {})
+    # carried state (constraints, column mapping + dropped-physical
+    # tombstones, bloom-index spec) rides forward from the snapshot;
+    # the commits that change it pass the replacement through extra
+    constraints = dict(extra.get("constraints", prev.get("constraints", {})))
+    mapping = dict(extra.get("column_mapping", prev.get("column_mapping", {})))
+    tomb = list(
+        extra.get("dropped_physical", prev.get("dropped_physical", []))
     )
-    if schema_json_override is not None:
-        schema_json = schema_json_override
+    bloom_spec = extra.get("bloom", prev.get("bloom"))
     # the RESOLVED mapping (before any new-column assignment below) —
     # what a rebase-time winner must match exactly
     base_mapping, base_tomb = dict(mapping), list(tomb)
-    if df is not None and (mapping or tomb):
-        # MAPPED table: columns born THIS commit get a collision-free
-        # physical name — never one already in use or tombstoned by a
-        # drop (reusing a dropped physical would resurrect old values
-        # out of carried files). Pre-existing columns keep theirs.
-        prev_logical = (
-            {
+
+    def schema_over(base: dict) -> str | None:
+        # SCHEMA lives in the log: readers plan against it, and each
+        # snapshot time-travels with the schema it was written under.
+        # Evolution is WIDEN-ONLY over the base (see _evolve_schema); a
+        # df-less commit carries the base's schema
+        if schema_json_override is not None:
+            return schema_json_override
+        if df_schema is None:
+            return base.get("schema")
+        return _evolve_schema(base.get("schema"), df_schema)
+
+    new_files: list[dict] = list(add_entries or [])
+    removed = removed or []
+    maybe_published = False
+    try:
+        legs = None
+        if isinstance(cdf, str) and cdf == "tagged":
+            legs, cdf = df, None
+            df = legs.where("_change_type IS NULL").drop("_change_type")
+        # the LOGICAL schema of the frame (df itself is renamed to
+        # physical names below)
+        df_schema = df.schema if df is not None else None
+        schema_json = schema_over(prev)  # validated BEFORE data lands
+        if df is not None and (mapping or tomb):
+            # MAPPED table: columns born THIS commit get a collision-free
+            # physical name — never one already in use or tombstoned by
+            # a drop (reusing a dropped physical would resurrect old
+            # values out of carried files). Pre-existing columns keep
+            # theirs.
+            prev_logical = {
                 f["name"]
-                for f in json.loads(prev_schema).get("fields", [])
+                for f in json.loads(prev.get("schema") or "{}").get(
+                    "fields", []
+                )
             }
-            if prev_schema
-            else set()
-        )
-        used_phys = {mapping.get(n, n) for n in prev_logical}
-        for f in df.schema.fields:
-            if f.name in prev_logical:
-                continue
-            phys = f.name
-            if phys in used_phys or phys in tomb:
-                phys = f"{f.name}_{uuid.uuid4().hex[:8]}"
-                mapping[f.name] = phys
-            used_phys.add(phys)
-    # the LOGICAL schema of the staged frame — the rebase loop re-runs
-    # schema evolution against the winner's schema with it (df itself
-    # may be renamed to physical names below)
-    df_logical_schema = df.schema if df is not None else None
-    if df is not None:
-        # optimize rewrites only rows that already passed enforcement
-        # at their original write (ADD validates existing data,
-        # restore re-validates the restored snapshot) — re-running the
-        # CHECK chain over a full-table compaction is pure waste.
-        # pre_checked: the caller already enforced the CHANGED legs of
-        # its rewrite (upsert/update/merge/cdc) — pass-through rows
-        # passed enforcement at their original write, so the full-
-        # frame chain here would be the same pure waste
-        if constraints and op != "optimize" and not pre_checked:
-            df = _enforce_constraints(df, constraints)
-        # rename to PHYSICAL names for the write (enforcement just ran
-        # on logical names); stats_cols are physical already
+            used_phys = {mapping.get(n, n) for n in prev_logical}
+            for f in df_schema.fields:
+                if f.name in prev_logical:
+                    continue
+                phys = f.name
+                if phys in used_phys or phys in tomb:
+                    phys = f"{f.name}_{uuid.uuid4().hex[:8]}"
+                    mapping[f.name] = phys
+                used_phys.add(phys)
         df = _to_physical(df, mapping)
         legs = _to_physical(legs, mapping)
-    cdf_dir = f"v{version}-{uuid.uuid4().hex[:8]}"
-    cdf_path = f"{root}/{CDF_DIR}/{cdf_dir}"
-    if legs is not None:
-        # data + change rows FUSE into one write job where renames are
-        # cheap (guide §2.4; see _fused_write). Object stores write
-        # twice, both writes reading the one tagged frame — persisted
-        # here, so its upstream runs once
-        if _fuse_ok(root):
-            _fused_write(spark, legs, version, commit_dir, cdf_path)
-        else:
-            legs = legs.persist()
-            try:
-                legs.where("_change_type IS NULL").drop(
-                    "_change_type"
-                ).write.mode("errorifexists").parquet(commit_dir)
-                legs.where("_change_type IS NOT NULL").withColumn(
-                    "_commit_version", F.lit(version)
-                ).write.mode("errorifexists").parquet(cdf_path)
-            finally:
-                legs.unpersist()
-    elif df is not None:
-        df.write.mode("errorifexists").parquet(commit_dir)
-    if df is not None:
-        fresh = _file_entries(commit_dir, stats_cols)
-        new_files = new_files + fresh
-        if bloom_spec and bloom_spec.get("cols"):
-            # ONE extra bounded job over the just-written files —
-            # bitmaps land as sidecar parquet keyed by this staging
-            # dir; every data-writing path (append/upsert/merge/cdc/
-            # optimize) funnels through here, so rewrites re-index
-            # automatically
-            _write_bloom_sidecar(
-                spark, root, commit_dir, bloom_spec, fresh,
-                _physical_schema(
-                    {"schema": schema_json, "column_mapping": mapping}
-                ),
-                set(df.columns),  # the frame just written — no
-                # footer re-read to decide narrow-writer coverage
-            )
-    # changefeed capture (Delta CDF shape): change rows are written
-    # AT COMMIT TIME, when the merge already knows which rows changed
-    # — reconstructing them later would mean diffing whole snapshots.
-    # Appends need no copy (their add files ARE the inserts, recorded
-    # as cdf="add") unless the caller wants a STREAMABLE feed; a
-    # compaction changes nothing logically ("none"); merge ops stage
-    # an explicit change-row directory. Change files carry
-    # ``_commit_version`` IN the data (not just the path) so a
-    # Structured Streaming file source over _change_data/ needs no
-    # custom source code. Like the data staging dir, the CDF dir
-    # carries the version + a uuid so a losing commit's leftovers can
-    # never collide and are vacuumable.
-    cdf_mark: str | dict | None = None
-    if isinstance(cdf, str) and cdf == "none":
-        # explicit feed-transparent mark for add_entries commits that
-        # are not row changes in CDF terms (convert/clone — Delta's
-        # CDF serves neither): feeds SPAN them contributing nothing
-        cdf_mark = "none"
-        cdf = None
-    if cdf is not None:
-        # change files store PHYSICAL names too — a feed spanning a
-        # rename unifies on the stable physical name
-        _to_physical(cdf, mapping).withColumn(
-            "_commit_version", F.lit(version)
-        ).write.mode("errorifexists").parquet(cdf_path)
-    if cdf is not None or legs is not None:
-        cdf_mark = {"dir": cdf_dir}
-    elif op == "append":
-        cdf_mark = "add"
-    elif op == "optimize":
-        cdf_mark = "none"
-    elif (
-        df is None
-        and not new_files
-        and not (removes or remove_all)
-    ):
-        # METADATA-ONLY commit (rename/drop column, set/drop
-        # constraint, a no-op restore): no logical row changed — the
-        # changefeed spans it contributing nothing, same as a
-        # compaction. Commits that move entries (restore, DV) still
-        # need explicit changefeed capture to be readable as changes.
-        cdf_mark = "none"
-    removes = list(removes or [])
-    added_rows = sum(e["rows"] for e in new_files)
-    # DV-DEBT running totals (how many files read through an anti-join
-    # and how many dead rows they drag) — kept in the manifest like
-    # total_files/total_rows so history()/operators can size REORG
-    # purges WITHOUT materializing a file list. Freshly-written files
-    # never carry a dv; only add_entries (DV re-adds, restore) can.
-    # Pre-upgrade manifests lack the fields: .get(.., 0) restarts the
-    # totals from this commit on (DV commits always re-add entries, so
-    # the first post-upgrade DV commit re-counts its files correctly).
-    add_dv_files, add_dv_rows = _dv_debit(new_files)
-    if remove_all or prev is None:
-        total_files, total_rows = len(new_files), added_rows
-        total_dv_files, total_dv_rows = add_dv_files, add_dv_rows
-    else:
-        total_files = prev["total_files"] - len(removes) + len(new_files)
-        total_rows = prev["total_rows"] - removed_rows + added_rows
-        total_dv_files = (
-            prev.get("total_dv_files", 0) - removed_dv[0] + add_dv_files
-        )
-        total_dv_rows = (
-            prev.get("total_dv_rows", 0) - removed_dv[1] + add_dv_rows
-        )
-    manifest = {
-        "version": version,
-        "op": op,
-        # wall-clock commit timestamp (epoch seconds, UTC) — the knob
-        # time-based retention (vacuum keep_since) is sized by, like
-        # Delta's commitInfo.timestamp. Metadata only: never part of
-        # equality/conflict semantics (retried commits restamp).
-        "ts": _time.time(),
-        "stats_cols": stats_cols,
-        "add": new_files,
-        "remove": [list(r) for r in removes],
-        "remove_all": remove_all,
-        "total_files": total_files,
-        "total_rows": total_rows,
-        "total_dv_files": total_dv_files,
-        "total_dv_rows": total_dv_rows,
-        **{
-            k: v
-            for k, v in (extra or {}).items()
-            if k
-            not in (
-                "txn", "constraints", "column_mapping",
-                "dropped_physical", "bloom",
-            )
-        },
-    }
-    if constraints:
-        manifest["constraints"] = constraints
-    if mapping:
-        manifest["column_mapping"] = mapping
-    if tomb:
-        manifest["dropped_physical"] = tomb
-    if bloom_spec:
-        manifest["bloom"] = bloom_spec
-    # the FEATURES RATCHET (Delta's protocol features): the union of
-    # the previous snapshot's features and what THIS commit's content
-    # uses — monotonic, so a reader resolving any later version sees
-    # every capability the snapshot depends on even when the segments
-    # that introduced it were checkpointed away
-    feats = set((prev or {}).get("features", []))
-    feats |= {
-        f
-        for f, on in (
-            ("deletion-vectors", any(e.get("dv") for e in new_files)),
-            ("column-mapping", bool(mapping or tomb)),
-            ("check-constraints", bool(constraints)),
-            ("bloom-index", bool(bloom_spec)),
-            (
-                "foreign-refs",
-                any(_is_abs_dir(e["dir"]) for e in new_files),
-            ),
-            ("hive-paths", any("/" in e["path"] for e in new_files)),
-        )
-        if on
-    }
-    if feats:
-        manifest["features"] = sorted(feats)
-    if df is not None:
-        # the commit's OWN staging dir, recorded for history()'s
-        # files_added/relinked split: a RE-BASED commit publishes at a
-        # bumped version while its staging dir keeps the pre-race
-        # stamp, so the "commit-v{v}-" prefix heuristic would misread
-        # its fresh files as relinks
-        manifest["staging_dir"] = os.path.basename(commit_dir.rstrip("/"))
-    if schema_json:
-        manifest["schema"] = schema_json
-    if txn:
-        manifest["txn"] = txn
-    if cdf_mark is not None:
-        manifest["cdf"] = cdf_mark
-    # Publish with REBASE-on-conflict (Delta's conflict checker): a
-    # loser whose declared read/write footprint is provably disjoint
-    # from every interposed winner re-publishes its ALREADY-STAGED
-    # files at the bumped version — the data job never re-runs; only
-    # the version-dependent manifest fields (version, txn carry,
-    # schema evolution base, running totals, CDF version stamp) are
-    # re-derived against the winner's snapshot. An unclassifiable or
-    # genuinely overlapping loss cleans its staging dirs and raises,
-    # handing recompute to commit_with_retry. Bounded attempts: under
-    # pathological contention recompute is the honest answer.
-    rebases = 0
-    orig_version = version
-    while True:
-        try:
-            _write_manifest_atomic(spark, root, version, manifest)
-            break
-        except RuntimeError as race:
-            new_prev = None
-            if (
-                conflict is not None
-                and rebases < 20
-                and "concurrent commit" in str(race)
-            ):
-                new_prev = _rebase_prev(
-                    spark, root, version, conflict, constraints,
-                    base_mapping, base_tomb, list(stats_cols),
-                    bloom_spec,
-                )
-            rederived = None
-            if new_prev is not None:
+        cdf_path = f"{root}/{CDF_DIR}/{cdf_dir}"
+        if legs is not None:
+            # data + change rows FUSE into one write job where renames
+            # are cheap (guide §2.4; see _fused_write). Object stores
+            # write twice, both writes reading the one tagged frame —
+            # persisted here, so its upstream runs once
+            if _fuse_ok(root):
+                _fused_write(spark, legs, version, commit_dir, cdf_path)
+            else:
+                legs = legs.persist()
                 try:
-                    # schema evolution re-validates against the
-                    # winner's schema: a type conflict here is real
-                    # (recompute would hit it too) — fall through to
-                    # the strict cleanup and raise IT, not the race
-                    rederived = (
-                        _evolve_schema(
-                            new_prev.get("schema"), df_logical_schema
-                        )
-                        if df is not None and schema_json_override is None
-                        else (
-                            schema_json_override
-                            if schema_json_override is not None
-                            else new_prev.get("schema")
-                        )
-                    )
-                except ValueError as exc:
-                    race = exc
-                    new_prev = None
-            if new_prev is None:
-                # losing writer: reclaim its never-referenced staging
-                # dirs (data, bloom sidecar, changefeed alike)
-                fs, _ = _hadoop_fs(spark, root)
-                if df is not None:
-                    fs.delete(_jpath(spark, commit_dir), True)
-                    if bloom_spec and bloom_spec.get("cols"):
-                        fs.delete(
-                            _jpath(
-                                spark,
-                                f"{root}/{BLOOM_DIR}/"
-                                + os.path.basename(commit_dir.rstrip("/")),
-                            ),
-                            True,
-                        )
-                if isinstance(cdf_mark, dict):
-                    fs.delete(
-                        _jpath(
-                            spark, f"{root}/{CDF_DIR}/{cdf_mark['dir']}"
-                        ),
-                        True,
-                    )
-                raise race
-            rebases += 1
-            prev = new_prev
-            version = prev["version"] + 1
-            schema_json = rederived
-            txn = dict(prev.get("txn", {}))
-            txn.update((extra or {}).get("txn", {}))
-            total_files = prev["total_files"] - len(removes) + len(new_files)
-            total_rows = prev["total_rows"] - removed_rows + added_rows
-            total_dv_files = (
-                prev.get("total_dv_files", 0) - removed_dv[0] + add_dv_files
-            )
-            total_dv_rows = (
-                prev.get("total_dv_rows", 0) - removed_dv[1] + add_dv_rows
-            )
-            if isinstance(cdf_mark, dict):
-                cdf_mark = {
-                    "dir": _restamp_cdf(
-                        spark, root, cdf_mark["dir"], version
-                    )
-                }
-            manifest["version"] = version
-            manifest["ts"] = _time.time()
-            # rebase OBSERVABILITY (contention telemetry): the version
-            # this commit originally pinned and how many interposed
-            # winners it re-based over — history() surfaces both so
-            # operators can SEE contention rates instead of inferring
-            # them from staging-dir version stamps
-            manifest["rebased_from"] = orig_version
-            manifest["rebases"] = rebases
-            # the ratchet re-unions over the WINNER's features — an
-            # interposed commit may have introduced one
-            if feats or prev.get("features"):
-                manifest["features"] = sorted(
-                    feats | set(prev.get("features", []))
+                    legs.where("_change_type IS NULL").drop(
+                        "_change_type"
+                    ).write.mode("errorifexists").parquet(commit_dir)
+                    legs.where("_change_type IS NOT NULL").withColumn(
+                        "_commit_version", F.lit(version)
+                    ).write.mode("errorifexists").parquet(cdf_path)
+                finally:
+                    legs.unpersist()
+        elif df is not None:
+            df.write.mode("errorifexists").parquet(commit_dir)
+        if df is not None:
+            fresh = _file_entries(commit_dir, stats_cols)
+            new_files = new_files + fresh
+            if bloom_spec and bloom_spec.get("cols"):
+                # ONE extra bounded job over the just-written files —
+                # bitmaps land as sidecar parquet keyed by this staging
+                # dir; every data-writing path funnels through here, so
+                # rewrites re-index automatically
+                _write_bloom_sidecar(
+                    spark, root, commit_dir, bloom_spec, fresh,
+                    _physical_schema(
+                        {"schema": schema_json, "column_mapping": mapping}
+                    ),
+                    set(df.columns),  # the frame just written — no
+                    # footer re-read to decide narrow-writer coverage
                 )
-            manifest["total_files"] = total_files
-            manifest["total_rows"] = total_rows
-            manifest["total_dv_files"] = total_dv_files
-            manifest["total_dv_rows"] = total_dv_rows
+        # changefeed capture (Delta CDF shape): change rows are written
+        # AT COMMIT TIME, when the writer knows which rows changed, and
+        # carry ``_commit_version`` IN the data so a Structured
+        # Streaming file source over _change_data/ needs no custom
+        # source. Appends need no copy (their add files ARE the inserts,
+        # "add") unless the caller wants a STREAMABLE feed; compactions,
+        # metadata-only commits and convert/clone (cdf="none" — Delta's
+        # CDF serves neither) change no logical row: feeds SPAN them
+        if isinstance(cdf, DataFrame):
+            # change files store PHYSICAL names too — a feed spanning a
+            # rename unifies on the stable physical name
+            _to_physical(cdf, mapping).withColumn(
+                "_commit_version", F.lit(version)
+            ).write.mode("errorifexists").parquet(cdf_path)
+        if isinstance(cdf, DataFrame) or legs is not None:
+            feed = "dir"
+        elif cdf == "none" or op == "optimize" or (
+            df is None and not new_files and not (removed or remove_all)
+        ):
+            feed = "none"
+        else:
+            feed = "add" if op == "append" else None
+        # DV-DEBT running totals (files read through an anti-join, dead
+        # rows they drag) ride the manifest like total_files/total_rows
+        # so history()/optimize size REORG purges without a file list.
+        # Pre-upgrade manifests lack them: .get(.., 0) restarts the
+        # totals from this commit on
+        add_dv = _dv_debit(new_files)
+        rm_dv = _dv_debit(removed)
+        added_rows = _nrows(new_files)
+        # the FEATURES RATCHET (Delta's protocol features): the base
+        # snapshot's features plus what THIS commit's content uses —
+        # monotonic, so a reader resolving any later version sees every
+        # capability the snapshot depends on
+        content = {
+            f
+            for f, on in (
+                ("deletion-vectors", any(e.get("dv") for e in new_files)),
+                ("column-mapping", bool(mapping or tomb)),
+                ("check-constraints", bool(constraints)),
+                ("bloom-index", bool(bloom_spec)),
+                (
+                    "foreign-refs",
+                    any(_is_abs_dir(e["dir"]) for e in new_files),
+                ),
+                ("hive-paths", any("/" in e["path"] for e in new_files)),
+            )
+            if on
+        }
+
+        def segment(base: dict) -> dict:
+            # every version-dependent field, derived from the snapshot
+            # this commit publishes over: the one it resolved, or the
+            # winner it re-bases onto
+            kept = {} if remove_all else base  # remove_all drops every file
+            seg = {
+                "version": base["version"] + 1,
+                "op": op,
+                # wall-clock commit time (epoch s, UTC) — what time-based
+                # retention (vacuum keep_since) sizes by; never part of
+                # conflict semantics (re-based commits restamp)
+                "ts": _time.time(),
+                "stats_cols": stats_cols,
+                "add": new_files,
+                "remove": [list(r) for r in _rm(removed)],
+                "remove_all": remove_all,
+                "total_files": (
+                    kept.get("total_files", 0) - len(removed) + len(new_files)
+                ),
+                "total_rows": (
+                    kept.get("total_rows", 0) - _nrows(removed) + added_rows
+                ),
+                "total_dv_files": (
+                    kept.get("total_dv_files", 0) - rm_dv[0] + add_dv[0]
+                ),
+                "total_dv_rows": (
+                    kept.get("total_dv_rows", 0) - rm_dv[1] + add_dv[1]
+                ),
+                **{
+                    k: v
+                    for k, v in extra.items()
+                    if k not in (
+                        "txn", "constraints", "column_mapping",
+                        "dropped_physical", "bloom",
+                    )
+                },
+            }
+            # streaming txn high-water marks (run_cdc_versioned_sink)
+            # survive interleaved commits: the base's map, overlaid by
+            # this commit's
+            txn = {**base.get("txn", {}), **extra.get("txn", {})}
+            feats = content | set(base.get("features", []))
+            schema = schema_over(base)
+            mark = {"dir": cdf_dir} if feed == "dir" else feed
             for key, val in (
-                ("schema", schema_json),
+                ("constraints", constraints),
+                ("column_mapping", mapping),
+                ("dropped_physical", tomb),
+                ("bloom", bloom_spec),
+                ("features", sorted(feats)),
+                # the commit's OWN staging dir, for history()'s
+                # files_added/relinked split: a RE-BASED commit keeps
+                # its pre-race stamp
+                (
+                    "staging_dir",
+                    os.path.basename(commit_dir) if df is not None else None,
+                ),
+                ("schema", schema),
                 ("txn", txn),
-                ("cdf", cdf_mark),
+                ("cdf", mark),
             ):
                 if val:
-                    manifest[key] = val
-                else:
-                    manifest.pop(key, None)
-    _maybe_checkpoint(spark, root, version)
-    return version
+                    seg[key] = val
+            return seg
+
+        seg = segment(prev)
+        rebases = 0
+        while True:
+            maybe_published = True
+            try:
+                _write_manifest_atomic(spark, root, seg["version"], seg)
+                break
+            except RuntimeError as race:
+                if "concurrent commit" not in str(race):
+                    raise
+                # a CAS loss: nothing of this commit landed
+                maybe_published = False
+                # REBASE-on-conflict (Delta's conflict checker): a loser
+                # provably disjoint from every interposed winner re-
+                # publishes its ALREADY-STAGED files over the winner's
+                # snapshot — the data job never re-runs. Bounded: under
+                # pathological contention recompute is the honest answer
+                base = None
+                if conflict is not None and rebases < 20:
+                    base = _rebase_prev(
+                        spark, root, seg["version"], conflict, constraints,
+                        base_mapping, base_tomb, list(stats_cols),
+                        bloom_spec,
+                    )
+                if base is None:
+                    raise
+                rebases += 1
+                if feed == "dir":
+                    cdf_dir = _restamp_cdf(
+                        spark, root, cdf_dir, base["version"] + 1
+                    )
+                # schema evolution re-validates against the winner's
+                # schema: a type conflict here is real (recompute would
+                # hit it too) and raises instead of the race
+                seg = segment(base)
+                # contention telemetry for history(): the version this
+                # commit first pinned and how many winners it re-based
+                # over
+                seg["rebased_from"] = version
+                seg["rebases"] = rebases
+    except BaseException:
+        if not maybe_published:
+            fs, _ = _hadoop_fs(spark, root)
+            name = os.path.basename(commit_dir)
+            for d in (
+                commit_dir, _fuse_dir(commit_dir),
+                f"{root}/{BLOOM_DIR}/{name}", f"{root}/{CDF_DIR}/{cdf_dir}",
+                *staged,
+            ):
+                fs.delete(_jpath(spark, d), True)
+        raise
+    _maybe_checkpoint(spark, root, seg["version"])
+    return seg["version"]
 
 
 def commit_append(
@@ -2367,16 +2264,19 @@ def commit_append(
     feeding one, at the cost of one extra copy of each append batch."""
     cur = current_version(spark, root)
     prev = _read_manifest(spark, root, cur) if cur >= 0 else None
+    cons = (prev or {}).get("constraints") or {}
     if changefeed:
         _check_cdf_cols(prev, df.columns)
         vals = [_q(c) for c in df.columns]
         df = _commit_frame([(df, [
             ("true", None, vals, "true"), ("true", "insert", vals, "false"),
-        ])], df.columns, (prev or {}).get("constraints") or {})
+        ])], df.columns, cons)
+    elif cons:
+        df = _enforce_constraints(df, cons)
     cols = stats_cols or (prev["stats_cols"] if prev else [])
     return _commit(
         spark, root, df, "append", cols, prev=prev,
-        cdf="tagged" if changefeed else None, pre_checked=changefeed,
+        cdf="tagged" if changefeed else None,
         # AddFile-only, reads nothing: a CAS loss re-publishes the
         # staged files at the bumped version (never re-runs the job)
         conflict={"kind": "append"},
@@ -2395,9 +2295,7 @@ def version_as_of(
     cutoff)."""
     if isinstance(ts, _dt.datetime):
         ts = ts.timestamp()
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     v = cur
     while v >= 0:
         try:
@@ -2504,9 +2402,7 @@ def _keyed_table(spark: SparkSession, root: str, prune_col: str) -> dict:
     """The resolved current snapshot for a keyed write (upsert, CDC
     apply, MERGE), whose file pruning runs on ``prune_col`` — which
     must therefore carry manifest stats."""
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     res = _resolve(spark, root, cur)
     seg = res["seg"]
     if _phys_name(seg, prune_col) not in seg["stats_cols"]:
@@ -2569,8 +2465,7 @@ def _keyed_rewrite(
     cons = seg.get("constraints") or {}
     if not changefeed:
         # CHECK enforcement on the CHANGED leg only: survivors passed
-        # the chain at their original write (pre_checked below skips
-        # the full-frame re-validation _commit would otherwise run)
+        # the chain at their original write
         out = _enforce_constraints(upserts, cons) if cons else upserts
         if touched:
             out = read.join(
@@ -2632,13 +2527,10 @@ def _keyed_rewrite(
         out,
         op,
         seg["stats_cols"],
-        removes=_rm(touched),
-        removed_rows=_nrows(touched),
-        removed_dv=_dv_debit(touched),
+        removed=touched,
         extra=extra,
         prev=seg,
         cdf="tagged" if changefeed else None,
-        pre_checked=True,
         # key-pruned footprint: a CAS loss re-bases when every
         # winner is provably outside [lo, hi] and removed none of
         # the touched files (see _rebase_ok)
@@ -2775,9 +2667,7 @@ def commit_delete_where(
     a metadata-light pass, not a rewrite."""
     if mode not in ("rewrite", "dv"):
         raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     res = _resolve(spark, root, cur)
     seg = res["seg"]
     if changefeed:
@@ -2829,18 +2719,15 @@ def _delete_where_rewrite(
     v = _commit(
         spark,
         root,
+        # a DELETE writes only pass-through survivors — rows that
+        # passed CHECK at their original write; nothing to enforce
         _emit_legs(
             read.select("*", F.coalesce(pred, F.lit(False)).alias(p)),
             read.columns, legs,
         ),
         "delete",
         seg["stats_cols"],
-        # a DELETE writes only pass-through survivors — rows that
-        # passed CHECK at their original write; nothing to enforce
-        pre_checked=True,
-        removes=_rm(touched),
-        removed_rows=_nrows(touched),
-        removed_dv=_dv_debit(touched),
+        removed=touched,
         prev=seg,
         cdf="tagged" if changefeed else None,
         # simple predicates classify: a racing APPEND whose stats
@@ -2897,9 +2784,7 @@ def commit_delete_keys(
             "drop it (or use commit_delete_where with IS NULL)"
         )
     keys = list(keys)
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     res = _resolve(spark, root, cur)
     seg = res["seg"]
     if changefeed:
@@ -2958,11 +2843,10 @@ def _stage_dv(
     None when nothing matched."""
     # bounded by design: one row per TOUCHED FILE (never row data),
     # like the other maintenance collects in this module
+    d, p, i = _ID_COLS
     per_file = {
-        (r[_ID_COLS[0]], r[_ID_COLS[1]]): r["__n"]
-        for r in matched.groupBy(*_ID_COLS[:2])
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .collect()
+        (r[0], r[1]): r[2]
+        for r in matched.groupBy(d, p).agg(F.expr("count(1) AS __n")).collect()
     }
     if not per_file:
         return None
@@ -2977,13 +2861,9 @@ def _stage_dv(
         (by_key[k] for k in per_file),
         key=lambda e: (e["dir"], e["path"]),
     )
-    dv_frames = [
-        matched.select(
-            F.col(_ID_COLS[0]).alias("dir"),
-            F.col(_ID_COLS[1]).alias("path"),
-            F.col(_ID_COLS[2]).alias("row_index"),
-        )
-    ]
+    dv_all = matched.selectExpr(
+        f"{d} AS dir", f"{p} AS path", f"{i} AS row_index"
+    )
     with_old = [e for e in touched if e.get("dv")]
     if with_old:
         old = spark.read.schema(
@@ -2999,19 +2879,14 @@ def _stage_dv(
             [_ident_key(e) for e in with_old],
             "dir string, path string",
         )
-        dv_frames.append(
-            old.join(F.broadcast(keys), ["dir", "path"], "left_semi")
-        )
-    dv_all = dv_frames[0]
-    for f in dv_frames[1:]:
-        dv_all = dv_all.unionByName(f)
-    if with_old:
         # a file's old rows can arrive via TWO old dv dirs (repeated
         # deletes leave rows for it in both; the (dir,path) semi-join
         # pulls each copy) — dedupe or DV files grow with redundant
         # rows across repeated deletes. New matches are live rows
         # (already anti-joined), so only the old-union needs this.
-        dv_all = dv_all.dropDuplicates(["dir", "path", "row_index"])
+        dv_all = dv_all.unionByName(
+            old.join(F.broadcast(keys), ["dir", "path"], "left_semi")
+        ).dropDuplicates(["dir", "path", "row_index"])
     dv_dir = f"v{cur + 1}-{uuid.uuid4().hex[:8]}"
     dv_path = f"{root}/{DV_DIR}/{dv_dir}"
     dv_all.write.mode("errorifexists").parquet(dv_path)
@@ -3026,12 +2901,6 @@ def _stage_dv(
         }
         new_entries.append(ne)
     return touched, per_file, dv_path, new_entries
-
-
-def _drop_dv_dir(spark: SparkSession, dv_path: str) -> None:
-    """Losing writer: reclaim its never-referenced DV dir."""
-    fs, _ = _hadoop_fs(spark, dv_path)
-    fs.delete(_jpath(spark, dv_path), True)
 
 
 def _dv_commit(
@@ -3064,35 +2933,31 @@ def _dv_commit(
         matched = matched.select(*_ID_COLS)
     matched = matched.persist()
     try:
-        staged = _stage_dv(spark, root, cur, refs, matched)
-        if staged is None:
-            return cur, 0
-        touched, per_file, dv_path, new_entries = staged
+        # the commit frame first: its user expressions resolve before
+        # anything is staged
         rows = matched.drop(*_ID_COLS)
         df, cdf = None, "tagged" if changefeed else None
         if output is not None:
             df = output(rows, F.lit(True))
         elif changefeed:
             cdf = rows.withColumn("_change_type", F.lit("delete"))
-        try:
-            v = _commit(
-                spark,
-                root,
-                df,
-                op,
-                seg["stats_cols"],
-                removes=_rm(touched),
-                removed_rows=_nrows(touched),
-                removed_dv=_dv_debit(touched),
-                prev=seg,
-                cdf=cdf,
-                add_entries=new_entries,
-                conflict=conflict,
-                pre_checked=True,
-            )
-        except RuntimeError:
-            _drop_dv_dir(spark, dv_path)
-            raise
+        staged = _stage_dv(spark, root, cur, refs, matched)
+        if staged is None:
+            return cur, 0
+        touched, per_file, dv_path, new_entries = staged
+        v = _commit(
+            spark,
+            root,
+            df,
+            op,
+            seg["stats_cols"],
+            removed=touched,
+            prev=seg,
+            cdf=cdf,
+            add_entries=new_entries,
+            conflict=conflict,
+            staged=(dv_path,),
+        )
     finally:
         matched.unpersist()
     return v, sum(per_file.values())
@@ -3128,9 +2993,7 @@ def commit_update_where(
     :func:`commit_delete_where` for the DV contract."""
     if mode not in ("rewrite", "dv"):
         raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     res = _resolve(spark, root, cur)
     seg = res["seg"]
     schema = _manifest_schema(seg)
@@ -3214,13 +3077,10 @@ def commit_update_where(
         ),
         "update",
         seg["stats_cols"],
-        removes=_rm(touched),
-        removed_rows=_nrows(touched),
-        removed_dv=_dv_debit(touched),
+        removed=touched,
         prev=seg,
         cdf="tagged" if changefeed else None,
         conflict=_predicate_conflict(seg, predicate),
-        pre_checked=True,
     )
     return v, len(touched), seg["total_files"] - len(touched)
 
@@ -3631,42 +3491,13 @@ def commit_merge(
                 j = j.persist()
                 cached.append(j)
 
-        # dv mode: only rows a clause CHANGED leave their files — stage
-        # their identities as a deletion vector, append update
-        # post-images (and inserts) as new files, and re-commit only
-        # the files holding >=1 changed row (DV attached); everything
-        # else is untouched
-        dv_path = None
-        new_entries = None
-        if mode == "dv" and j is not None:
-            staged = _stage_dv(
-                spark, root, cur, touched,
-                j.where("__del OR __upd").select(*_ID_COLS),
-            )
-            if staged is None:
-                touched = []
-                j = None
-            else:
-                touched, _per_file, dv_path, new_entries = staged
-
         # every output row — data rows AND change rows — from one pass
         # over each input frame, CHECK-gated on the data rows a clause
         # changed or inserted (see _commit_frame)
         post = [_q(n) for n in names]
-        parts = []
-        if j is not None:
-            pre = [_q(f"__pre_{n}") for n in names]
-            legs = [("__upd" if mode == "dv" else "NOT __del", None, post,
-                     "__upd")]
-            if changefeed:
-                legs += [
-                    ("__upd", "update_preimage", pre, "false"),
-                    ("__upd", "update_postimage", post, "false"),
-                    ("__del", "delete", pre, "false"),
-                ]
-            parts.append((j, legs))
-
-        # ---- inserts (not matched by target)
+        # ---- inserts (not matched by target), built before any DV
+        # staging: the clauses' values resolve before anything is written
+        ins_part = None
         if not_matched:
             ins = source if tkeys is None else source.join(
                 _bc(tkeys, n_tkeys, nk), key_cols, "left_anti"
@@ -3696,7 +3527,41 @@ def commit_merge(
             legs = [("true", None, post, "true")]
             if changefeed:
                 legs.append(("true", "insert", post, "false"))
-            parts.append((ins.selectExpr(*cols), legs))
+            ins_part = (ins.selectExpr(*cols), legs)
+
+        # dv mode: only rows a clause CHANGED leave their files — stage
+        # their identities as a deletion vector, append update
+        # post-images (and inserts) as new files, and re-commit only
+        # the files holding >=1 changed row (DV attached); everything
+        # else is untouched
+        dv_staged: tuple[str, ...] = ()
+        new_entries = None
+        if mode == "dv" and j is not None:
+            staged = _stage_dv(
+                spark, root, cur, touched,
+                j.where("__del OR __upd").select(*_ID_COLS),
+            )
+            if staged is None:
+                touched = []
+                j = None
+            else:
+                touched, _per_file, dv_path, new_entries = staged
+                dv_staged = (dv_path,)
+
+        parts = []
+        if j is not None:
+            pre = [_q(f"__pre_{n}") for n in names]
+            legs = [("__upd" if mode == "dv" else "NOT __del", None, post,
+                     "__upd")]
+            if changefeed:
+                legs += [
+                    ("__upd", "update_preimage", pre, "false"),
+                    ("__upd", "update_postimage", post, "false"),
+                    ("__del", "delete", pre, "false"),
+                ]
+            parts.append((j, legs))
+        if ins_part is not None:
+            parts.append(ins_part)
 
         if not parts:
             return cur, 0, len(refs)
@@ -3718,26 +3583,19 @@ def commit_merge(
             if not nmbs
             else None
         )
-        try:
-            v = _commit(
-                spark,
-                root,
-                merged,
-                "merge",
-                seg["stats_cols"],
-                removes=_rm(touched),
-                removed_rows=_nrows(touched),
-                removed_dv=_dv_debit(touched),
-                prev=seg,
-                cdf="tagged" if changefeed else None,
-                add_entries=new_entries,
-                conflict=conflict_info,
-                pre_checked=True,
-            )
-        except RuntimeError:
-            if dv_path is not None:
-                _drop_dv_dir(spark, dv_path)
-            raise
+        v = _commit(
+            spark,
+            root,
+            merged,
+            "merge",
+            seg["stats_cols"],
+            removed=touched,
+            prev=seg,
+            cdf="tagged" if changefeed else None,
+            add_entries=new_entries,
+            conflict=conflict_info,
+            staged=dv_staged,
+        )
     finally:
         for c in cached:
             c.unpersist()
@@ -3874,9 +3732,7 @@ def restore_version(
     ``delete``) so CDF consumers see the rollback; requires the target
     and current schemas to match (a restore across schema evolution
     has no well-defined row diff — raise, never guess)."""
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     if as_of_ts is not None:
         if version is not None:
             raise ValueError("pass version OR as_of_ts, not both")
@@ -3925,8 +3781,10 @@ def restore_version(
     else:
         # driver-regime resolve already holds full entries
         adds = [target_entries[k] for k in add_keys]
-    removed_keys = sorted(k for k in cur_entries if k not in target_entries)
-    removes = [(k[0], k[1]) for k in removed_keys]
+    removed = [
+        cur_entries[k]
+        for k in sorted(k for k in cur_entries if k not in target_entries)
+    ]
     # the restored snapshot must satisfy the constraints ACTIVE after
     # the restore (they carry forward from the current segment): a
     # pre-constraint snapshot can hold rows the ADD never saw, and
@@ -4036,9 +3894,7 @@ def restore_version(
         None,
         "restore",
         target_seg["stats_cols"],
-        removes=[list(k) for k in removes],
-        removed_rows=sum(cur_entries[k]["rows"] for k in removed_keys),
-        removed_dv=_dv_debit([cur_entries[k] for k in removed_keys]),
+        removed=removed,
         extra={
             "restored_version": version,
             # the column mapping rolls back WITH the schema — a
@@ -4055,7 +3911,7 @@ def restore_version(
         add_entries=adds,
         schema_json_override=target_seg.get("schema"),
     )
-    return v, len(adds), len(removes)
+    return v, len(adds), len(removed)
 
 
 def apply_changes(
@@ -4174,9 +4030,7 @@ def optimize(
     Returns (new_version, files_before, files_after)."""
     import math as _math
 
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     res = _resolve(spark, root, cur)
     seg = res["seg"]
     incremental = small_file_mb is not None and not zorder_cols
@@ -4262,12 +4116,7 @@ def optimize(
         "optimize",
         stats_cols,
         remove_all=not incremental,
-        removes=_rm([e for e, _ in rewrite]) if incremental else None,
-        removed_rows=sum(e["rows"] for e, _ in rewrite)
-        if incremental
-        else 0,
-        removed_dv=_dv_debit([e for e, _ in rewrite]) if incremental
-        else (0, 0),
+        removed=[e for e, _ in rewrite] if incremental else None,
         prev=seg,
         # an INCREMENTAL compaction losing the CAS race to a writer
         # that didn't touch its files (ingest appends, disjoint
@@ -4342,9 +4191,7 @@ def vacuum(
     silent data loss. Default 4 h; pass ``0`` only when every writer
     is provably quiesced (tests, single-process maintenance)."""
     _require_plain_root(root, "vacuum")
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     cutoff = max(0, cur - keep_last + 1)
     if keep_since is not None:
         if isinstance(keep_since, _dt.datetime):
@@ -4563,9 +4410,7 @@ def table_changes(
     its pre/post split is unrecoverable after the fact — and for
     vacuumed versions (their log segments are gone)."""
     _require_plain_root(root, "table_changes")
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     end = cur if ending_version is None else ending_version
     if end > cur:
         raise ValueError(f"ending_version {end} > current version {cur}")
@@ -4690,9 +4535,7 @@ def stream_table_changes(
     (log-driven, phantom-free) where exactness matters more than
     latency."""
     _require_plain_root(root, "stream_table_changes")
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     from pyspark.sql.types import LongType, StringType
 
     cur_seg = _read_manifest(spark, root, cur)
@@ -4763,9 +4606,7 @@ def set_check_constraint(
     write pass — a violating row aborts the write before any manifest
     publishes (see :func:`_enforce_constraints`). Returns the new
     version."""
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     res = _resolve(spark, root, cur)
     seg = res["seg"]
     cons = dict(seg.get("constraints", {}))
@@ -4798,9 +4639,7 @@ def drop_check_constraint(
 ) -> int:
     """DROP a CHECK constraint by name (no-op error if absent — a
     typo'd drop must not silently succeed). Returns the new version."""
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     seg = _read_manifest(spark, root, cur)
     cons = dict(seg.get("constraints", {}))
     if name not in cons:
@@ -4838,9 +4677,7 @@ def rename_column(spark: SparkSession, root: str, old: str, new: str) -> int:
     through its own mapping, serving the names it was committed under.
     Columns referenced by CHECK constraints must drop those first
     (Delta's rule). Returns the new version."""
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     seg = _read_manifest(spark, root, cur)
     schema = _manifest_schema(seg)
     if schema is None:
@@ -4885,9 +4722,7 @@ def drop_column(spark: SparkSession, root: str, name: str) -> int:
     name gets a fresh physical and can never resurrect the old values
     out of carried files. Time travel to pre-drop snapshots still
     serves the column. Returns the new version."""
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     seg = _read_manifest(spark, root, cur)
     schema = _manifest_schema(seg)
     if schema is None:
@@ -4930,9 +4765,7 @@ def add_column(
     physical name so it can never resurrect tombstoned values out of
     carried files. ``dtype`` is a Spark DDL type string ("bigint",
     "array<double>", ...). Returns the new version."""
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     seg = _read_manifest(spark, root, cur)
     schema = _manifest_schema(seg)
     if schema is None:
@@ -5052,9 +4885,7 @@ def widen_column_type(
     CURRENT version, no commit — callers chaining ``history()`` by
     returned version should compare against ``current_version`` first)
     when the column already has exactly the requested type."""
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     seg = _read_manifest(spark, root, cur)
     schema = _manifest_schema(seg)
     if schema is None:
@@ -5147,9 +4978,7 @@ def set_bloom_index(
     detach the index. ``fpp`` is the per-file false-positive rate —
     sizing is per file from its row count (~6.2 bits/row at 0.05).
     Returns the new version."""
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     seg = _read_manifest(spark, root, cur)
     schema = _manifest_schema(seg)
     if schema is None:
@@ -5189,9 +5018,7 @@ def drop_bloom_index(spark: SparkSession, root: str) -> int:
     pruning. Existing sidecar dirs become inert and are reclaimed by
     :func:`vacuum` together with their data dirs. Returns the new
     version."""
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     seg = _read_manifest(spark, root, cur)
     if not seg.get("bloom"):
         return cur  # no-op: no index configured (no commit is written)
@@ -5415,22 +5242,15 @@ def convert_to_versioned(
     else:
         _adopt_files([f"{scheme}{p}" for p in files], commit_dir)
         entries = _file_entries(commit_dir, stats_cols or [])
-    try:
-        # version PINNED to 0 (the emptiness check above): an
-        # interposed table creation COLLIDES on the CAS instead of
-        # this convert silently landing on top of it as v1
-        v = _commit(
-            spark, root, None, "convert", stats_cols or [],
-            add_entries=entries, schema_json_override=schema_json,
-            prev={"version": -1, "total_files": 0, "total_rows": 0},
-            cdf="none",
-        )
-    except Exception:
-        # the adopted staging dir is this convert's own (links/copies
-        # of still-intact source files) — reclaim it on any failure
-        fs, _ = _hadoop_fs(spark, root)
-        fs.delete(_jpath(spark, commit_dir), True)
-        raise
+    # version PINNED to 0 (the emptiness check above): an interposed
+    # table creation COLLIDES on the CAS instead of this convert
+    # silently landing on top of it as v1. The adopted dir is this
+    # convert's own (links/copies of still-intact source files)
+    v = _commit(
+        spark, root, None, "convert", stats_cols or [],
+        add_entries=entries, schema_json_override=schema_json,
+        prev={"version": -1}, cdf="none", staged=(commit_dir,),
+    )
     return v, len(entries), _nrows(entries)
 
 
@@ -5477,9 +5297,7 @@ def clone_table(
         if version is not None:
             raise ValueError("pass version OR as_of_ts, not both")
         version = version_as_of(spark, src_root, as_of_ts)
-    cur = current_version(spark, src_root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {src_root}")
+    cur = _head(spark, src_root)
     v_src = cur if version is None else version
     res = _resolve(spark, src_root, v_src)
     seg = res["seg"]
@@ -5491,8 +5309,7 @@ def clone_table(
     # recorded rows. Renaming adopted files would silently break that
     # match and resurrect deleted rows.
     new_entries: list[dict] = []
-    staged_dirs: list[str] = []
-    staged_dv: list[str] = []
+    staged: list[str] = []  # the dirs this clone writes under dst
     if shallow:
         # surface the shared-fate caveat AT CREATION — the source has
         # no registry of its clones, so this is the one moment both
@@ -5548,7 +5365,7 @@ def clone_table(
             d_local = (
                 os.path.basename(d.rstrip("/")) if _is_abs_dir(d) else d
             )
-            staged_dirs.append(d_local)
+            staged.append(f"{dst_root}/{DATA_DIR}/{d_local}")
             # hive-adopted entries nest under partition subdirs:
             # mirror the subpath, or entry paths would dangle
             by_sub: dict[str, list[dict]] = {}
@@ -5557,11 +5374,9 @@ def clone_table(
                     os.path.dirname(e["path"]), []
                 ).append(e)
             for sub, ses in sorted(by_sub.items()):
-                dst = f"{dst_root}/{DATA_DIR}/{d_local}" + (
-                    f"/{sub}" if sub else ""
-                )
                 _adopt_files(
-                    [f"{src_base}/{e['path']}" for e in ses], dst
+                    [f"{src_base}/{e['path']}" for e in ses],
+                    staged[-1] + (f"/{sub}" if sub else ""),
                 )
         for dv_dir in sorted(dv_dirs):
             src_uri = _dv_uri(src_root, dv_dir)
@@ -5575,17 +5390,14 @@ def clone_table(
                 if _is_abs_dir(dv_dir)
                 else dv_dir
             )
-            staged_dv.append(dv_local)
+            staged.append(f"{dst_root}/{DV_DIR}/{dv_local}")
             sfs, srel = _arrow_fs(src_uri)
             dv_files = [
                 info.path
                 for info in sfs.get_file_info(pafs.FileSelector(srel))
                 if info.path.endswith(".parquet")
             ]
-            _adopt_files(
-                [f"{sch}{p}" for p in dv_files],
-                f"{dst_root}/{DV_DIR}/{dv_local}",
-            )
+            _adopt_files([f"{sch}{p}" for p in dv_files], staged[-1])
     extra: dict = {
         "cloned_from": {
             "root": src_root, "version": v_src, "shallow": shallow
@@ -5603,27 +5415,16 @@ def clone_table(
         # files read as unindexed (kept conservatively) until an
         # optimize rewrite re-indexes them
         extra["bloom"] = dict(seg["bloom"])
-    try:
-        # version PINNED to 0 (the fresh-root check above): an
-        # interposed creation at dst COLLIDES instead of this clone
-        # silently landing on top of it
-        v = _commit(
-            spark, dst_root, None, "clone", seg.get("stats_cols", []),
-            add_entries=new_entries, extra=extra,
-            schema_json_override=seg.get("schema"),
-            prev={"version": -1, "total_files": 0, "total_rows": 0},
-            cdf="none",
-        )
-    except Exception:
-        # dst is fresh and nothing references the mirrored dirs:
-        # reclaim them (links only — source content is untouched;
-        # a shallow clone staged nothing)
-        fs, _ = _hadoop_fs(spark, dst_root)
-        for d in staged_dirs:
-            fs.delete(_jpath(spark, f"{dst_root}/{DATA_DIR}/{d}"), True)
-        for dv_dir in staged_dv:
-            fs.delete(_jpath(spark, f"{dst_root}/{DV_DIR}/{dv_dir}"), True)
-        raise
+    # version PINNED to 0 (the fresh-root check above): an interposed
+    # creation at dst COLLIDES instead of this clone silently landing
+    # on top of it. The mirrored dirs are links only — source content
+    # is untouched; a shallow clone staged nothing
+    v = _commit(
+        spark, dst_root, None, "clone", seg.get("stats_cols", []),
+        add_entries=new_entries, extra=extra,
+        schema_json_override=seg.get("schema"),
+        prev={"version": -1}, cdf="none", staged=tuple(staged),
+    )
     return v, len(new_entries), _nrows(new_entries)
 
 
@@ -5642,9 +5443,7 @@ def describe_detail(
     above CHECKPOINT_EVERY means checkpoint writes are failing (see
     :func:`_maybe_checkpoint`) and reads fold a growing segment
     suffix."""
-    cur = current_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"no versioned table at {root}")
+    cur = _head(spark, root)
     v = cur if version is None else version
     res = _resolve(spark, root, v)
     seg = res["seg"]

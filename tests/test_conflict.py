@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from amadeus_spark.operators import versioned as V
@@ -714,3 +715,95 @@ def test_delete_keys_race_overlapping_append_recomputes(
     # both the base and the winner's k=3 rows are gone
     assert got.where("k IN (3, 7)").count() == 0
     assert got.count() == 98 + 2 - 1  # 100-2 deleted + winner's k=4
+
+
+# --------------------------------------------- cleanup and rebase segment
+
+
+def _listing(root, sub):
+    d = os.path.join(root, sub)
+    return sorted(os.listdir(d)) if os.path.exists(d) else []
+
+
+def test_failed_dv_update_and_merge_stage_no_dv(spark, root):
+    """A DV UPDATE or MERGE whose user expression cannot resolve fails
+    before it stages a deletion vector: the version stays and
+    ``_deletion_vectors/`` stays empty."""
+    V.commit_append(
+        spark, root,
+        spark.range(0, 40, 1, 2).selectExpr("id AS k", "id AS val"), ["k"],
+    )
+    with pytest.raises(AnalysisException, match="no_such_col"):
+        V.commit_update_where(
+            spark, root, "k < 5", {"val": "no_such_col + 1"}, mode="dv"
+        )
+    with pytest.raises(AnalysisException, match="no_such_col"):
+        V.commit_merge(
+            spark, root,
+            spark.range(30, 50).selectExpr("id AS k", "id AS val"), "k",
+            matched=[{"action": "update", "set": {"val": "s.val"}}],
+            not_matched=[{"action": "insert",
+                          "values": {"k": "k", "val": "no_such_col"}}],
+            mode="dv",
+        )
+    assert V.current_version(spark, root) == 0
+    assert _listing(root, V.DV_DIR) == []
+
+
+def test_lost_dv_delete_reclaims_every_staged_dir(spark, root, monkeypatch):
+    """A DV delete with a changefeed and an unclassifiable predicate
+    loses a strict race: its DV and changefeed dirs are reclaimed (it
+    writes no data dir), only the winner's files remain."""
+    _two_file_table(spark, root)
+    data_before = _data_dirs(root)
+    _arm_race(
+        monkeypatch,
+        lambda: V.commit_append(
+            spark, root, _df(spark, 5000, 5005, "win").coalesce(1)
+        ),
+    )
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        V.commit_delete_where(
+            spark, root, "k < 100 AND k > 10", changefeed=True, mode="dv"
+        )
+    assert V.current_version(spark, root) == 2  # the winner
+    assert _listing(root, V.DV_DIR) == []
+    assert _listing(root, V.CDF_DIR) == []
+    new_dirs = sorted(set(_data_dirs(root)) - set(data_before))
+    assert [d[:len("commit-v2-")] for d in new_dirs] == ["commit-v2-"]
+    assert V.read_version(spark, root).count() == 205
+
+
+def test_append_rebase_segment_derives_from_winner(spark, root, monkeypatch):
+    """An append re-based over a winning DV delete publishes a segment
+    derived from the winner's: the deletion-vectors feature and the txn
+    map the winner carries, and totals = the winner's + its own."""
+    _two_file_table(spark, root)
+    V.apply_changes(
+        spark, root,
+        spark.createDataFrame(
+            [(5, "cdc", 1, "U")], "k bigint, v string, ts bigint, op string"
+        ),
+        "k", "ts", extra_meta={"txn": {"app": 7}},
+    )
+    _arm_race(
+        monkeypatch,
+        lambda: V.commit_delete_where(spark, root, "k < 10", mode="dv"),
+    )
+    v = V.commit_append(spark, root, _df(spark, 200, 210, "lose").coalesce(1))
+    assert v == 4
+    win = V._read_manifest(spark, root, 3)
+    seg = V._read_manifest(spark, root, 4)
+    assert win["op"] == "delete" and "features" not in V._read_manifest(
+        spark, root, 2
+    )
+    assert (seg["rebased_from"], seg["rebases"]) == (3, 1)
+    assert "deletion-vectors" in seg["features"]
+    assert seg["txn"] == win["txn"] == {"app": 7}
+    assert seg["total_files"] == win["total_files"] + len(seg["add"])
+    assert seg["total_rows"] == win["total_rows"] + 10
+    assert win["total_dv_files"] >= 1 and win["total_dv_rows"] == 10
+    assert (seg["total_dv_files"], seg["total_dv_rows"]) == (
+        win["total_dv_files"], win["total_dv_rows"]
+    )
+    assert V.read_version(spark, root).count() == seg["total_rows"] == 200

@@ -178,6 +178,57 @@ def test_convert_race_collides_and_cleans_up(spark, root, tmp_path,
     assert len(dirs) == 1  # only the winner's staging dir
 
 
+def test_convert_ambiguous_publish_error_keeps_adopted_dir(
+    spark, root, tmp_path, monkeypatch
+):
+    """A publish error that is not a CAS loss may have landed the
+    manifest: the adopted dir stays (deleting it could leave a
+    published v0 pointing at nothing)."""
+    src = str(tmp_path / "lake")
+    _df(spark, 0, 5, "a").coalesce(1).write.parquet(src)
+
+    def broken(sp, rt, version, manifest):
+        raise OSError("connection reset while publishing")
+
+    monkeypatch.setattr(V, "_write_manifest_atomic", broken)
+    with pytest.raises(OSError, match="connection reset"):
+        V.convert_to_versioned(spark, root, src, ["k"])
+    (adopted,) = os.listdir(os.path.join(root, V.DATA_DIR))
+    assert any(
+        f.endswith(".parquet")
+        for f in os.listdir(os.path.join(root, V.DATA_DIR, adopted))
+    )
+
+
+def test_deep_clone_race_reclaims_mirrored_dirs(spark, root, tmp_path,
+                                                 monkeypatch):
+    """A deep clone losing the CAS on its destination leaves none of
+    its mirrored data or DV dirs there; the winner's table is intact."""
+    V.commit_append(spark, root, _df(spark, 0, 50, "a").coalesce(1), ["k"])
+    V.commit_delete_where(spark, root, "k < 5", mode="dv")
+    dst = str(tmp_path / "branch")
+    orig = V._write_manifest_atomic
+    state = {"armed": True}
+
+    def racy(sp, rt, version, manifest):
+        if state["armed"] and rt == dst:
+            state["armed"] = False
+            V.commit_append(spark, dst, _df(spark, 90, 95, "win"), ["k"])
+        return orig(sp, rt, version, manifest)
+
+    monkeypatch.setattr(V, "_write_manifest_atomic", racy)
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        V.clone_table(spark, root, dst)
+    assert not state["armed"]
+    src_dirs = {e["dir"] for e in V._live_entries(spark, root, 1)}
+    assert src_dirs and not src_dirs & set(
+        os.listdir(os.path.join(dst, V.DATA_DIR))
+    )
+    dv = os.path.join(dst, V.DV_DIR)
+    assert not os.path.exists(dv) or os.listdir(dv) == []
+    assert V.read_version(spark, dst).count() == 5
+
+
 def test_changefeed_spans_convert_and_clone(spark, root, tmp_path):
     """CDF parity with Delta: neither CONVERT nor CLONE serves change
     rows — a feed spanning version 0 skips them instead of raising."""

@@ -134,7 +134,7 @@ def test_rewrite_write_reads_only_the_source_cache(
 #: (their number depends on Python GC timing)
 BUILD_BUDGET = {
     "rewrite_cdf": 332,
-    "dv_cdf": 421,
+    "dv_cdf": 402,
 }
 
 

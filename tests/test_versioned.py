@@ -2635,11 +2635,10 @@ def test_check_enforcement_only_on_changed_legs(spark, root, monkeypatch):
     r13 verdict nit): pass-through rows passed the CHECK chain at
     their original write, so upsert/update/merge/cdc enforce the
     updated/inserted rows (update and merge gate their one output frame
-    on __chk)
-    and DELETE enforces nothing; _commit's full-frame pass is
-    skipped (pre_checked). Pinned by counting _enforce_constraints
-    invocations per op — one extra call means the full merged frame
-    went back through the chain."""
+    on __chk) and DELETE enforces nothing; _commit runs no CHECK of its
+    own (a plain append enforces its whole frame itself). Pinned by
+    counting _enforce_constraints invocations per op — one extra call
+    means the full merged frame went back through the chain."""
     calls = []
     orig = V._enforce_constraints
 
