@@ -2398,6 +2398,20 @@ def read_version(
     return out
 
 
+def _pruned_conflict(seg: dict, key_col: str, read: list, lo, hi) -> dict:
+    """The ``pruned`` conflict footprint of a key-pruned commit (see
+    :func:`_rebase_ok`): it read the ``(dir, path)`` files ``read``,
+    and its result depends only on rows whose logical ``key_col``
+    falls in [lo, hi]. The footprint names the PHYSICAL stats key."""
+    return {
+        "kind": "pruned",
+        "read": read,
+        "key_col": _phys_name(seg, key_col),
+        "lo": lo,
+        "hi": hi,
+    }
+
+
 def _keyed_table(spark: SparkSession, root: str, prune_col: str) -> dict:
     """The resolved current snapshot for a keyed write (upsert, CDC
     apply, MERGE), whose file pruning runs on ``prune_col`` — which
@@ -2534,13 +2548,7 @@ def _keyed_rewrite(
         # key-pruned footprint: a CAS loss re-bases when every
         # winner is provably outside [lo, hi] and removed none of
         # the touched files (see _rebase_ok)
-        conflict={
-            "kind": "pruned",
-            "read": _rm(touched),
-            "key_col": _phys_name(seg, key_cols[0]),
-            "lo": lo,
-            "hi": hi,
-        },
+        conflict=_pruned_conflict(seg, key_cols[0], _rm(touched), lo, hi),
     )
     return v, len(touched), seg["total_files"] - len(touched)
 
@@ -2584,34 +2592,10 @@ def commit_upsert(
     )
 
 
-def _touched_by_predicate(
-    spark: SparkSession, root: str, seg: dict, refs: list[dict], predicate
-) -> list[dict]:
-    """The live files holding ≥1 LIVE row where ``predicate`` IS TRUE —
-    Delta's DELETE/UPDATE file-finding scan. One predicate-pushed scan
-    over the snapshot (only the predicate's columns are read; parquet
-    row-group stats skip inside files; deletion vectors applied, so a
-    file whose only matches are already DV-deleted is NOT touched)
-    collecting DISTINCT matched file identities, O(matched files) on
-    the driver. Files are matched back to their entries by
-    (commit-dir, filename) — commit dirs are uuid-unique, filenames
-    unique within a dir."""
-    if not refs:
-        return []
-    live = _snapshot_read(spark, root, seg, refs, keep_identity=True)
-    matched = (
-        live.where(predicate)
-        .select(*_ID_COLS[:2])
-        .distinct()
-        .collect()
-    )
-    return _found_entries(refs, [tuple(r) for r in matched])
-
-
 def _found_entries(refs: list[dict], keys) -> list[dict]:
     """The entries of ``refs`` behind scan-derived ``(dir, path)``
     identities (a file-finding scan's result), sorted."""
-    by_key = _ident_map(refs, "predicate file-finding")
+    by_key = _ident_map(refs, "matched-file lookup")
     out = []
     for key in keys:
         if key not in by_key:
@@ -2622,6 +2606,12 @@ def _found_entries(refs: list[dict], keys) -> list[dict]:
         out.append(by_key[key])
     out.sort(key=lambda e: (e["dir"], e["path"]))
     return out
+
+
+def _check_mode(mode: str) -> None:
+    """The DML write modes: copy-on-write or deletion vectors."""
+    if mode not in ("rewrite", "dv"):
+        raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
 
 
 def commit_delete_where(
@@ -2665,84 +2655,140 @@ def commit_delete_where(
     the predicate is arbitrary — but the finding scan reads only the
     predicate's columns and pushes row-group skipping, so the cost is
     a metadata-light pass, not a rewrite."""
-    if mode not in ("rewrite", "dv"):
-        raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
+    _check_mode(mode)
     cur = _head(spark, root)
     res = _resolve(spark, root, cur)
     seg = res["seg"]
     if changefeed:
         _check_cdf_cols(seg)
-    pred = F.expr(predicate)
     # only the DV leg re-ADDS entries (stats must carry); the rewrite
     # leg reads/removes them — identity/rows/dv suffice (slim skips
     # deserializing the per-file stats maps through a checkpoint index)
     refs = _pruned_entries(spark, root, res, slim=(mode != "dv"))
-    conflict = _predicate_conflict(seg, predicate)
-    if mode == "dv":
-        v, n = _dv_commit(
-            spark, root, cur, seg, refs, pred, "delete", changefeed, conflict
-        )
-        return v, 0, seg["total_files"], n
-    return _delete_where_rewrite(
-        spark, root, cur, seg, refs, pred, changefeed, conflict
+    v, rewritten, n = _predicate_commit(
+        spark, root, seg, refs, F.expr(predicate), "delete", changefeed,
+        _predicate_conflict(seg, predicate), mode, _delete_legs(changefeed),
     )
+    return v, rewritten, seg["total_files"] - rewritten, n
 
 
-def _delete_where_rewrite(
+def _delete_legs(changefeed: bool):
+    """The ``legs`` builder of a predicate DELETE (see
+    :func:`_predicate_commit`): the match staged ONCE as column p; the
+    kept rows are the data leg, the deleted rows the delete leg (see
+    :func:`_emit_legs`). A DELETE writes only pass-through survivors —
+    rows that passed CHECK at their original write; nothing to
+    enforce."""
+
+    def legs(frame: DataFrame, hit) -> DataFrame:
+        p = _stage_names(frame.columns, "p")[0]
+        cols = [_q(c) for c in frame.columns]
+        out = [(f"NOT {p}", None, cols)]
+        if changefeed:
+            out.append((p, "delete", cols))
+        return _emit_legs(frame.select("*", hit.alias(p)), frame.columns, out)
+
+    return legs
+
+
+def _predicate_commit(
     spark: SparkSession,
     root: str,
-    cur: int,
     seg: dict,
     refs: list[dict],
     pred,
+    op: str,
     changefeed: bool,
-    conflict: dict | None = None,
-) -> tuple[int, int, int, int]:
-    """The copy-on-write DELETE leg over a candidate set: find the
-    files holding ≥1 matching row, rewrite only them keeping their
-    non-matching rows, carry everything else by reference (shared by
-    :func:`commit_delete_where` — full candidate set — and
-    :func:`commit_delete_keys` — index-pruned candidates)."""
-    touched = _touched_by_predicate(spark, root, seg, refs, pred)
-    if not touched:
-        # carried = the WHOLE snapshot (refs may be a pruned subset)
-        return cur, 0, seg["total_files"], 0
-    n_kept = seg["total_files"] - len(touched)
-    # the predicate staged ONCE as column p; the kept rows are the data
-    # leg, the deleted rows the delete leg (see _emit_legs)
-    read = _snapshot_read(spark, root, seg, touched)
-    p = _stage_names(read.columns, "p")[0]
-    cols = [_q(c) for c in read.columns]
-    legs = [(f"NOT {p}", None, cols)]
-    if changefeed:
-        legs.append((p, "delete", cols))
-    v = _commit(
-        spark,
-        root,
-        # a DELETE writes only pass-through survivors — rows that
-        # passed CHECK at their original write; nothing to enforce
-        _emit_legs(
-            read.select("*", F.coalesce(pred, F.lit(False)).alias(p)),
-            read.columns, legs,
-        ),
-        "delete",
-        seg["stats_cols"],
-        removed=touched,
-        prev=seg,
-        cdf="tagged" if changefeed else None,
-        # simple predicates classify: a racing APPEND whose stats
-        # refute the predicate re-bases this delete instead of
-        # recomputing it (see _rebase_ok kind="predicate");
-        # keyed deletes classify as kind="pruned" on their range
-        conflict=conflict,
+    conflict: dict | None,
+    mode: str,
+    legs,
+) -> tuple[int, int, int]:
+    """The one commit path of predicate DML — :func:`commit_delete_where`,
+    :func:`commit_delete_keys` and :func:`commit_update_where` — over
+    the candidate entries ``refs`` of the resolved snapshot ``seg``. A
+    row matches iff ``pred`` IS TRUE; ``legs(frame, hit)`` builds the
+    commit frame from table rows and the Column TRUE on matched ones.
+
+    - ``mode="rewrite"``: Delta's file-finding scan, then ONE commit of
+      ``legs`` over the touched files' live rows, which replace them;
+      every other file carries by reference.
+    - ``mode="dv"``: the matched live rows' identities land in a fresh
+      deletion vector (:func:`_stage_dv`) and the touched entries
+      re-commit by reference — the commit moves O(matched rows). An
+      UPDATE commits ``legs`` over the matched rows (post-images
+      append as a new file); a DELETE commits its change rows only
+      (df=None: no data dir).
+
+    ``conflict`` is the commit's footprint (see :func:`_rebase_ok`).
+    Returns ``(new_version, files_rewritten, rows_deleted)``
+    (``files_rewritten`` is 0 in dv mode, ``rows_deleted`` 0 for an
+    UPDATE); ``(current version, 0, 0)`` with no commit when nothing
+    matched."""
+    cur = seg["version"]
+    if not refs:
+        return cur, 0, 0
+    # deletion vectors applied: rows already DV-deleted never match
+    live = _snapshot_read(spark, root, seg, refs, keep_identity=True)
+    hit = F.coalesce(pred, F.lit(False))
+    matched = None
+    try:
+        if mode == "rewrite":
+            # the file-finding scan reads only the predicate's columns
+            # (row groups skipped by stats) and collects the DISTINCT
+            # matched file identities — O(matched files) on the driver
+            found = live.where(pred).select(*_ID_COLS[:2]).distinct()
+            touched = _found_entries(refs, map(tuple, found.collect()))
+            if not touched:
+                return cur, 0, 0
+            df = legs(_snapshot_read(spark, root, seg, touched), hit)
+            cdf = "tagged" if changefeed else None
+            new_entries, staged = None, ()
+        else:
+            live = live.where(hit)
+            if op == "delete" and not changefeed:
+                # column-prune the scan to predicate + identity columns
+                live = live.select(*_ID_COLS)
+            matched = live.persist()
+            # the commit frame first: its user expressions resolve
+            # before anything is staged
+            rows = matched.drop(*_ID_COLS)
+            df, cdf = None, "tagged" if changefeed else None
+            if op != "delete":
+                df = legs(rows, F.lit(True))
+            elif changefeed:
+                cdf = rows.withColumn("_change_type", F.lit("delete"))
+            found = _stage_dv(spark, root, cur, refs, matched)
+            if found is None:
+                return cur, 0, 0
+            touched, dv_path, new_entries = found
+            staged = (dv_path,)
+        v = _commit(
+            spark,
+            root,
+            df,
+            op,
+            seg["stats_cols"],
+            removed=touched,
+            prev=seg,
+            cdf=cdf,
+            add_entries=new_entries,
+            conflict=conflict,
+            staged=staged,
+        )
+    finally:
+        if matched is not None:
+            matched.unpersist()
+    rewritten = len(touched) if mode == "rewrite" else 0
+    if op != "delete":
+        # an UPDATE writes every matched row back: nothing deleted
+        return v, rewritten, 0
+    # count from THIS commit's own entries (touched minus kept rows
+    # written back) — rebase-proof, unlike a stale-snapshot totals
+    # diff (a re-based loser's final total also carries the winner's
+    # adds)
+    return v, rewritten, _nrows(touched) - _nrows(
+        _read_manifest(spark, root, v).get("add", [])
     )
-    # count from THIS commit's own entries (touched minus kept-rows
-    # written) — rebase-proof, unlike a stale-snapshot totals diff
-    # (a re-based loser's final total also carries the winner's adds)
-    n_deleted = _nrows(touched) - sum(
-        e["rows"] for e in _read_manifest(spark, root, v).get("add", [])
-    )
-    return v, len(touched), n_kept, n_deleted
 
 
 def commit_delete_keys(
@@ -2774,8 +2820,7 @@ def commit_delete_keys(
     instead of recomputing. Returns ``(new_version, files_rewritten,
     files_carried, rows_deleted)``; keys matching nothing are a no-op
     returning the current version."""
-    if mode not in ("rewrite", "dv"):
-        raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
+    _check_mode(mode)
     if not keys:
         raise ValueError("commit_delete_keys needs at least one key")
     if any(k is None for k in keys):
@@ -2805,25 +2850,16 @@ def commit_delete_keys(
             spark, root, refs, phys, keys,
             schema[key_col].dataType if schema else None,
         )
-    if not refs:
-        return cur, 0, seg["total_files"], 0
-    pred = F.col(key_col).isin(keys)
     conflict = (
-        {
-            "kind": "pruned", "read": [list(r) for r in _rm(refs)],
-            "key_col": phys, "lo": lo, "hi": hi,
-        }
+        _pruned_conflict(seg, key_col, [list(r) for r in _rm(refs)], lo, hi)
         if lo is not None
         else None
     )
-    if mode == "dv":
-        v, n = _dv_commit(
-            spark, root, cur, seg, refs, pred, "delete", changefeed, conflict
-        )
-        return v, 0, seg["total_files"], n
-    return _delete_where_rewrite(
-        spark, root, cur, seg, refs, pred, changefeed, conflict
+    v, rewritten, n = _predicate_commit(
+        spark, root, seg, refs, F.col(key_col).isin(keys), "delete",
+        changefeed, conflict, mode, _delete_legs(changefeed),
     )
+    return v, rewritten, seg["total_files"] - rewritten, n
 
 
 def _stage_dv(
@@ -2832,15 +2868,15 @@ def _stage_dv(
     cur: int,
     refs: list[dict],
     matched: DataFrame,
-) -> tuple[list[dict], dict, str, list[dict]] | None:
-    """Shared deletion-vector staging for the DV DELETE/UPDATE legs:
-    from the persisted ``matched`` frame (identity columns attached),
-    derive the per-file match counts, resolve the touched entries,
-    WRITE the fresh DV parquet (this commit's matches unioned with the
-    touched files' existing DV rows — each entry points at exactly ONE
-    dv dir), and build the re-add entries with rows debited and the DV
-    attached. Returns ``(touched, per_file, dv_path, new_entries)`` or
-    None when nothing matched."""
+) -> tuple[list[dict], str, list[dict]] | None:
+    """Shared deletion-vector staging for the DV DELETE/UPDATE/MERGE
+    legs: from the persisted ``matched`` frame (identity columns
+    attached), derive the per-file match counts, resolve the touched
+    entries, WRITE the fresh DV parquet (this commit's matches unioned
+    with the touched files' existing DV rows — each entry points at
+    exactly ONE dv dir), and build the re-add entries with rows
+    debited and the DV attached. Returns ``(touched, dv_path,
+    new_entries)`` or None when nothing matched."""
     # bounded by design: one row per TOUCHED FILE (never row data),
     # like the other maintenance collects in this module
     d, p, i = _ID_COLS
@@ -2850,17 +2886,7 @@ def _stage_dv(
     }
     if not per_file:
         return None
-    by_key = _ident_map(refs, "deletion-vector staging")
-    missing = [k for k in per_file if k not in by_key]
-    if missing:
-        raise RuntimeError(
-            f"matched file {missing[0]} not in the resolved snapshot "
-            "(concurrent vacuum?)"
-        )
-    touched = sorted(
-        (by_key[k] for k in per_file),
-        key=lambda e: (e["dir"], e["path"]),
-    )
+    touched = _found_entries(refs, per_file)
     dv_all = matched.selectExpr(
         f"{d} AS dir", f"{p} AS path", f"{i} AS row_index"
     )
@@ -2900,67 +2926,7 @@ def _stage_dv(
             "rows": (e.get("dv") or {}).get("rows", 0) + n_new,
         }
         new_entries.append(ne)
-    return touched, per_file, dv_path, new_entries
-
-
-def _dv_commit(
-    spark: SparkSession,
-    root: str,
-    cur: int,
-    seg: dict,
-    refs: list[dict],
-    pred,
-    op: str,
-    changefeed: bool,
-    conflict: dict | None = None,
-    output=None,
-) -> tuple[int, int]:
-    """The merge-on-read DELETE/UPDATE leg (Delta's deletion vectors):
-    one DV-applied scan finds the matched LIVE rows; their identities
-    (plus the touched files' existing DV rows) land in a fresh
-    deletion-vector parquet via :func:`_stage_dv`; the touched entries
-    re-commit by reference — no file rewrites, the commit moves
-    O(matched rows). An UPDATE's ``output`` builds its commit frame
-    from the matched rows (post-images append as a NEW data file); a
-    DELETE commits its change rows only. Returns ``(new_version,
-    rows_matched)``, ``(cur, 0)`` when nothing matched."""
-    if not refs:
-        return cur, 0
-    live = _snapshot_read(spark, root, seg, refs, keep_identity=True)
-    matched = live.where(F.coalesce(pred, F.lit(False)))
-    if output is None and not changefeed:
-        # column-prune the scan to predicate + identity columns
-        matched = matched.select(*_ID_COLS)
-    matched = matched.persist()
-    try:
-        # the commit frame first: its user expressions resolve before
-        # anything is staged
-        rows = matched.drop(*_ID_COLS)
-        df, cdf = None, "tagged" if changefeed else None
-        if output is not None:
-            df = output(rows, F.lit(True))
-        elif changefeed:
-            cdf = rows.withColumn("_change_type", F.lit("delete"))
-        staged = _stage_dv(spark, root, cur, refs, matched)
-        if staged is None:
-            return cur, 0
-        touched, per_file, dv_path, new_entries = staged
-        v = _commit(
-            spark,
-            root,
-            df,
-            op,
-            seg["stats_cols"],
-            removed=touched,
-            prev=seg,
-            cdf=cdf,
-            add_entries=new_entries,
-            conflict=conflict,
-            staged=(dv_path,),
-        )
-    finally:
-        matched.unpersist()
-    return v, sum(per_file.values())
+    return touched, dv_path, new_entries
 
 
 def commit_update_where(
@@ -2991,8 +2957,7 @@ def commit_update_where(
     place and their post-images append as a new file — no touched
     file rewrites, the commit moves O(matched rows); see
     :func:`commit_delete_where` for the DV contract."""
-    if mode not in ("rewrite", "dv"):
-        raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
+    _check_mode(mode)
     cur = _head(spark, root)
     res = _resolve(spark, root, cur)
     seg = res["seg"]
@@ -3018,7 +2983,6 @@ def commit_update_where(
     fields = {f.name: f.dataType for f in schema.fields}
     if changefeed:
         _check_cdf_cols(seg, fields)
-    pred = F.expr(predicate)
     cons = seg.get("constraints") or {}
 
     def output(frame: DataFrame, hit) -> DataFrame:
@@ -3060,29 +3024,11 @@ def commit_update_where(
 
     # slim for the rewrite leg (stats never re-added), full for dv
     refs = _pruned_entries(spark, root, res, slim=(mode != "dv"))
-    if mode == "dv":
-        return _dv_commit(
-            spark, root, cur, seg, refs, pred, "update", changefeed,
-            _predicate_conflict(seg, predicate), output,
-        )[0], 0, seg["total_files"]
-    touched = _touched_by_predicate(spark, root, seg, refs, pred)
-    if not touched:
-        return cur, 0, len(refs)
-    v = _commit(
-        spark,
-        root,
-        output(
-            _snapshot_read(spark, root, seg, touched),
-            F.coalesce(pred, F.lit(False)),
-        ),
-        "update",
-        seg["stats_cols"],
-        removed=touched,
-        prev=seg,
-        cdf="tagged" if changefeed else None,
-        conflict=_predicate_conflict(seg, predicate),
+    v, rewritten, _ = _predicate_commit(
+        spark, root, seg, refs, F.expr(predicate), "update", changefeed,
+        _predicate_conflict(seg, predicate), mode, output,
     )
-    return v, len(touched), seg["total_files"] - len(touched)
+    return v, rewritten, seg["total_files"] - rewritten
 
 
 def _sql_cond(cond: str | None) -> str:
@@ -3322,8 +3268,7 @@ def commit_merge(
     changed row re-commit (with the DV attached); every other file is
     untouched. Semantics are identical to rewrite mode (pinned by
     test); ``files_rewritten`` is 0."""
-    if mode not in ("rewrite", "dv"):
-        raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
+    _check_mode(mode)
     matched = list(matched or [])
     not_matched = list(not_matched or [])
     nmbs = list(not_matched_by_source or [])
@@ -3545,7 +3490,7 @@ def commit_merge(
                 touched = []
                 j = None
             else:
-                touched, _per_file, dv_path, new_entries = staged
+                touched, dv_path, new_entries = staged
                 dv_staged = (dv_path,)
 
         parts = []
@@ -3573,13 +3518,10 @@ def commit_merge(
         # by-source clause reads rows under an ARBITRARY predicate:
         # no stats proof possible, stay strict (recompute on loss).
         conflict_info = (
-            {
-                "kind": "pruned",
-                "read": sorted(set(_rm(key_files)) | set(_rm(touched))),
-                "key_col": _phys_name(seg, prune_col),
-                "lo": lo,
-                "hi": hi,
-            }
+            _pruned_conflict(
+                seg, prune_col,
+                sorted(set(_rm(key_files)) | set(_rm(touched))), lo, hi,
+            )
             if not nmbs
             else None
         )

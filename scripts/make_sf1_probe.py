@@ -1,12 +1,16 @@
-"""Synthesize a 10x scale probe dataset under /tmp/sf1_probe from the
-read-only sf0.1 drop: each table is replicated REP times with its
-primary key (and any foreign keys) shifted by a disjoint stride so
-cardinalities scale ~linearly and join fan-outs stay realistic.
-MEASUREMENT-ONLY (guide §1 / VERDICT r15 item #2): validates that the
-registry's shuffle/join shapes hold when compute dominates the job
-floor. Never on a query path; the oracle never runs against it.
+"""Synthesize a 10x scale probe dataset under ``.sf1_probe/`` at the
+repo root (gitignored) from the read-only sf0.1 drop: each table is
+replicated REP times with its primary key (and any foreign keys)
+shifted by a disjoint stride so cardinalities scale ~linearly and
+join fan-outs stay realistic. MEASUREMENT-ONLY (guide §1 / VERDICT
+r15 item #2): validates that the registry's shuffle/join shapes hold
+when compute dominates the job floor. Never on a query path; the
+oracle never runs against it.
 
-Usage: python scripts/make_sf1_probe.py [REP] (default 10)
+Usage: python scripts/make_sf1_probe.py [REP]   (REP default 10)
+
+Writes ``.sf1_probe/<table>.parquet``; run a probe against it with
+``SPARK_GRAFT_SF_DIR=.sf1_probe``.
 """
 
 from __future__ import annotations
@@ -19,7 +23,8 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
-DST = "/tmp/sf1_probe"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DST = os.path.join(REPO, ".sf1_probe")
 
 # key columns shifted per replica: table -> {col: stride}; strides are
 # the table's own key stride so replica r's keys are disjoint from

@@ -61,6 +61,9 @@ def _local_batch(spark):
 #: the predicate of the delete/update rows: 21 rows of the last two files
 PRED = "k % 7 = 3 AND k >= 250"
 
+#: the point-delete keys: 4 rows of the last two files
+KEYS = [255, 262, 388, 399]
+
 #: one call per shape on a fresh 4-file table
 CALLS = {
     "upsert": lambda s, r, cf: V.commit_upsert(
@@ -81,6 +84,12 @@ CALLS = {
     "delete_dv": lambda s, r, cf: V.commit_delete_where(
         s, r, PRED, changefeed=cf, mode="dv"
     ),
+    "delete_keys_rewrite": lambda s, r, cf: V.commit_delete_keys(
+        s, r, KEYS, "k", changefeed=cf, mode="rewrite"
+    ),
+    "delete_keys_dv": lambda s, r, cf: V.commit_delete_keys(
+        s, r, KEYS, "k", changefeed=cf, mode="dv"
+    ),
     "update_rewrite": lambda s, r, cf: V.commit_update_where(
         s, r, PRED, {"v": "concat(v, '!')"}, changefeed=cf
     ),
@@ -91,9 +100,9 @@ CALLS = {
 
 #: Spark jobs one call launches on a fresh 4-file table. Keyed: the
 #: bounds pass, the commit write (with a changefeed also the key-hit
-#: broadcasts, one tagged write), manifest/stat bookkeeping. Predicate:
-#: the file-finding scan and the write (dv: the DV staging collect and
-#: the DV write too)
+#: broadcasts, one tagged write), manifest/stat bookkeeping. Predicate
+#: (delete_keys: on its key-range candidates): the file-finding scan
+#: and the write (dv: the DV staging collect and the DV write too)
 JOB_BUDGETS = {
     ("upsert", False): 4,
     ("upsert", True): 6,
@@ -107,6 +116,10 @@ JOB_BUDGETS = {
     ("delete_rewrite", True): 3,
     ("delete_dv", False): 4,
     ("delete_dv", True): 5,
+    ("delete_keys_rewrite", False): 3,
+    ("delete_keys_rewrite", True): 3,
+    ("delete_keys_dv", False): 4,
+    ("delete_keys_dv", True): 5,
     ("update_rewrite", False): 3,
     ("update_rewrite", True): 3,
     ("update_dv", False): 5,
